@@ -4,7 +4,7 @@ Single source of truth for the extraction semantics of the PySpark engine in
 ``pii_spark``: tokenization with char offsets, token-budget chunking, BIO
 Viterbi decoding, span algebra (extract/filter/merge/resolve), regex PII
 detectors with checksum validation, HTML main-content extraction, and the
-per-document pipeline. Everything here is NumPy + stdlib only so the exact
+extraction pipeline. Everything here is NumPy + stdlib only so the exact
 same bytes run on the driver and on every executor (shipped via --py-files),
 guaranteeing byte-identical output per url regardless of partitioning.
 

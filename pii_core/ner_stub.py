@@ -69,9 +69,10 @@ _O_LOGIT = np.float32(4.0)
 _ENT_LOGIT = np.float32(8.0)
 
 # Cheap NECESSARY conditions per rule, keyed by rule index: every possible
-# match of that rule's regex contains (case-folded) one of the needles, so
-# a chunk without any needle can skip the full scan outright — a false
-# positive merely runs the regex it would have run anyway. Rules without a
+# match of that rule's regex, folded by ``_needle_text``, contains one of
+# the needles, so a chunk without any needle can skip the full scan
+# outright — a false positive merely runs the regex it would have run
+# anyway (a differential test pins the soundness). Rules without a
 # sound cheap needle (names, plates) always scan.
 #   ENDERECO:       every match starts with a street keyword (IGNORECASE)
 #   DATA_NASC:      'nascid[oa] em' / 'data de nascimento' both contain
@@ -82,6 +83,24 @@ _RULE_NEEDLES: dict[int, tuple[str, ...]] = {
     2: ("nasci",),
     3: ("/",),
 }
+
+# Every non-ASCII character that ``re.IGNORECASE`` matches to an ASCII
+# letter (a scan of all code points finds exactly these; a test pins it).
+# ``str.lower`` keeps U+0131 and U+017F as they are and expands U+0130 to
+# two characters, so without this map 'Traveſſa' or 'Avenİda' would fail
+# the needle test while the rule's regex matches them (a fail-open skip).
+_RE_ASCII_FOLDS = {"\u0130": "i", "\u0131": "i", "\u017f": "s",
+                   "\u212a": "k"}
+
+
+def _needle_text(text: str) -> str:
+    """``text`` case-folded as the IGNORECASE rules fold ASCII letters, for
+    the needle prechecks: C-level replaces and one ``lower`` pass."""
+    if not text.isascii():
+        for ch, letter in _RE_ASCII_FOLDS.items():
+            if ch in text:
+                text = text.replace(ch, letter)
+    return text.lower()
 
 
 def _tok_jitter(text: str, a: int, b: int) -> float:
@@ -103,7 +122,7 @@ def stub_emissions(chunk_text: str, offsets: list[tuple[int, int]]) -> np.ndarra
         needles = _RULE_NEEDLES.get(ri)
         if needles is not None:
             if low is None:
-                low = chunk_text.lower()  # one C pass, shared across rules
+                low = _needle_text(chunk_text)  # shared across rules
             if not any(n in low for n in needles):
                 continue  # no needle -> the regex provably cannot match
         for m in rx.finditer(chunk_text):

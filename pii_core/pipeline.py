@@ -1,4 +1,10 @@
-"""Per-document extraction pipeline (the single source of truth).
+"""Extraction pipeline: one batch core behind every entry point.
+
+``extract_page_batch`` (the Spark UDF's call), ``extract_page`` and
+``extract_document`` all run the same cross-document batch loop; the two
+per-document entry points are one-record calls into it. The per-document
+executable spec this loop is checked against lives in
+``tests/oracles/pipeline.py``.
 
 Chains the full reference inference path (``infer_pii.py:137-313``) plus the
 north-rule stages:
@@ -141,11 +147,12 @@ class ExtractConfig:
         return WordTokenizer(piece_len=self.tokenizer_piece_len)
 
     def make_emitter_and_tokenizer(self):
-        """The per-executor "model load" slot: returns (emitter, tokenizer)
-        constructed once per partition iterator. Real checkpoint when
-        model_path is set (reference model load: infer_pii.py:445-470),
-        else the deterministic stub."""
-        if self.model_path is not None:
+        """The per-executor "model load" slot and the pipeline's only
+        emitter resolution: returns (emitter, tokenizer) constructed once
+        per partition iterator. Real checkpoint when model_path is set and
+        NER runs (reference model load: infer_pii.py:445-470), else the
+        deterministic stub — a detector-only config never loads a model."""
+        if self.use_ner and self.model_path is not None:
             from pii_core.ner_transformer import (  # noqa: PLC0415
                 load_transformer_emitter,
             )
@@ -158,8 +165,6 @@ class ExtractConfig:
 
 
 _PII_SET = frozenset(PII_TYPES)
-
-_SINGLE_CHUNK_FAST = True
 
 # Documents per cross-document batched-Viterbi call (extract_page_batch):
 # the packed DP's NumPy call overhead amortizes up to ~64 sequences, then
@@ -175,38 +180,6 @@ _DECODE_WINDOW_DOCS = 8 * _DECODE_BATCH_DOCS
 # int32 backpointers (~500k rows * 27 labels ≈ 160 MB together) when the
 # window holds many book-length documents.
 _DECODE_CELL_BUDGET = 500_000
-
-
-def _chunk_emissions(pairs, emitter: Emitter, batch_size: int):
-    """Yield (chunk, offsets, (T,C) emissions) in chunk order from
-    (chunk, local_offsets) pairs (``build_chunks_with_offsets``),
-    micro-batching chunks through ``emitter.emit_batch`` when the emitter
-    provides it — the reference's batched forward pass (infer_pii.py:180-201,
-    chunks of one document in groups of --batch_size). Emissions per chunk
-    are identical either way; batching only changes how many chunks share a
-    forward call, so downstream fp32 accumulation order (chunk order) is
-    unchanged."""
-    emit_batch = getattr(emitter, "emit_batch", None)
-    if emit_batch is None:
-        for ch, offs in pairs:
-            if len(offs):
-                yield ch, offs, emitter(ch.text, offs)
-        return
-    step = max(1, int(batch_size))
-    for i in range(0, len(pairs), step):
-        keep = [(ch, offs) for ch, offs in pairs[i:i + step] if len(offs)]
-        if not keep:
-            continue
-        ems = list(emit_batch([ch.text for ch, _ in keep],
-                              [offs for _, offs in keep]))
-        if len(ems) != len(keep):
-            # zip would silently drop trailing chunks — their PII would
-            # never be decoded and the page could pass as public (fail-open)
-            raise RuntimeError(
-                f"emit_batch returned {len(ems)} emissions for "
-                f"{len(keep)} chunks")
-        yield from ((ch, offs, em)
-                    for (ch, offs), em in zip(keep, ems))
 
 
 def _label_ctx(emitter: Emitter):
@@ -254,14 +227,14 @@ def _mean_logit_matrix(items, n_chunks: int, trusted_offsets: bool = False):
     provenance."""
     # Single-chunk fast path (the common case for web pages): no overlap
     # to average, so the chunk emissions ARE the global emissions —
-    # identical result to the dict accumulation below with count=1
-    # (tests flip _SINGLE_CHUNK_FAST to assert the equivalence). A chunk
-    # with REPEATED offsets (an emitter/tokenizer adapter emitting
+    # identical result to the dict accumulation with count=1 (pinned
+    # against the dict-accumulation oracle, tests/oracles/pipeline.py). A
+    # chunk with REPEATED offsets (an emitter/tokenizer adapter emitting
     # duplicate spans) must fall through to the general path, which dedups
     # and averages repeated keys — returning them raw here would make the
     # result depend on whether the document happened to be single-chunk.
     items = list(items)
-    if _SINGLE_CHUNK_FAST and n_chunks == 1:
+    if n_chunks == 1:
         if not items:
             return None
         ch, offs, em = items[0]
@@ -374,8 +347,8 @@ def _decode_chunk_emissions(items, n_chunks: int, cfg: ExtractConfig,
     """One document's NER spans from its (chunk, offsets, emissions) stream.
 
     ``items`` yields in CHUNK ORDER — the fp32 accumulation order — so the
-    result is byte-identical however the emissions were produced (per-chunk
-    calls, per-document micro-batches, or cross-document batches)."""
+    result is byte-identical however the emissions were grouped into
+    forward calls."""
     if cfg.aggregate == "mean_logits":
         kg = _mean_logit_matrix(items, n_chunks, trusted_offsets)
         if kg is None:
@@ -392,73 +365,6 @@ def _decode_chunk_emissions(items, n_chunks: int, cfg: ExtractConfig,
             for s in local
         )
     return out
-
-
-def _ner_spans(
-    text: str, cfg: ExtractConfig, tokenizer: WordTokenizer, emitter: Emitter
-) -> list[Span]:
-    ctx = _label_ctx(emitter)
-    pairs = build_chunks_with_offsets(
-        text,
-        tokenizer,
-        max_length=cfg.max_length,
-        stride=cfg.stride,
-        boundary_backoff=cfg.boundary_backoff,
-        hard_split=cfg.hard_split,
-    )
-    items = _chunk_emissions(pairs, emitter, cfg.batch_size)
-    return _decode_chunk_emissions(
-        items, len(pairs), cfg, ctx,
-        trusted_offsets=bool(getattr(tokenizer, "slice_stable", False)))
-
-
-def _finalize_document(
-    text: str, ner_spans: list[Span], cfg: ExtractConfig
-) -> tuple[list[Span], bool]:
-    """NER spans + detector spans → merged spans + public decision."""
-    spans = list(ner_spans)
-    if cfg.use_detectors:
-        spans.extend(detect_spans(text))
-    merged = merge_and_resolve(spans, resolve_overlaps=cfg.resolve_overlaps)
-    public = not any(s.type in _PII_SET for s in merged)
-    return merged, public
-
-
-def extract_document(
-    text: str,
-    cfg: ExtractConfig | None = None,
-    emitter: Emitter | None = None,
-    tokenizer: WordTokenizer | None = None,
-) -> tuple[list[Span], bool]:
-    """Extract (merged spans, should_be_public) from plain text."""
-    cfg = cfg or ExtractConfig()
-    if not isinstance(text, str) or not text:
-        return [], True
-    if emitter is None and tokenizer is None:
-        # same resolution as extract_page_batch: a configured model_path
-        # must load the REAL emitter here too — 'emitter or StubEmitter()'
-        # alone would silently run the stub against a checkpoint config
-        # (wrong spans, pages published as public)
-        if cfg.use_ner and cfg.model_path is not None:
-            emitter, tokenizer = cfg.make_emitter_and_tokenizer()
-        else:
-            tokenizer = cfg.make_tokenizer()
-    elif emitter is None:
-        if cfg.use_ner and cfg.model_path is not None:
-            # mirror extract_page_batch's guard: a caller-supplied
-            # tokenizer cannot pair with a checkpoint's own fast
-            # tokenizer — substituting the stub here would silently run
-            # gazetteer spans against a model config (pages published
-            # as public with unscanned names)
-            raise ValueError(
-                "model_path is set but only a tokenizer was passed; pass "
-                "both emitter and tokenizer (or neither) for the real-"
-                "model path")
-    elif tokenizer is None:
-        tokenizer = cfg.make_tokenizer()
-    ner = (_ner_spans(text, cfg, tokenizer, emitter or StubEmitter())
-           if cfg.use_ner else [])
-    return _finalize_document(text, ner, cfg)
 
 
 class DocTooLargeError(ValueError):
@@ -516,23 +422,6 @@ def _page_record(url: str, extracted: str, spans: list[Span],
     }
 
 
-def extract_page(
-    url: str,
-    html: bytes | None,
-    text: str | None,
-    cfg: ExtractConfig | None = None,
-    emitter: Emitter | None = None,
-    tokenizer: WordTokenizer | None = None,
-) -> dict:
-    """Full per-page record: payload (preferred) or pre-extracted text →
-    result. See ``_payload_to_text`` for the sniff and ``_page_record`` for
-    the output shape."""
-    cfg = cfg or ExtractConfig()
-    extracted = _payload_to_text(html, text, cfg.max_doc_bytes)
-    spans, public = extract_document(extracted, cfg, emitter, tokenizer)
-    return _page_record(url, extracted, spans, public)
-
-
 def _emit_group(group, emitter: Emitter, emit_batch):
     """Emissions for one cross-document chunk group. On a batched-forward
     failure, RETRY PER CHUNK so the error is attributed to the page that
@@ -570,21 +459,21 @@ def _emit_group(group, emitter: Emitter, emit_batch):
     return out
 
 
-def extract_page_batch(
-    records,
-    cfg: ExtractConfig | None = None,
-    emitter: Emitter | None = None,
-    tokenizer: WordTokenizer | None = None,
-) -> list[dict | Exception]:
-    """Cross-DOCUMENT chunk batching: extract a batch of pages with chunks
-    from ALL documents sharing ``emitter.emit_batch`` forward passes in
-    groups of ``cfg.batch_size``, regardless of document boundaries.
+def _extract_core(records, cfg: ExtractConfig, emitter: Emitter | None,
+                  tokenizer: WordTokenizer | None,
+                  max_doc_bytes: int | None) -> list[tuple | Exception]:
+    """The one extraction loop behind ``extract_page_batch``,
+    ``extract_page`` and ``extract_document``: per (url, html, text) record,
+    (url, extracted_text, merged spans, should_be_public) or the Exception
+    that page raised, in input order.
 
-    This generalizes the reference's per-document ``--batch_size`` forward
-    batching (infer_pii.py:180-201) across documents: web corpora are
-    dominated by single-chunk pages, so per-document batching degenerates
-    to batch-of-1 forwards and a real GPU emitter starves. Here 8
-    single-chunk documents share one forward pass.
+    Cross-DOCUMENT chunk batching: chunks from ALL documents share
+    ``emitter.emit_batch`` forward passes in groups of ``cfg.batch_size``,
+    regardless of document boundaries. This generalizes the reference's
+    per-document ``--batch_size`` forward batching (infer_pii.py:180-201)
+    across documents: web corpora are dominated by single-chunk pages, so
+    per-document batching degenerates to batch-of-1 forwards and a real GPU
+    emitter starves. Here 8 single-chunk documents share one forward pass.
 
     Streaming: documents are prepared (payload → text → chunks → offsets),
     emitted, aggregated, and finalized in ONE interleaved pass — a forward
@@ -606,21 +495,11 @@ def extract_page_batch(
     independent of group composition (stub: pure per-chunk function;
     transformer: fixed-width padding — see TransformerEmitter), and
     per-document fp32 mean-logit accumulation consumes them in that same
-    order — so every returned record equals ``extract_page`` on the same
-    row (pytest-pinned parity).
-
-    ``records``: iterable of (url, html, text). Returns a list aligned with
-    the input; each element is the page record dict, or the Exception that
-    page raised (callers quarantine — the Spark UDF maps it to a
-    fail-closed error row). A failing page never poisons its neighbors:
-    prep errors, EMITTER errors (isolated per chunk via ``_emit_group``),
-    and decode errors all quarantine only their own page.
+    order — so every result is the same whichever records share the call.
     """
-    cfg = cfg or ExtractConfig()
-    if emitter is None and tokenizer is None:
-        emitter, tokenizer = cfg.make_emitter_and_tokenizer()
-    elif emitter is None:
-        if cfg.model_path is not None:
+    if emitter is None:
+        if (tokenizer is not None and cfg.use_ner
+                and cfg.model_path is not None):
             # a caller-supplied tokenizer cannot pair with a checkpoint's
             # own fast tokenizer — substituting the stub here would
             # silently run gazetteer spans against a model config
@@ -628,7 +507,8 @@ def extract_page_batch(
                 "model_path is set but only a tokenizer was passed; pass "
                 "both emitter and tokenizer (or neither) for the real-"
                 "model path")
-        emitter = StubEmitter()
+        emitter, own_tokenizer = cfg.make_emitter_and_tokenizer()
+        tokenizer = tokenizer if tokenizer is not None else own_tokenizer
     elif tokenizer is None:
         tokenizer = cfg.make_tokenizer()
     ctx = _label_ctx(emitter)
@@ -649,19 +529,23 @@ def extract_page_batch(
     # construction, so the aggregation fast path may skip its validation
     trusted_offs = bool(getattr(tokenizer, "slice_stable", False))
 
-    out: list[dict | Exception] = []
+    out: list[tuple | Exception] = []
     # Docs whose emissions are still outstanding, in input order:
     # [url, extracted, n_chunks, err, n_left, items]
     pending: deque[list] = deque()
     buf: list = []  # (doc_state, chunk, offsets) awaiting a forward group
     # Phase-A results awaiting the batched decode, in input order:
-    # ("done", record_or_exception) | ("decode", url, extracted, keys, em)
+    # ("done", result_or_exception) | ("decode", url, extracted, keys, em)
     ready: deque[tuple] = deque()
 
-    def finalize_record(url, extracted, ner) -> dict | Exception:
+    def finalize(url, extracted, ner) -> tuple | Exception:
+        """NER + detector spans → merged spans + public decision."""
         try:
-            spans, public = _finalize_document(extracted, ner, cfg)
-            return _page_record(url, extracted, spans, public)
+            spans = ner + detect_spans(extracted) if cfg.use_detectors else ner
+            merged = merge_and_resolve(
+                spans, resolve_overlaps=cfg.resolve_overlaps)
+            return (url, extracted, merged,
+                    not any(s.type in _PII_SET for s in merged))
         except Exception as e:  # noqa: BLE001 — per-page quarantine
             return e
 
@@ -675,20 +559,20 @@ def extract_page_batch(
         if err is not None:
             return ("done", err)
         if not n_chunks:
-            return ("done", finalize_record(url, extracted, []))
+            return ("done", finalize(url, extracted, []))
         if not batched_viterbi:
             try:
                 ner = _decode_chunk_emissions(iter(items), n_chunks, cfg,
                                               ctx, trusted_offs)
             except Exception as e:  # noqa: BLE001 — per-page quarantine
                 return ("done", e)
-            return ("done", finalize_record(url, extracted, ner))
+            return ("done", finalize(url, extracted, ner))
         try:
             kg = _mean_logit_matrix(items, n_chunks, trusted_offs)
         except Exception as e:  # noqa: BLE001 — per-page quarantine
             return ("done", e)
         if kg is None:
-            return ("done", finalize_record(url, extracted, []))
+            return ("done", finalize(url, extracted, []))
         return ("decode", url, extracted, kg[0], kg[1])
 
     def flush_ready(drain: bool) -> None:
@@ -755,7 +639,7 @@ def extract_page_batch(
                 except Exception as e:  # noqa: BLE001 — per-page quarantine
                     out.append(e)
                     continue
-                out.append(finalize_record(url, extracted, ner))
+                out.append(finalize(url, extracted, ner))
 
     def pump(drain: bool) -> None:
         while len(buf) >= step or (drain and buf):
@@ -772,8 +656,7 @@ def extract_page_batch(
     for url, html, text in records:
         d = [url, None, 0, None, 0, []]
         try:
-            d[1] = extracted = _payload_to_text(html, text,
-                                                cfg.max_doc_bytes)
+            d[1] = extracted = _payload_to_text(html, text, max_doc_bytes)
             if cfg.use_ner and extracted:
                 pairs = build_chunks_with_offsets(
                     extracted, tokenizer,
@@ -809,3 +692,62 @@ def extract_page_batch(
         ready.append(phase_a(d))
     flush_ready(drain=True)
     return out
+
+
+def extract_page_batch(
+    records,
+    cfg: ExtractConfig | None = None,
+    emitter: Emitter | None = None,
+    tokenizer: WordTokenizer | None = None,
+) -> list[dict | Exception]:
+    """Extract a batch of (url, html, text) records with cross-document
+    chunk batching (``_extract_core``). Returns a list aligned with the
+    input: each element is the page record dict, or the Exception that
+    page raised (callers quarantine — the Spark UDF maps it to a
+    fail-closed error row). A failing page never poisons its neighbors:
+    prep errors, EMITTER errors (isolated per chunk via ``_emit_group``),
+    and decode errors all quarantine only their own page. Each record
+    equals the per-document executable spec ``tests/oracles/pipeline.py``
+    on the same row, however ``records`` is split across calls
+    (pytest-pinned parity)."""
+    cfg = cfg or ExtractConfig()
+    return [r if isinstance(r, Exception) else _page_record(*r)
+            for r in _extract_core(records, cfg, emitter, tokenizer,
+                                   cfg.max_doc_bytes)]
+
+
+def extract_page(
+    url: str,
+    html: bytes | None,
+    text: str | None,
+    cfg: ExtractConfig | None = None,
+    emitter: Emitter | None = None,
+    tokenizer: WordTokenizer | None = None,
+) -> dict:
+    """Full per-page record: payload (preferred) or pre-extracted text →
+    result, as a one-record ``extract_page_batch`` call whose quarantined
+    Exception is raised. See ``_payload_to_text`` for the sniff and
+    ``_page_record`` for the output shape."""
+    rec = extract_page_batch([(url, html, text)], cfg, emitter, tokenizer)[0]
+    if isinstance(rec, Exception):
+        raise rec
+    return rec
+
+
+def extract_document(
+    text: str,
+    cfg: ExtractConfig | None = None,
+    emitter: Emitter | None = None,
+    tokenizer: WordTokenizer | None = None,
+) -> tuple[list[Span], bool]:
+    """Extract (merged spans, should_be_public) from plain text. Spans keep
+    their unrounded conf, and no ``max_doc_bytes`` cap applies: the cap
+    bounds page payloads (``extract_page``), not caller-held text."""
+    cfg = cfg or ExtractConfig()
+    if not isinstance(text, str) or not text:
+        return [], True
+    res = _extract_core([(None, None, text)], cfg, emitter, tokenizer,
+                        None)[0]
+    if isinstance(res, Exception):
+        raise res
+    return res[2], res[3]

@@ -76,9 +76,9 @@ def spans_from_bio(
 ) -> list[Span]:
     """Token predictions + logits → sorted scored char spans.
 
-    Vectorized: the original per-token state machine (kept below as
-    ``_spans_from_bio_py``, the differential oracle) touches every token in
-    Python, but web text is overwhelmingly O tokens. Here entity tokens are
+    Vectorized: the original per-token state machine (the differential
+    oracle ``spans_from_bio_py`` in ``tests/oracles/spans.py``) touches
+    every token in Python, but web text is overwhelmingly O tokens. Here entity tokens are
     isolated with NumPy table lookups, span boundaries derived from the
     local rule the state machine reduces to (a valid token opens a span iff
     its prefix is B, or the previous position is not a valid token of the
@@ -139,75 +139,6 @@ def spans_from_bio(
         conf = min(cs) if agg == "min" else sum(cs) / len(cs)
         out.append(Span(a_v[lo], max(b_v[lo:hi]), types[tc[lo]],
                         float(conf), hi - lo))
-    out.sort(key=_sort_key)
-    return out
-
-
-def _spans_from_bio_py(
-    offsets: list[tuple[int, int]],
-    pred_ids: list[int],
-    logits: np.ndarray,
-    id2label: dict[int, str],
-    conf_agg: str = "mean",
-) -> list[Span]:
-    """Original per-token state machine — the differential ORACLE for
-    ``spans_from_bio`` (reference spans.py:138-245 semantics)."""
-    if len(offsets) != len(pred_ids):
-        raise ValueError(f"offsets/pred_ids mismatch: {len(offsets)} vs {len(pred_ids)}")
-    if logits.ndim != 2 or logits.shape[0] != len(pred_ids):
-        raise ValueError(f"logits shape {logits.shape} != ({len(pred_ids)}, C)")
-    agg = str(conf_agg).strip().lower()
-    if agg not in ("mean", "min"):
-        raise ValueError(f"conf_agg must be mean|min, got {conf_agg!r}")
-
-    # label-id -> (prefix, type) computed once per call (27 entries), not per
-    # token; softmax computed lazily per ENTITY token row — the overwhelmingly
-    # common O rows never touch the exp path. Identical values: softmax rows
-    # are independent, and fp32 row-softmax(x) == row of full softmax(x).
-    meta = {int(pid): split_label(lab) for pid, lab in id2label.items()}
-    lg = np.asarray(logits, dtype=np.float32)
-
-    def _row_conf(i: int, pid: int) -> float:
-        # the ONE canonical softmax (decoding.softmax): bit-stability
-        # claims pin on a single implementation, and indexing its row is
-        # IEEE-identical to the scalar e[pid]/e.sum() form
-        return float(softmax(lg[i])[pid])
-
-    out: list[Span] = []
-    # open-span state
-    o_type: str | None = None
-    o_start = o_end = 0
-    o_confs: list[float] = []
-    run_type: str | None = None  # type of the immediately preceding entity token
-
-    def _close() -> None:
-        nonlocal o_type, o_confs
-        if o_type is not None and o_confs:
-            conf = min(o_confs) if agg == "min" else sum(o_confs) / len(o_confs)
-            out.append(Span(o_start, o_end, o_type, float(conf), len(o_confs)))
-        o_type = None
-        o_confs = []
-
-    for i, ((a, b), pid) in enumerate(zip(offsets, pred_ids)):
-        pre, typ = meta.get(int(pid), ("O", None))
-        if typ is None or (a == 0 and b == 0):
-            if o_type is not None or run_type is not None:
-                _close()
-                run_type = None
-            continue
-        a, b = int(a), int(b)
-
-        tok_conf = _row_conf(i, int(pid))
-        opens = pre == "B" or run_type != typ
-        if opens or o_type != typ:
-            _close()
-            o_type, o_start, o_end, o_confs = typ, a, b, [tok_conf]
-        else:
-            o_end = max(o_end, b)
-            o_confs.append(tok_conf)
-        run_type = typ
-
-    _close()
     out.sort(key=_sort_key)
     return out
 

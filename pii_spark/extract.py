@@ -64,7 +64,7 @@ def _extract_batches(cfg: ExtractConfig, passthrough: tuple[str, ...] = ()):
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # --- load-once-per-partition (the "model load" slot): StubEmitter +
         # WordTokenizer by default; a real TransformerEmitter + HF fast
-        # tokenizer when cfg.model_path is set (optional torch dep) ---
+        # tokenizer when cfg.model_path is set and NER runs (torch) ---
         emitter, tokenizer = cfg.make_emitter_and_tokenizer()
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
@@ -84,9 +84,9 @@ def _extract_batches(cfg: ExtractConfig, passthrough: tuple[str, ...] = ()):
             # short-doc (single-chunk) web corpora. Per-doc chunk order —
             # and so fp32 accumulation order — is unchanged, and emissions
             # are composition-invariant (stub: pure per-chunk; transformer:
-            # fixed-width pad_to_max padding): output is byte-identical to
-            # the per-page path at any partition count. Emitter failures
-            # isolate per page (pipeline._emit_group), never kill the task.
+            # fixed-width pad_to_max padding): output is byte-identical at
+            # any batch split or partition count. Emitter failures isolate
+            # per page (pipeline._emit_group), never kill the task.
             recs = extract_page_batch(
                 zip(urls, htmls, texts), cfg, emitter, tokenizer)
             for url, rec in zip(urls, recs):

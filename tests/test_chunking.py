@@ -169,9 +169,10 @@ def test_hard_split_via_pipeline_extracts_after_blob():
     html = ("<body><p>" + "z" * 3000
             + " contato maria@example.com e CPF 529.982.247-25.</p></body>"
             ).encode()
-    # default: quarantine path (extract_page raises inside _ner_spans via
-    # build_chunks; the Spark UDF catches it — here we assert the flag flips
-    # the outcome end-to-end)
+    # default: quarantine path (the chunker raises, the batch core
+    # quarantines the page and extract_page re-raises it; the Spark UDF
+    # writes an error row — here we assert the flag flips the outcome
+    # end-to-end)
     with pytest.raises(RuntimeError):
         extract_page("u", html, None, ExtractConfig(max_length=64, stride=8))
     rec = extract_page("u", html, None,

@@ -1,11 +1,13 @@
-"""End-to-end per-document pipeline: determinism, chunk-boundary healing,
-decision logic, detector/NER union."""
+"""End-to-end pipeline: determinism, chunk-boundary healing, decision
+logic, detector/NER union, and parity of the batch core with the
+per-document oracle (tests/oracles/pipeline.py)."""
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from pii_core.labels import PII_TYPES
 from pii_core.pipeline import ExtractConfig, extract_document, extract_page
+from oracles import pipeline as oracle
 
 
 def test_empty_doc_is_public():
@@ -127,27 +129,49 @@ def test_min_span_tokens_filter_applies_to_ner():
 
 def test_single_chunk_fast_path_equivalent():
     """The single-chunk fast path must produce byte-identical spans to the
-    general dict-accumulation path."""
-    import pii_core.pipeline as pl
+    oracle's plain dict accumulation — on whole pages, and on the
+    aggregation matrix of every single-chunk page among them (so the fast
+    path is known to have run)."""
+    from pii_core.chunking import build_chunks_with_offsets
+    from pii_core.ner_stub import stub_emissions
+    from pii_core.pipeline import (
+        _mean_logit_matrix,
+        _payload_to_text,
+        extract_page_batch,
+    )
     from pii_spark.synth import gen_pages
 
-    pages = [p for p in gen_pages(60, seed=21)]
-    try:
-        pl._SINGLE_CHUNK_FAST = False
-        slow = [pl.extract_page(p["url"], p["html"], p["text"]) for p in pages]
-    finally:
-        pl._SINGLE_CHUNK_FAST = True
-    fast = [pl.extract_page(p["url"], p["html"], p["text"]) for p in pages]
-    assert fast == slow
+    pages = [(p["url"], p["html"], p["text"])
+             for p in gen_pages(60, seed=21)]
+    assert extract_page_batch(pages) == [oracle.extract_page(*p)
+                                         for p in pages]
+
+    cfg = ExtractConfig()
+    tok = cfg.make_tokenizer()
+    single = 0
+    for _url, html, text in pages:
+        pairs = build_chunks_with_offsets(
+            _payload_to_text(html, text), tok, max_length=cfg.max_length,
+            stride=cfg.stride, boundary_backoff=cfg.boundary_backoff)
+        if len(pairs) != 1 or not len(pairs[0][1]):
+            continue
+        single += 1
+        ch, offs = pairs[0]
+        items = [(ch, offs, stub_emissions(ch.text, offs))]
+        keys, em = _mean_logit_matrix(items, 1, trusted_offsets=True)
+        want_keys, want_em = oracle.mean_logits(items)
+        assert np.asarray(keys).tolist() == [list(k) for k in want_keys]
+        assert em.tobytes() == want_em.tobytes()
+    assert single >= 30
 
 
 def test_extract_page_batch_parity_mixed_corpus():
     """Cross-document batching (VERDICT r2 #2) must be byte-identical to the
-    per-page path on a mixed corpus: short single-chunk pages, multi-chunk
-    pages (overlap accumulation spanning forward-group boundaries), PDFs,
-    empty payloads, text-only rows — and a failing page must map to its
-    Exception without poisoning neighbors."""
-    from pii_core.pipeline import extract_page, extract_page_batch
+    per-document oracle on a mixed corpus: short single-chunk pages,
+    multi-chunk pages (overlap accumulation spanning forward-group
+    boundaries), PDFs, empty payloads, text-only rows — and a failing page
+    must map to its Exception without poisoning neighbors."""
+    from pii_core.pipeline import extract_page_batch
     from pii_spark.synth import gen_pages
 
     pages = [(p["url"], p["html"], p["text"]) for p in gen_pages(40, seed=5)]
@@ -168,7 +192,7 @@ def test_extract_page_batch_parity_mixed_corpus():
         if url == "fails":
             assert isinstance(rec, RuntimeError)
             continue
-        assert rec == extract_page(url, html, text, cfg), url
+        assert rec == oracle.extract_page(url, html, text, cfg), url
 
 
 def test_cross_document_forward_batching_saturates():
@@ -212,9 +236,11 @@ def test_batch_vs_per_page_parity_property(data):
     """Randomized twin of the fixed-corpus parity test: for ANY corpus of
     small documents (html / raw text / empty / None payloads, entity
     snippets at random positions), any batch_size, and a random chunk
-    geometry, extract_page_batch must equal per-page extract_page
-    elementwise — quarantined pages included (same exception type)."""
-    from pii_core.pipeline import extract_page, extract_page_batch
+    geometry, extract_page_batch must equal the per-document oracle
+    elementwise — quarantined pages included (same exception type) — and
+    must not depend on where the record list is split across calls (Arrow
+    batch boundaries)."""
+    from pii_core.pipeline import extract_page_batch
 
     st_doc = st.lists(st.sampled_from(_WORDS), min_size=0, max_size=25) \
         .map(" ".join)
@@ -243,11 +269,22 @@ def test_batch_vs_per_page_parity_property(data):
     assert len(got) == len(pages)
     for (url, html, text), rec in zip(pages, got):
         try:
-            want = extract_page(url, html, text, cfg)
+            want = oracle.extract_page(url, html, text, cfg)
         except Exception as e:  # noqa: BLE001 — parity includes failures
             assert isinstance(rec, type(e)), url
             continue
         assert rec == want, url
+
+    def same(a, b):  # Exceptions compare by type and message
+        if isinstance(a, Exception):
+            return type(a) is type(b) and str(a) == str(b)
+        return a == b
+
+    cut = data.draw(st.integers(0, len(pages)))
+    split = (extract_page_batch(pages[:cut], cfg)
+             + extract_page_batch(pages[cut:], cfg))
+    assert len(split) == len(got)
+    assert all(same(a, b) for a, b in zip(split, got)), cut
 
 
 def test_short_emit_batch_never_silently_truncates():
@@ -256,7 +293,7 @@ def test_short_emit_batch_never_silently_truncates():
     chunks: the group retries per chunk, and pages whose single-chunk call
     also miscounts quarantine with a loud contract error."""
     from pii_core.ner_stub import StubEmitter
-    from pii_core.pipeline import extract_page, extract_page_batch
+    from pii_core.pipeline import extract_page_batch
     from pii_spark.synth import gen_pages
 
     class ShortEmitter(StubEmitter):
@@ -269,14 +306,12 @@ def test_short_emit_batch_never_silently_truncates():
     recs = extract_page_batch(pages, cfg, ShortEmitter(), cfg.make_tokenizer())
     assert len(recs) == len(pages)
     # every page either quarantined with the contract error, or (docs with
-    # zero emission-needing chunks) matches the healthy per-page record
-    healthy = StubEmitter()
+    # zero emission-needing chunks) matches the healthy oracle record
     for (url, html, text), rec in zip(pages, recs):
         if isinstance(rec, Exception):
             assert "emissions" in str(rec), url
         else:
-            assert rec == extract_page(url, html, text, cfg, healthy,
-                                       cfg.make_tokenizer()), url
+            assert rec == oracle.extract_page(url, html, text, cfg), url
     assert any(isinstance(r, Exception) for r in recs)
 
 
@@ -300,10 +335,11 @@ def test_chunking_config_error_aborts_batch_instead_of_quarantining():
 
 
 def test_per_doc_path_rejects_short_emit_batch():
-    """The per-document path (extract_page -> _chunk_emissions) must fail
-    loudly on an emitter count-contract violation, not zip-truncate: a
-    silently dropped trailing chunk would leave its PII undecoded and the
-    page could pass as public."""
+    """extract_page (a one-record batch call) must fail loudly on an
+    emitter count-contract violation, not zip-truncate: the short group
+    retries per chunk (_emit_group), each one-chunk call miscounts too, and
+    the page's contract error is raised. A silently dropped trailing chunk
+    would leave its PII undecoded and the page could pass as public."""
     import pytest
 
     from pii_core.ner_stub import StubEmitter
@@ -344,7 +380,7 @@ def test_emitter_failure_quarantines_only_its_page():
     emissions, and extract_page_batch never raises (a raise would abort the
     whole Spark task and, after retries, the cluster job)."""
     from pii_core.ner_stub import StubEmitter
-    from pii_core.pipeline import extract_page, extract_page_batch
+    from pii_core.pipeline import extract_page_batch
     from pii_spark.synth import gen_pages
 
     poison = "GATILHO_DO_MODELO"
@@ -365,12 +401,10 @@ def test_emitter_failure_quarantines_only_its_page():
     assert [u for u, _ in bad] == ["poisoned"]
     assert "model exploded" in str(bad[0][1])
     # neighbors (including ones that shared the poisoned forward group)
-    # match the per-page healthy-emitter output exactly
-    healthy = StubEmitter()
+    # match the healthy-emitter oracle output exactly
     for (url, html, text), rec in zip(pages, recs):
         if url != "poisoned":
-            assert rec == extract_page(url, html, text, cfg, healthy,
-                                       cfg.make_tokenizer()), url
+            assert rec == oracle.extract_page(url, html, text, cfg), url
 
 
 def test_per_doc_path_rejects_tokenizer_only_under_model_path():
@@ -394,7 +428,7 @@ def test_per_doc_path_rejects_tokenizer_only_under_model_path():
 
 def test_giant_page_cap_quarantines_before_parse():
     """Straggler bound: a payload above max_doc_bytes raises
-    DocTooLargeError BEFORE any parse work (per-doc path) and quarantines
+    DocTooLargeError BEFORE any parse work (extract_page) and quarantines
     ONLY its own page on the batch path — one multi-MB pathological page
     (its chunks colocate for fp32 determinism, so it cannot be split) must
     not pin a task. Pages under the cap are untouched; None disables."""
@@ -415,12 +449,15 @@ def test_giant_page_cap_quarantines_before_parse():
         + [(giant["url"], giant["html"], None)], cfg)
     assert isinstance(recs[3], DocTooLargeError)
     for p, rec in zip(normal, recs[:3]):
-        assert rec == extract_page(p["url"], p["html"], p["text"], cfg)
+        assert rec == oracle.extract_page(p["url"], p["html"], p["text"],
+                                          cfg)
 
     # cap on pre-extracted text payloads (chars), and None disables
     small_cfg = ExtractConfig(max_doc_bytes=100)
     with pytest.raises(DocTooLargeError):
         extract_page("u", None, "x" * 101, small_cfg)
+    # the cap bounds page payloads; caller-held text is never capped
+    assert extract_document("x" * 101, small_cfg) == ([], True)
     no_cap = ExtractConfig(max_doc_bytes=None)
     rec = extract_page("u", None, "Texto de tamanho normal aqui mesmo.",
                        ExtractConfig(max_doc_bytes=10_000))
@@ -472,3 +509,29 @@ def test_trusted_offsets_path_equivalent():
     # the key values/order (spans_from_bio asarray-normalizes either form)
     assert np.asarray(keys).tolist() == [[1, 3]]
     assert np.allclose(m, [[4.0, 5.0]])
+
+
+def test_detector_only_config_never_loads_a_checkpoint():
+    """use_ner=False needs no model: a detector-only config with a
+    model_path must run the detectors on every path — the Spark UDF calls
+    extract_page_batch with the config's own emitter resolution — instead
+    of failing to load the checkpoint (every page an error row)."""
+    from pii_core.ner_stub import StubEmitter
+    from pii_core.pipeline import extract_page_batch
+    from pii_core.tokenizer import WordTokenizer
+    from pii_spark.synth import gen_pages
+
+    cfg = ExtractConfig(use_ner=False, model_path="some/checkpoint")
+    emitter, tokenizer = cfg.make_emitter_and_tokenizer()
+    assert isinstance(emitter, StubEmitter)
+    assert isinstance(tokenizer, WordTokenizer)
+
+    pages = [(p["url"], p["html"], p["text"]) for p in gen_pages(20, seed=3)]
+    pages.append(("cpf", None, "CPF 529.982.247-25, Maria Clara Santos"))
+    recs = extract_page_batch(pages, cfg)
+    assert recs == [oracle.extract_page(*p, ExtractConfig(use_ner=False))
+                    for p in pages]
+    assert [s["type"] for s in recs[-1]["spans"]] == ["DOC_PESSOAL"]
+    # a tokenizer alone is fine too: without NER no checkpoint tokenizer
+    # is needed to pair with it
+    assert extract_page_batch(pages, cfg, tokenizer=WordTokenizer()) == recs

@@ -181,15 +181,16 @@ def test_gold_spans_validation_errors():
 
 def test_spans_from_bio_vectorized_matches_state_machine():
     """The NumPy-vectorized spans_from_bio must be BIT-identical (confs
-    included) to the original per-token state machine (_spans_from_bio_py,
-    the reference spans.py:138-245 oracle) — across tie-heavy logits,
+    included) to the original per-token state machine (spans_from_bio_py in
+    tests/oracles/spans.py, the reference spans.py:138-245 oracle) — across tie-heavy logits,
     out-of-range/negative ids, malformed labels, (0,0) offsets, zero-length
     offsets, and both conf aggregations."""
     import random
 
     import numpy as np
 
-    from pii_core.spans import _spans_from_bio_py, spans_from_bio
+    from oracles.spans import spans_from_bio_py
+    from pii_core.spans import spans_from_bio
 
     rng = random.Random(7)
     labels = ["O", "B-NOME_PESSOA", "I-NOME_PESSOA", "B-CONTATO",
@@ -211,5 +212,5 @@ def test_spans_from_bio_vectorized_matches_state_machine():
                   * rng.choice([0.1, 1, 10, 100])).astype(np.float32)
         agg = rng.choice(["mean", "min"])
         assert (spans_from_bio(offsets, pred_ids, logits, id2label, agg)
-                == _spans_from_bio_py(offsets, pred_ids, logits, id2label,
-                                      agg))
+                == spans_from_bio_py(offsets, pred_ids, logits, id2label,
+                                     agg))
