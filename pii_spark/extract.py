@@ -39,7 +39,7 @@ import logging
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark import TaskContext
+from pyspark import AccumulatorParam, TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -54,12 +54,37 @@ RESULTS_WITH_PID = T.StructType(
 DEFAULT_SALT = 0x5CA1AB1E
 
 
-def _extract_batches(cfg: ExtractConfig, passthrough: tuple[str, ...] = ()):
+class PartitionCounters(AccumulatorParam):
+    """Merges ``{partition_id: {"docs", "bytes", "errors", "spans_by_type"}}``
+    dicts — the per-partition lineage counters the extraction UDF counts
+    as it yields rows (see ``extract_pages(counters=)``). Module-level so
+    that workers can unpickle the accumulator it parameterises."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, other):
+        for pid, c in other.items():
+            into = acc.setdefault(
+                pid, {"docs": 0, "bytes": 0, "errors": 0,
+                      "spans_by_type": {}})
+            for k in ("docs", "bytes", "errors"):
+                into[k] += c[k]
+            by_type = into["spans_by_type"]
+            for t, n in c["spans_by_type"].items():
+                by_type[t] = by_type.get(t, 0) + n
+        return acc
+
+
+def _extract_batches(cfg: ExtractConfig, passthrough: tuple[str, ...] = (),
+                     counters=None):
     """Build the mapInPandas function with cfg captured (broadcast via task
     closure — cfg is a small frozen dataclass). ``passthrough`` columns are
     copied from the input batch to the output rows positionally (row order
     is preserved), letting callers carry event-time or partition metadata
-    through the UDF without re-joining."""
+    through the UDF without re-joining. ``counters`` is an optional
+    ``PartitionCounters`` accumulator: the partition's counters over the
+    rows it yields are added once, when its iterator ends."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # --- load-once-per-partition (the "model load" slot): StubEmitter +
@@ -68,6 +93,8 @@ def _extract_batches(cfg: ExtractConfig, passthrough: tuple[str, ...] = ()):
         emitter, tokenizer = cfg.make_emitter_and_tokenizer()
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
+        docs = nbytes = errors = 0
+        by_type: dict[str, int] = {}
 
         for pdf in batches:
             urls = pdf["url"].tolist()
@@ -112,7 +139,18 @@ def _extract_batches(cfg: ExtractConfig, passthrough: tuple[str, ...] = ()):
             for col in passthrough:
                 res[col] = pdf[col].to_numpy()
             res["partition_id"] = pid
+            if counters is not None:
+                docs += len(res)
+                nbytes += sum(out["doc_bytes"])
+                errors += len(res) - out["error"].count(None)
+                for spans in out["spans"]:
+                    for s in spans:
+                        by_type[s["type"]] = by_type.get(s["type"], 0) + 1
             yield res
+
+        if counters is not None and docs:
+            counters.add({pid: {"docs": docs, "bytes": nbytes,
+                                "errors": errors, "spans_by_type": by_type}})
 
     return run
 
@@ -122,8 +160,17 @@ def extract_pages(
     cfg: ExtractConfig | None = None,
     num_partitions: int | None = None,
     salt: int = DEFAULT_SALT,
+    counters=None,
 ) -> DataFrame:
-    """pages (url, html[, text]) -> results. See module docstring."""
+    """pages (url, html[, text]) -> results. See module docstring.
+
+    ``counters`` is an optional output channel and changes no result: a
+    ``PartitionCounters`` accumulator to which each partition adds its
+    lineage counters (docs, UTF-8 ``bytes``, quarantined ``errors``,
+    ``spans_by_type``) over the rows it yields. They are exact for one
+    action whose result stage is this mapInPandas, read after it returns
+    (see ``resume.run_incremental``); a second action adds its counts
+    again."""
     cfg = cfg or ExtractConfig()
     spark = pages.sparkSession
 
@@ -171,14 +218,21 @@ def extract_pages(
     # resume diffing, and hash(url) alone keeps lineage stable across runs.
     salted = pruned.repartition(num_partitions, F.xxhash64(F.col("url"), F.lit(salt)))
 
-    return salted.mapInPandas(_extract_batches(cfg), schema=RESULTS_WITH_PID)
+    return salted.mapInPandas(_extract_batches(cfg, counters=counters),
+                              schema=RESULTS_WITH_PID)
 
 
 def lineage_from_results(results: DataFrame, run_id: str) -> DataFrame:
     """Per-partition lineage counters (north rule): docs, bytes, spans by
-    type, keyed by (run_id, partition_id). Pass the COMMITTED results (read
-    back from storage, as resume.run_incremental does) so the counters
-    describe exactly what landed and extraction never re-runs."""
+    type, keyed by (run_id, partition_id), aggregated from a results frame.
+    ``resume.run_incremental`` does not call this — it takes the same rows
+    from the counters its results write counted (``extract_pages(counters=
+    )``). This is the path for results with no live counters:
+    ``resume.adopt_crashed_runs`` salvages a crashed run's COMMITTED files
+    with it, and tests use it as the oracle for the write's counters. Pass
+    committed results (read back from storage), never a live extraction
+    frame, so the counters describe exactly what landed and extraction
+    never re-runs."""
     per_type = (
         results.select("partition_id", F.explode_outer("spans").alias("s"))
         .groupBy("partition_id", F.col("s.type").alias("type"))

@@ -20,8 +20,11 @@ The parquet emulation reproduces the atomicity with a PER-RUN COMMIT MARKER
    run_id cannot both pass (the round-2 check-then-write race is closed at
    the filesystem, not by a read-then-act probe).
 2. results append under ``run_id=<id>/`` hive partitions (one extraction
-   pass — the write is the only action), then lineage derives from the
-   COMMITTED files and appends.
+   pass — the write is the only action). The extraction UDF counts each
+   partition's lineage (docs, bytes, error rows, spans by type) over the
+   rows it hands to that write, so nothing reads the run back: the
+   quarantine breaker runs on those counts and the lineage rows append
+   from them as one small driver-built frame.
 3. ``<run_id>.committed`` lands last via write-to-temp + atomic rename.
    The marker IS the commit: every reader (``committed_urls``,
    ``lineage_summary``, the next increment's anti-join) filters to marked
@@ -51,7 +54,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pii_core.pipeline import ExtractConfig
-from pii_spark.extract import RESULTS_WITH_PID, extract_pages, lineage_from_results
+from pii_spark.extract import (
+    RESULTS_WITH_PID,
+    PartitionCounters,
+    extract_pages,
+    lineage_from_results,
+)
 
 
 def _committed_schema():
@@ -191,9 +199,12 @@ def run_incremental(
     2. Results land hive-partitioned by run_id. The write is the ONLY
        action that executes the extraction UDF — exactly one pass, no
        persist() needed and no re-extraction under cache eviction.
-    3. Lineage derives from the COMMITTED parquet, partition-pruned to this
-       run_id, so a lineage row can never describe a document that failed
-       to land.
+    3. Lineage comes from the per-partition counters the UDF added to a
+       fresh accumulator as it yielded the rows the write committed
+       (``extract_pages(counters=)``), read only after the write returns:
+       no Spark action reads the run back, and a lineage row can never
+       describe a document that failed to land (a failed write raises
+       before the counters are read).
     4. The commit marker lands LAST (temp + atomic rename). A crash before
        it leaves the run unmarked: readers and the next increment's
        anti-join ignore it completely — its urls re-extract under the next
@@ -240,7 +251,11 @@ def run_incremental(
     done = committed_urls(spark, results_dir)
     todo = pages if done is None else pages.join(done, "url", "left_anti")
 
-    results = extract_pages(todo, cfg, num_partitions=num_partitions)
+    # one fresh accumulator per increment: its value is exactly this
+    # run's write
+    acc = spark.sparkContext.accumulator({}, PartitionCounters())
+    results = extract_pages(todo, cfg, num_partitions=num_partitions,
+                            counters=acc)
     (
         results.withColumn("run_id", F.lit(run_id))
         .write.mode("append").partitionBy("run_id").parquet(results_dir)
@@ -248,13 +263,17 @@ def run_incremental(
     if not _exists(results_dir):  # first run over an empty input
         _write_marker(results_dir, run_id, 0)
         return {"run_id": run_id, "docs": 0, "errors": 0}
-    committed = spark.read.schema(_committed_schema()).parquet(
-        results_dir).where(F.col("run_id") == run_id)
-    counts = committed.agg(
-        F.count("*").alias("n"),
-        F.count("error").alias("errs"),  # count() skips nulls
-    ).first()
-    n, errs = int(counts["n"]), int(counts["errs"])
+    # Exact, not approximate: the mapInPandas stage is the write job's
+    # RESULT stage (its tasks write the files), and Spark applies a result
+    # task's accumulator update once per partition, from the first
+    # successful attempt only — a failed, retried or speculative attempt
+    # adds nothing. So the counters describe exactly the committed rows.
+    per_pid = acc.value
+    # pyspark's driver keeps every accumulator it made for the session's
+    # life: drop this run's counts rather than keep them per increment
+    acc.value = {}
+    n = sum(c["docs"] for c in per_pid.values())
+    errs = sum(c["errors"] for c in per_pid.values())
     if max_error_rate is not None and n and errs > max_error_rate * n:
         raise RuntimeError(
             f"run {run_id!r}: {errs}/{n} pages quarantined "
@@ -264,10 +283,35 @@ def run_incremental(
             "then adopt_crashed_runs to salvage or vacuum_uncommitted to "
             "discard")
     if n:
-        lineage = lineage_from_results(committed, run_id)
-        _append_lineage(lineage, lineage_dir)
+        _append_lineage(_lineage_from_counters(spark, per_pid, run_id),
+                        lineage_dir)
     _write_marker(results_dir, run_id, n)
     return {"run_id": run_id, "docs": n, "errors": errs}
+
+
+def _lineage_from_counters(
+    spark: SparkSession, per_pid: dict, run_id: str
+) -> DataFrame:
+    """The run's lineage rows — the columns ``lineage_from_results`` builds —
+    from the write's per-partition counters, as one partition (one lineage
+    file per run). Built from a pandas frame so it ships over Arrow (a
+    row-list ``createDataFrame`` goes through a Python worker and costs
+    several times more)."""
+    import pandas as pd  # noqa: PLC0415
+    from pyspark.sql import types as T  # noqa: PLC0415
+
+    pids = sorted(per_pid)
+    pdf = pd.DataFrame({
+        "run_id": [run_id] * len(pids),
+        "partition_id": pids,
+        "docs": [per_pid[p]["docs"] for p in pids],
+        "bytes": [per_pid[p]["bytes"] for p in pids],
+        "spans_by_type": [per_pid[p]["spans_by_type"] for p in pids],
+    })
+    schema = T.StructType(
+        [T.StructField("run_id", T.StringType(), False)]
+        + [f for f in _lineage_schema().fields if f.name != "run_id"])
+    return spark.createDataFrame(pdf, schema=schema).coalesce(1)
 
 
 def _flat_lineage_files(lineage_dir: str) -> list[str]:

@@ -4,6 +4,7 @@ invariance, lineage correctness — the north rule's core invariants."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from pii_core.pipeline import extract_page
 from pii_spark.extract import extract_pages, lineage_from_results
@@ -123,6 +124,50 @@ def test_lineage_totals(spark, pages):
     flat = res.selectExpr("explode(spans) AS s").groupBy("s.type").count().collect()
     assert {r["type"]: r["count"] for r in flat} == total_by_type
     res.unpersist()
+
+
+def test_accented_pages_parity_and_utf8_lineage(spark, tmp_path):
+    """The synth corpus is ASCII-only; these pages carry Latin-1, BMP and
+    astral characters. Spark output at 2 and at 5 partitions equals the
+    in-process batch call and the per-document oracle for each url, and
+    lineage ``bytes`` counts UTF-8 bytes, not characters."""
+    from accented_pages import accented_pages, accented_pages_df
+    from oracles import pipeline as oracle
+
+    from pii_core.pipeline import extract_page_batch
+    from pii_spark.resume import _committed_schema, run_incremental
+
+    n, seed = 40, 5
+    recs = accented_pages(n, seed)
+    batch = extract_page_batch([(r["url"], r["html"], r["text"])
+                                for r in recs])
+    expect = {}
+    for rec, b in zip(recs, batch):
+        exp = oracle.extract_page(rec["url"], rec["html"], rec["text"])
+        assert b == exp, rec["url"]
+        expect[rec["url"]] = exp
+    texts = [e["extracted_text"] for e in expect.values()]
+    assert sum(any(ord(c) > 0xFFFF for c in t) for t in texts) > n // 2
+
+    pages = accented_pages_df(spark, n, seed)
+    for parts in (2, 5):
+        got = {r["url"]: r.asDict(recursive=True) for r in
+               extract_pages(pages, num_partitions=parts).collect()}
+        assert set(got) == set(expect)
+        for url, exp in expect.items():
+            g = got[url]
+            assert g["error"] is None, url
+            assert {k: g[k] for k in exp} == exp, url
+            assert g["doc_bytes"] == len(exp["extracted_text"].encode())
+
+    rdir, ldir = str(tmp_path / "res"), str(tmp_path / "lin")
+    assert run_incremental(spark, pages, rdir, ldir, "acc",
+                           num_partitions=3)["docs"] == n
+    committed = spark.read.schema(_committed_schema()).parquet(rdir) \
+        .agg(F.sum("doc_bytes")).first()[0]
+    lineage = spark.read.parquet(ldir).agg(F.sum("bytes")).first()[0]
+    utf8 = sum(len(t.encode("utf-8")) for t in texts)
+    assert lineage == committed == utf8 > sum(len(t) for t in texts)
 
 
 def test_edge_docs(results):

@@ -34,45 +34,33 @@ def test_resume_processes_only_new(spark, tmp_path):
     assert out3["docs"] == 0
 
 
-def _fake_extract_factory(counter):
-    """Stand-in for extract_pages: counts driver-side calls and emits
-    NON-DETERMINISTIC doc_bytes, so any code path that re-evaluates the live
-    extraction frame (instead of reading committed files) produces lineage
-    that disagrees with the committed results."""
+def test_lineage_derives_from_committed_results(spark, tmp_path, monkeypatch):
+    """Lineage describes the rows the write committed, from the one
+    extraction pass. The pages' text comes from a NON-DETERMINISTIC UDF,
+    so any path that re-evaluated the live extraction frame for lineage
+    (instead of counting the write's own rows, or reading committed
+    files) would see other texts and disagree on bytes."""
     import random
 
-    from pii_spark.schemas import RESULTS_SCHEMA  # noqa: PLC0415
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    def fake(pages, cfg=None, num_partitions=None, **kw):
-        counter.append(1)
-        ndet = F.udf(lambda: random.randint(1, 1 << 30), "long") \
-            .asNondeterministic()
-        empty_spans = F.expr(
-            "CAST(array() AS array<struct<type:string,start:int,end:int,"
-            "value:string,conf:double,n_tokens:int>>)")
-        return (
-            pages.select("url")
-            .withColumn("extracted_text", F.lit("x"))
-            .withColumn("spans", empty_spans)
-            .withColumn("should_be_public", F.lit(True))
-            .withColumn("n_spans", F.lit(0))
-            .withColumn("doc_bytes", ndet())
-            .withColumn("error", F.lit(None).cast("string"))
-            .withColumn("partition_id", F.lit(0))
-        )
-
-    return fake
-
-
-def test_lineage_derives_from_committed_results(spark, tmp_path, monkeypatch):
     import pii_spark.resume as resume
 
     rdir, ldir = str(tmp_path / "res"), str(tmp_path / "lin")
     calls: list[int] = []
-    monkeypatch.setattr(resume, "extract_pages", _fake_extract_factory(calls))
-    out = resume.run_incremental(
-        spark, pages_df(spark, 10, seed=1), rdir, ldir, "r1", num_partitions=2)
+    real = resume.extract_pages
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(resume, "extract_pages", spy)
+    ndet = F.udf(lambda: "palavra " * random.randint(1, 400), "string") \
+        .asNondeterministic()
+    pages = spark.range(10).select(
+        F.format_string("https://ndet.example/%d", "id").alias("url"),
+        F.lit(None).cast("binary").alias("html"),
+        ndet().alias("text"))
+    out = resume.run_incremental(spark, pages, rdir, ldir, "r1",
+                                 num_partitions=2)
     assert out["docs"] == 10
     # extraction plan built exactly once per increment
     assert len(calls) == 1
@@ -80,8 +68,58 @@ def test_lineage_derives_from_committed_results(spark, tmp_path, monkeypatch):
         F.sum("doc_bytes")).first()[0]
     lineage_bytes = spark.read.parquet(ldir).agg(F.sum("bytes")).first()[0]
     # would mismatch if lineage re-evaluated the (non-deterministic) live
-    # frame instead of reading the committed files
+    # frame instead of describing the committed rows
     assert lineage_bytes == committed_bytes
+
+
+def _lineage_key(rows):
+    return sorted((r["partition_id"], r["docs"], r["bytes"],
+                   sorted((r["spans_by_type"] or {}).items())) for r in rows)
+
+
+def test_write_counters_equal_committed_files(spark, tmp_path):
+    """run_incremental takes its breaker counts and lineage rows from the
+    counters the extraction UDF adds during the results write, never from
+    reading the run back. For every run and partition they must equal
+    ``lineage_from_results`` over that run's committed rows — a counter
+    merged twice, or the frame evaluated twice, would break docs ==
+    committed rows."""
+    import pii_spark.resume as resume
+    from accented_pages import accented_pages_df
+    from pii_spark.extract import lineage_from_results
+    from pyspark.sql import types as T
+
+    rdir, ldir = str(tmp_path / "res"), str(tmp_path / "lin")
+    schema = T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("html", T.BinaryType()),
+        T.StructField("text", T.StringType()),
+    ])
+    # unbroken 20 kB runs quarantine fail-closed (see the breaker test)
+    bad = spark.createDataFrame(
+        [(f"bad{i}", None, "x" * 20000) for i in range(5)], schema)
+    first = pages_df(spark, 30, seed=12).select("url", "html", "text") \
+        .unionByName(bad)
+    accented = accented_pages_df(spark, 25, seed=12) \
+        .select("url", "html", "text").unionByName(first)
+    increments = [
+        ("q1", first, 35, 5),        # with quarantined pages
+        ("none", first, 0, 0),       # offers no new url
+        ("acc", accented, 25, 0),    # non-ASCII text
+    ]
+    for rid, pages, docs, errors in increments:
+        out = run_incremental(spark, pages, rdir, ldir, rid,
+                              num_partitions=3)
+        committed = spark.read.schema(resume._committed_schema()) \
+            .parquet(rdir).where(F.col("run_id") == rid)
+        n = committed.count()
+        errs = committed.where(F.col("error").isNotNull()).count()
+        assert (out["docs"], out["errors"]) == (n, errs) == (docs, errors)
+        want = lineage_from_results(committed, rid).collect()
+        got = spark.read.schema(resume._lineage_schema()).parquet(ldir) \
+            .where(F.col("run_id") == rid).collect()
+        assert _lineage_key(got) == _lineage_key(want), rid
+    assert resume.committed_run_ids(rdir) == ["acc", "none", "q1"]
 
 
 def test_numeric_looking_run_id_roundtrips(spark, tmp_path):
@@ -131,7 +169,7 @@ def _crash_after_results(monkeypatch):
     """Kill the increment between the results write and the lineage write."""
     import pii_spark.resume as resume
 
-    monkeypatch.setattr(resume, "lineage_from_results",
+    monkeypatch.setattr(resume, "_append_lineage",
                         lambda *a, **k: (_ for _ in ()).throw(
                             RuntimeError("crash before lineage")))
 
