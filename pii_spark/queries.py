@@ -2,10 +2,10 @@
 
 Each entry is an operator (or composition) from SURVEY.md §2 re-expressed
 Spark-first, plus an independent DuckDB oracle. Deterministic data
-construction shares SQL fragments (sqlfrag.py) verbatim on both engines;
-the operator under test is implemented twice (DataFrame API / pandas UDF on
-Spark, plain SQL on DuckDB) so the driver's compare genuinely
-cross-validates.
+construction is defined once in sqlfrag.py: the oracle embeds it inlined,
+the Spark side stages it as chained projections. The operator under test
+is implemented twice (DataFrame API / pandas UDF on Spark, plain SQL on
+DuckDB) so the driver's compare genuinely cross-validates.
 
 Float discipline: queries never emit raw aggregated doubles — money is summed
 in integer cents, ratios are floored integer per-mille/percent — so the
@@ -41,69 +41,13 @@ def register(name: str, oracle: str | None = None):
 from pii_spark.util import checksum_udf, read_table as _t  # noqa: E402
 
 
-def _with_cpf_candidate(d: DataFrame, expr: str = "doc_id") -> DataFrame:
-    """``d`` plus a ``cand`` column holding ``sf.cpf_candidate_sql(expr)``'s
-    value, built through CHAINED projections (base9 string → nine digit
-    ints → check digits → candidate) instead of the inlined sqlfrag tree.
-    The shared SQL fragment (kept verbatim for the DuckDB oracle side)
-    expands every digit reference into its own lpad(cast(..)) subtree —
-    ~100 repeats after the candidate's CASE nesting — and Catalyst's
-    subexpression elimination does not fold them, so the flattened tree
-    dominated the detector-family scans (measured ~2x the staged form at
-    sf1.0). Staging evaluates base9 once and each digit once per row;
-    values are byte-identical (every oracle-checked query embedding the
-    candidate pins it)."""
-    d = d.withColumn(
-        "__b9",
-        F.expr(f"lpad(CAST(({expr} * 7919) % 1000000000 AS STRING), 9, '0')"))
-    d = d.select(
-        "*", *[F.expr(f"CAST(substr(__b9, {i + 1}, 1) AS INT)")
-               .alias(f"__d{i + 1}") for i in range(9)])
-    s1 = " + ".join(f"__d{i + 1} * {10 - i}" for i in range(9))
-    d = d.withColumn("__c1", F.expr(
-        f"CASE WHEN (({s1}) * 10) % 11 = 10 THEN 0 "
-        f"ELSE (({s1}) * 10) % 11 END"))
-    s2 = " + ".join(f"__d{i + 1} * {11 - i}" for i in range(9)) + " + __c1 * 2"
-    d = d.withColumn("__c2", F.expr(
-        f"CASE WHEN (({s2}) * 10) % 11 = 10 THEN 0 "
-        f"ELSE (({s2}) * 10) % 11 END"))
-    d = d.withColumn("__v", F.expr(
-        "__b9 || CAST(__c1 AS STRING) || CAST(__c2 AS STRING)"))
-    d = d.withColumn("cand", F.expr(
-        f"CASE WHEN {expr} % 3 = 0 THEN substr(__v, 1, 10) || "
-        "CAST((CAST(substr(__v, 11, 1) AS INT) + 5) % 10 AS STRING) "
-        "ELSE __v END"))
-    return d.drop("__b9", "__c1", "__c2", "__v",
-                  *[f"__d{i + 1}" for i in range(9)])
+def _aug_docs(spark: SparkSession, sf_dir: str, *keep: str) -> DataFrame:
+    """``documents`` plus the staged ``sf.AUG_TEXT`` columns in ``keep``
+    (default: ``aug``)."""
+    return sf.staged(_t(spark, sf_dir, "documents"), sf.AUG_TEXT, *keep)
 
 
-def _with_aug(d: DataFrame) -> DataFrame:
-    """``d`` plus ``aug`` and ``cand``: the same augmented text
-    ``sf.aug_text_sql()`` defines, with the embedded CPF candidate built
-    once via ``_with_cpf_candidate`` and spliced in (the email/phone/CEP
-    pieces are small and stay inline)."""
-    email = ("' Contato: user' || CAST(doc_id AS STRING) || '@ex' || "
-             "CAST(doc_id % 7 AS STRING) || '.com.br'")
-    phone = ("(CASE WHEN doc_id % 2 = 0 THEN ' tel (1' || "
-             "CAST(doc_id % 9 AS STRING) || ') 9' || "
-             "lpad(CAST(doc_id % 10000 AS STRING), 4, '0') || '-' || "
-             "lpad(CAST((doc_id * 7) % 10000 AS STRING), 4, '0') "
-             "ELSE '' END)")
-    cep = ("(CASE WHEN doc_id % 3 = 0 THEN ' CEP ' || "
-           "lpad(CAST((doc_id * 13) % 90000 + 10000 AS STRING), 5, '0') "
-           "|| '-' || lpad(CAST(doc_id % 1000 AS STRING), 3, '0') "
-           "ELSE '' END)")
-    return _with_cpf_candidate(d).withColumn("aug", F.expr(
-        f"(text || {email} || {phone} || {cep} || ' CPF ' || cand "
-        "|| ' fim.')"))
-
-
-def _aug_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    return _with_aug(d).select(*d.columns, "aug")
-
-
-_AUG_FROM = f"(SELECT *, {sf.aug_text_sql()} AS aug FROM documents) d"
+_AUG_FROM = f"(SELECT *, {sf.inline(sf.AUG_TEXT)} AS aug FROM documents) d"
 
 
 # =========================================================================
@@ -173,10 +117,10 @@ def _cnpj_is_valid_sql(col: str) -> str:
            COUNT(*) AS n_total
     FROM (
       SELECT 'cnpj' AS kind, lang, {_cnpj_is_valid_sql('cand')} AS v
-      FROM (SELECT lang, {sf.cnpj_candidate_sql()} AS cand FROM documents) a
+      FROM (SELECT lang, {sf.inline(sf.CNPJ_CANDIDATE)} AS cand FROM documents) a
       UNION ALL
       SELECT 'cpf' AS kind, lang, {_cpf_is_valid_sql('cand')} AS v
-      FROM (SELECT lang, {sf.cpf_candidate_sql()} AS cand FROM documents) b
+      FROM (SELECT lang, {sf.inline(sf.CPF_CANDIDATE)} AS cand FROM documents) b
     ) u GROUP BY kind, lang ORDER BY kind, lang
     """,
 )
@@ -195,11 +139,8 @@ def checksum_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ok_cpf = checksum_udf(cpf_checksum_ok_batch)
     ok_cnpj = checksum_udf(cnpj_checksum_ok_batch)
 
-    d = _t(spark, sf_dir, "documents").select(
-        "lang",
-        F.expr(sf.cpf_candidate_sql()).alias("cpf_cand"),
-        F.expr(sf.cnpj_candidate_sql()).alias("cnpj_cand"),
-    )
+    d = sf.staged(_t(spark, sf_dir, "documents"),
+                  sf.CPF_CANDIDATE + sf.CNPJ_CANDIDATE, "cpf_cand", "cnpj_cand")
     cpf = d.select("lang", F.lit("cpf").alias("kind"),
                    ok_cpf("cpf_cand").alias("v"))
     cnpj = d.select("lang", F.lit("cnpj").alias("kind"),
@@ -225,8 +166,8 @@ def checksum_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT lang,
              ({_cpf_is_valid_sql('cand')}
               OR len(regexp_extract_all(aug, '{sf.PHONE_PAT}')) > 0) AS has_pii
-      FROM (SELECT lang, {sf.aug_text_sql()} AS aug,
-                   {sf.cpf_candidate_sql()} AS cand FROM documents) x
+      FROM (SELECT lang, {sf.inline(sf.AUG_TEXT)} AS aug,
+                   {sf.inline(sf.CPF_CANDIDATE)} AS cand FROM documents) x
     ) y GROUP BY lang ORDER BY lang
     """,
 )
@@ -237,12 +178,11 @@ def should_be_public(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ok = checksum_udf(cpf_checksum_ok_batch)
 
-    # staged aug/cand (one digit-column build feeds both — see
-    # _with_cpf_candidate); the phone test is rlike (first-match
-    # early-exit), not a full-match materialization, same boolean
-    d = _with_aug(_t(spark, sf_dir, "documents")).select(
-        "lang", "aug", "cand")
-    has_pii = ok("cand") | F.col("aug").rlike(sf.PHONE_PAT)
+    # one staged CPF candidate feeds both the text and the checksum; the
+    # phone test is rlike (first-match early-exit), not a full-match
+    # materialization, same boolean
+    d = _aug_docs(spark, sf_dir, "aug", "cpf_cand")
+    has_pii = ok("cpf_cand") | F.col("aug").rlike(sf.PHONE_PAT)
     return (
         d.withColumn("has_pii", has_pii)
         .groupBy("lang")
@@ -291,10 +231,7 @@ _PREFIX_PAT = r"^(?:Documento )?CPF(?: n[o.]?)?[: ]*"
     SELECT raw_label, regexp_replace(raw_value, '{_PREFIX_PAT}', '') AS value,
            COUNT(*) AS n
     FROM (
-      SELECT CASE WHEN doc_id % 4 = 0 THEN 'CPF: '
-                  WHEN doc_id % 4 = 1 THEN 'CPF no '
-                  WHEN doc_id % 4 = 2 THEN 'Documento CPF '
-                  ELSE '' END || {sf.cpf_valid_sql()} AS raw_value,
+      SELECT {sf.SANITIZE_PREFIX} || {sf.inline(sf.CPF_VALID)} AS raw_value,
              'DOC_PESSOAL' AS raw_label
       FROM documents WHERE doc_id < 200
     ) r
@@ -304,13 +241,9 @@ _PREFIX_PAT = r"^(?:Documento )?CPF(?: n[o.]?)?[: ]*"
 def sanitize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value sanitization rewrite (reference P3, ner_labels.py:154-192):
     iteratively strip label prefixes, keep the cleaned literal."""
-    d = _t(spark, sf_dir, "documents").where("doc_id < 200").select(
-        F.expr(
-            "CASE WHEN doc_id % 4 = 0 THEN 'CPF: ' "
-            "WHEN doc_id % 4 = 1 THEN 'CPF no ' "
-            "WHEN doc_id % 4 = 2 THEN 'Documento CPF ' "
-            f"ELSE '' END || {sf.cpf_valid_sql()}"
-        ).alias("raw_value"),
+    docs = _t(spark, sf_dir, "documents").where("doc_id < 200")
+    d = sf.staged(docs, sf.CPF_VALID).select(
+        F.expr(f"{sf.SANITIZE_PREFIX} || cpf_valid").alias("raw_value"),
         F.lit("DOC_PESSOAL").alias("raw_label"),
     )
     return (
@@ -334,10 +267,9 @@ def sanitize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
       COUNT(*) AS n_docs
     FROM (
       SELECT
-        CASE WHEN doc_id % 2 = 0 THEN 'user' || CAST(doc_id AS STRING) || '@ex.com'
-             ELSE 'user' || CAST(doc_id AS STRING) || '@' END AS email_cand,
-        CASE WHEN doc_id % 3 = 0 THEN '(11) 98765-4321' ELSE '12 34' END AS phone_cand,
-        CASE WHEN doc_id % 5 = 0 THEN '12/06/1990' ELSE '1990-06-12' END AS date_cand
+        {sf.EMAIL_CAND} AS email_cand,
+        {sf.PHONE_CAND} AS phone_cand,
+        {sf.DATE_CAND} AS date_cand
       FROM documents
     ) c
     """,
@@ -347,10 +279,9 @@ def validate_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ner_labels.py:437-701): email shape, >=8-digit phone, dd/mm/yyyy date —
     all as builtin expressions (regexp_like + digit-count)."""
     d = _t(spark, sf_dir, "documents").select(
-        F.expr("CASE WHEN doc_id % 2 = 0 THEN 'user' || CAST(doc_id AS STRING) || '@ex.com' "
-               "ELSE 'user' || CAST(doc_id AS STRING) || '@' END").alias("email_cand"),
-        F.expr("CASE WHEN doc_id % 3 = 0 THEN '(11) 98765-4321' ELSE '12 34' END").alias("phone_cand"),
-        F.expr("CASE WHEN doc_id % 5 = 0 THEN '12/06/1990' ELSE '1990-06-12' END").alias("date_cand"),
+        F.expr(sf.EMAIL_CAND).alias("email_cand"),
+        F.expr(sf.PHONE_CAND).alias("phone_cand"),
+        F.expr(sf.DATE_CAND).alias("date_cand"),
     )
     email_ok = F.regexp_like("email_cand", F.lit(f"^{sf.EMAIL_PAT}$"))
     phone_ok = F.length(F.regexp_replace("phone_cand", "[^0-9]", "")) >= 8
@@ -374,9 +305,8 @@ _KW_PAT = r"(?:ltda|empresa|cnpj|companhia|s\.a\.)"
             THEN 'DOC_EMPRESA' ELSE 'ID_PROCESSUAL' END AS label,
            COUNT(*) AS n
     FROM (
-      SELECT {sf.cnpj_candidate_sql()} AS cand,
-             CASE WHEN doc_id % 2 = 0 THEN 'a Empresa Ltda registrada sob'
-                  ELSE 'o requerente informou o numero' END AS ctx
+      SELECT {sf.inline(sf.CNPJ_CANDIDATE)} AS cand,
+             {sf.COMPANY_CTX} AS ctx
       FROM documents
     ) m
     GROUP BY label ORDER BY label
@@ -390,13 +320,10 @@ def company_id_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ok = checksum_udf(cnpj_checksum_ok_batch)
 
-    d = _t(spark, sf_dir, "documents").select(
-        F.expr(sf.cnpj_candidate_sql()).alias("cand"),
-        F.expr("CASE WHEN doc_id % 2 = 0 THEN 'a Empresa Ltda registrada sob' "
-               "ELSE 'o requerente informou o numero' END").alias("ctx"),
-    )
+    d = sf.staged(_t(spark, sf_dir, "documents"), sf.CNPJ_CANDIDATE).select(
+        "cnpj_cand", F.expr(sf.COMPANY_CTX).alias("ctx"))
     label = F.when(
-        ok("cand") & F.regexp_like(F.lower("ctx"), F.lit(_KW_PAT)),
+        ok("cnpj_cand") & F.regexp_like(F.lower("ctx"), F.lit(_KW_PAT)),
         F.lit("DOC_EMPRESA"),
     ).otherwise(F.lit("ID_PROCESSUAL"))
     return (
@@ -428,28 +355,6 @@ def excerpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", exc.alias("excerpt")).orderBy("doc_id")
 
 
-# Deterministic redaction fixture, derivable in both dialects: each doc is
-# p1 || v1 || p2 || v2 || p3 with spans over v1 (DOC_PESSOAL) / v2 (CONTATO)
-# plus a non-PII ORG_JURIDICA span over p3's first chars on m=0 rows. The
-# m-residues cover the splice edges: span at offset 0 (m=1 starts with v1),
-# adjacent spans (m=2 has empty p2), span at end-of-text (m=1 ends with
-# v2), and zero-span documents (m=3).
-_REDACT_PARTS = """
-  SELECT doc_id,
-    CASE doc_id % 4 WHEN 0 THEN 'Registro publico ' WHEN 1 THEN ''
-         WHEN 2 THEN 'Doc ' ELSE 'Texto sem dados pessoais aqui.' END AS p1,
-    CASE WHEN doc_id % 4 = 3 THEN '' ELSE {cpf} END AS v1,
-    CASE doc_id % 4 WHEN 0 THEN ' contato ' WHEN 1 THEN ' e '
-         ELSE '' END AS p2,
-    CASE WHEN doc_id % 4 = 3 THEN ''
-         ELSE 'user' || CAST(doc_id AS {strtype}) || '@exemplo.gov.br'
-    END AS v2,
-    CASE doc_id % 4 WHEN 0 THEN ' orgao fim.' WHEN 2 THEN ' final'
-         ELSE '' END AS p3
-  FROM documents WHERE doc_id < 200
-"""
-
-
 @register(
     "redact",
     oracle=f"""
@@ -460,7 +365,8 @@ _REDACT_PARTS = """
               || p3 AS tag_redacted,
            p1 || repeat('*', length(v1)) || p2 || repeat('*', length(v2))
               || p3 AS mask_redacted
-    FROM ({_REDACT_PARTS.format(cpf=sf.cpf_valid_sql(), strtype="VARCHAR")}) t
+    FROM ({sf.REDACT_PARTS.format(
+        cpf=sf.inline(sf.CPF_VALID), strtype="VARCHAR", documents="documents")}) t
     ORDER BY doc_id
     """,
 )
@@ -474,20 +380,12 @@ def redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-span rows must come back verbatim."""
     from pii_spark.ops.redact import redact_expr  # noqa: PLC0415
 
-    d = _t(spark, sf_dir, "documents").where("doc_id < 200").selectExpr(
-        "doc_id",
-        f"CASE doc_id % 4 WHEN 0 THEN 'Registro publico ' WHEN 1 THEN '' "
-        f"WHEN 2 THEN 'Doc ' ELSE 'Texto sem dados pessoais aqui.' END "
-        f"AS p1",
-        f"CASE WHEN doc_id % 4 = 3 THEN '' ELSE {sf.cpf_valid_sql()} END "
-        f"AS v1",
-        "CASE doc_id % 4 WHEN 0 THEN ' contato ' WHEN 1 THEN ' e ' "
-        "ELSE '' END AS p2",
-        "CASE WHEN doc_id % 4 = 3 THEN '' ELSE 'user' || "
-        "CAST(doc_id AS STRING) || '@exemplo.gov.br' END AS v2",
-        "CASE doc_id % 4 WHEN 0 THEN ' orgao fim.' WHEN 2 THEN ' final' "
-        "ELSE '' END AS p3",
-    )
+    # the fixture's text verbatim; spark.sql binds {documents} to the frame
+    # that carries the staged CPF
+    d = spark.sql(
+        sf.REDACT_PARTS.format(cpf="cpf_valid", strtype="STRING",
+                               documents="{documents}"),
+        documents=sf.staged(_t(spark, sf_dir, "documents"), sf.CPF_VALID))
     d = d.selectExpr(
         "doc_id",
         "p1 || v1 || p2 || v2 || p3 AS text",
@@ -944,8 +842,7 @@ _load_ops()
 # Join family (reference J2-J4) + set ops (O5-O6) + A8
 # =========================================================================
 
-_REVIEW_LIST_SQL = ("SELECT 'user' || CAST(doc_id AS STRING) || '@ex' || "
-                    "CAST(doc_id % 7 AS STRING) || '.com.br' AS value "
+_REVIEW_LIST_SQL = (f"SELECT {sf.REVIEW_EMAIL} AS value "
                     "FROM documents WHERE doc_id % 5 = 0")
 
 
@@ -974,8 +871,7 @@ def review_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     review = (
         _t(spark, sf_dir, "documents")
         .where("doc_id % 5 = 0")
-        .select(F.expr("'user' || CAST(doc_id AS STRING) || '@ex' || "
-                       "CAST(doc_id % 7 AS STRING) || '.com.br'").alias("value"))
+        .select(F.expr(sf.REVIEW_EMAIL).alias("value"))
     )
     kept = det.join(F.broadcast(review), "value", "left_semi")
     return kept.groupBy("lang").agg(F.count("*").alias("n_kept")).orderBy("lang")
@@ -1005,17 +901,19 @@ def review_add_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty_spans = F.expr(
         "CAST(array() AS array<struct<type:string,start:int,end:int,"
         "value:string,conf:double,n_tokens:int>>)")
+    # coalesce: a NULL text finds no value on either side, and a
+    # non-nullable text leaves no inferred isnotnull filter for Catalyst to
+    # push below the staged projections, which would inline the whole chain
     d = _aug_docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("url"),
-        F.col("aug").alias("extracted_text"),
+        F.coalesce("aug", F.lit("")).alias("extracted_text"),
         empty_spans.alias("spans"),
     )
     review = (
         _t(spark, sf_dir, "documents")
         .where("doc_id % 5 = 0")
         .select(F.lit("CONTATO").alias("type"),
-                F.expr("'user' || CAST(doc_id AS STRING) || '@ex' || "
-                       "CAST(doc_id % 7 AS STRING) || '.com.br'").alias("value"))
+                F.expr(sf.REVIEW_EMAIL).alias("value"))
     )
     out = apply_missing(d, review)
     return (
@@ -1113,7 +1011,7 @@ def interval_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     v AS (
       SELECT 'CONTATO' AS label, value, doc_id, pos FROM ev
       UNION ALL
-      SELECT 'DOC_PESSOAL' AS label, {sf.cpf_candidate_sql()} AS value,
+      SELECT 'DOC_PESSOAL' AS label, {sf.inline(sf.CPF_CANDIDATE)} AS value,
              doc_id, 1 AS pos
       FROM documents
     ),
@@ -1152,23 +1050,22 @@ def distinct_values_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     same evidence, one registry slot; the driver reports at most 50 rows.)"""
     from pyspark.sql import Window  # noqa: PLC0415
 
-    d = _aug_docs(spark, sf_dir)
-    ev = d.select(
+    def value(label, v, pos):
+        return F.struct(F.lit(label).alias("label"), v.alias("value"),
+                        pos.alias("pos"))
+
+    # one pass per doc: its detected emails and its CPF candidate, which
+    # the augmented text already staged, exploded together
+    emails = F.regexp_extract_all(F.col("aug"), F.lit(sf.EMAIL_PAT), F.lit(0))
+    v = _aug_docs(spark, sf_dir, "aug", "cpf_cand").select(
         "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.col("aug"), F.lit(sf.EMAIL_PAT), F.lit(0))
-        ).alias("pos0", "value"),
-    ).select(
-        F.lit("CONTATO").alias("label"), "value", "doc_id",
-        (F.col("pos0") + 1).alias("pos"),
-    )
-    cpfs = _t(spark, sf_dir, "documents").select(
-        F.lit("DOC_PESSOAL").alias("label"),
-        F.expr(sf.cpf_candidate_sql()).alias("value"),
-        "doc_id", F.lit(1).alias("pos"),
+        F.explode(F.concat(
+            F.transform(emails, lambda x, i: value("CONTATO", x, i + 1)),
+            F.array(value("DOC_PESSOAL", F.col("cpf_cand"), F.lit(1))),
+        )).alias("v"),
     )
     firsts = (
-        ev.unionByName(cpfs)
+        v.select("v.label", "v.value", "doc_id", "v.pos")
         .groupBy("label", "value")
         .agg(F.min(F.col("doc_id") * 100000 + F.col("pos")).alias("fk"))
     )
@@ -1198,7 +1095,7 @@ def distinct_values_report(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(len(list_distinct(list_concat(detected, expected)))) AS BIGINT) AS n_union
     FROM (
       SELECT lang, regexp_extract_all(aug, '{sf.EMAIL_PAT}') AS detected,
-             ['user' || CAST(doc_id AS STRING) || '@ex' || CAST(doc_id % 7 AS STRING) || '.com.br',
+             [{sf.REVIEW_EMAIL},
               'other@nowhere.org'] AS expected
       FROM {_AUG_FROM}
     ) s GROUP BY lang ORDER BY lang
@@ -1209,11 +1106,7 @@ def array_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersection for strict span match) as builtin higher-order functions."""
     d = _aug_docs(spark, sf_dir)
     detected = F.regexp_extract_all(F.col("aug"), F.lit(sf.EMAIL_PAT), F.lit(0))
-    expected = F.array(
-        F.expr("'user' || CAST(doc_id AS STRING) || '@ex' || "
-               "CAST(doc_id % 7 AS STRING) || '.com.br'"),
-        F.lit("other@nowhere.org"),
-    )
+    expected = F.array(F.expr(sf.REVIEW_EMAIL), F.lit("other@nowhere.org"))
     return (
         d.select(
             "lang",

@@ -36,6 +36,22 @@ def normalize(df):
     return df
 
 
+def mismatch(sdf, odf) -> str | None:
+    """Why the Spark frame ``sdf`` differs from the oracle frame ``odf``
+    (column names, row count, then order-insensitive values), or None."""
+    s, o = normalize(sdf), normalize(odf)
+    if list(s.columns) != list(o.columns):
+        return f"column mismatch {list(s.columns)} vs {list(o.columns)}"
+    if len(s) != len(o):
+        return f"row count {len(s)} vs {len(o)}"
+    if not s.equals(o):
+        bad = (s != o).any(axis=1)
+        return (f"{int(bad.sum())} differing rows\n"
+                f"  spark: {s[bad].head(3).to_dict('records')}\n"
+                f"  oracle: {o[bad].head(3).to_dict('records')}")
+    return None
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
@@ -55,9 +71,11 @@ def main() -> int:
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     only = {n for n in args.only.split(",") if n}
     failures = []
+    ran = 0
     for name, fn in QUERIES.items():
         if only and name not in only:
             continue
+        ran += 1
         t0 = time.time()
         try:
             sdf = fn(spark, args.sf_dir).toPandas()
@@ -77,27 +95,15 @@ def main() -> int:
             failures.append((name, f"DUCKDB ERROR: {e}"))
             print(f"FAIL {name}: duckdb error: {str(e)[:500]}")
             continue
-        s, o = normalize(sdf), normalize(odf)
-        if list(s.columns) != list(o.columns):
-            failures.append((name, f"columns {list(s.columns)} != {list(o.columns)}"))
-            print(f"FAIL {name}: column mismatch {list(s.columns)} vs {list(o.columns)}")
+        why = mismatch(sdf, odf)
+        if why is not None:
+            failures.append((name, why))
+            print(f"FAIL {name}: {why}")
             continue
-        if len(s) != len(o):
-            failures.append((name, f"rows {len(s)} != {len(o)}"))
-            print(f"FAIL {name}: row count {len(s)} vs {len(o)}")
-            continue
-        if not s.equals(o):
-            diff = (s != o)
-            bad = diff.any(axis=1)
-            failures.append((name, f"{int(bad.sum())} differing rows"))
-            print(f"FAIL {name}: {int(bad.sum())} differing rows")
-            print("  spark:", s[bad].head(3).to_dict("records"))
-            print("  oracle:", o[bad].head(3).to_dict("records"))
-            continue
-        print(f"ok   {name}: {len(s)} rows match ({time.time() - t0:.1f}s)")
+        print(f"ok   {name}: {len(sdf)} rows match ({time.time() - t0:.1f}s)")
 
     spark.stop()
-    print(f"\n{len(QUERIES) - len(failures)}/{len(QUERIES) if not only else len(only)} queries pass")
+    print(f"\n{ran - len(failures)}/{ran} queries pass")
     if failures:
         for n, msg in failures:
             print(f"  FAILED {n}: {msg[:300]}")

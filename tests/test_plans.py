@@ -16,6 +16,7 @@ import re
 import pytest
 
 from pii_spark.queries import QUERIES
+from test_oracle_parity import FIXTURE_QUERIES
 
 
 def _plan(df) -> str:
@@ -248,3 +249,21 @@ def test_frame_sample_meta_join_no_cartesian(spark, sfd):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "MapInPandas" in plan
+
+
+@pytest.mark.parametrize("name", FIXTURE_QUERIES)
+def test_fixture_algebras_staged_not_inlined(spark, sfd, name):
+    """No optimized-plan node repeats a check-digit base (CPF ``* 7919``,
+    CNPJ ``* 104729``): the Spark side builds the fixtures through
+    sqlfrag.staged, one projection per stage, and each stage reads the
+    base's column. The inlined expression repeats the base in every digit
+    reference and Catalyst does not fold the copies (checksum_validate's
+    plan read 219 and 291). A frame read by two branches of a self-join
+    is planned twice, so the count is per node, not per plan."""
+    plan = QUERIES[name](spark, sfd)._jdf.queryExecution() \
+        .optimizedPlan().toString()
+    for node in plan.splitlines():
+        assert node.count("* 7919") <= 1, node[:200]
+        assert node.count("* 104729") <= 1, node[:200]
+    if name == "checksum_validate":  # one chain per candidate, plan-wide
+        assert (plan.count("* 7919"), plan.count("* 104729")) == (1, 1)
