@@ -23,13 +23,35 @@ Spec (deterministic, document order):
    stripped. Kept blocks join with "\n\n".
 6. Empty/undecodable html → "".
 
+Production does not run the stdlib parser: ``_scan_blocks`` walks the
+document once with the parser's OWN compiled regexes — imported, not
+re-derived, so tokenization cannot drift — and fuses steps 2-3 inline,
+which removes the per-event method dispatch, skips entity-unescape and
+slicing for data inside dropped subtrees, and skips attribute value
+processing for everything but class/id. Step 1 read literally (the
+``HTMLParser`` callbacks) is the oracle in tests/oracles/html_extract.py;
+the golden suite plus differential fuzz over synth pages and adversarial
+markup pin the scanner to it byte for byte.
+
 Pure stdlib; runs vectorized over Arrow batches in the Spark engine.
 """
 
 from __future__ import annotations
 
 import re
-from html.parser import HTMLParser
+from html import unescape as _unescape
+from html.parser import (  # CPython's own tolerant regexes
+    attrfind_tolerant as _ATTRFIND,
+    commentclose as _COMMENTCLOSE,
+    endtagfind as _ENDTAGFIND,
+    locatestarttagend_tolerant as _LOCATESTARTTAGEND,
+    tagfind_tolerant as _TAGFIND,
+)
+from _markupbase import (  # marked-section regexes
+    _declname_match as _DECLNAME_MATCH,
+    _markedsectionclose as _MARKEDSECTIONCLOSE,
+    _msmarkedsectionclose as _MSMARKEDSECTIONCLOSE,
+)
 
 _DROP_SUBTREE = frozenset({
     "script", "style", "noscript", "template", "svg", "head", "nav",
@@ -59,139 +81,6 @@ _VOID_TAGS = frozenset({
     "meta", "param", "source", "track", "wbr",
 })
 
-
-class _Block:
-    __slots__ = ("tag", "parts", "link_chars")
-
-    def __init__(self, tag: str):
-        self.tag = tag
-        self.parts: list[str] = []
-        self.link_chars = 0
-
-    def text(self) -> str:
-        return _WS_RUN.sub(" ", "".join(self.parts)).strip()
-
-
-class _ContentParser(HTMLParser):
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.blocks: list[_Block] = []
-        self._cur = _Block("body")
-        self._drop_depth = 0
-        self._link_depth = 0
-        # Open-element stack: (tag, adds_drop, adds_link). End tags pop by
-        # name with implied-end-tag recovery (everything above the matched
-        # element is closed too), so unclosed tags — <li>/<p> without end
-        # tags are valid HTML, unclosed <a> is ubiquitous in the wild —
-        # cannot leak drop/link state over the rest of the document.
-        self._stack: list[tuple[str, bool, bool]] = []
-
-    def updatepos(self, i: int, j: int) -> int:
-        # stdlib tracks (lineno, offset) purely for getpos()/error messages,
-        # which this extractor never reads — the per-chunk line counting is
-        # ~10% of parse time on tag-dense pages. Parsing decisions never
-        # depend on position, so skipping the bookkeeping cannot change
-        # output (golden + 1000-case fuzz suites pin byte-identity).
-        return j
-
-    # -- helpers --
-    def _flush(self, next_tag: str) -> None:
-        if self._cur.parts:
-            self.blocks.append(self._cur)
-        self._cur = _Block(next_tag)
-
-    @staticmethod
-    def _is_boiler(attrs: list[tuple[str, str | None]]) -> bool:
-        for k, v in attrs:
-            if k in ("class", "id") and v and BOILERPLATE_HINT.search(v):
-                return True
-        return False
-
-    def _pop_entry(self, entry: tuple[str, bool, bool]) -> None:
-        _tag, adds_drop, adds_link = entry
-        if adds_drop:
-            self._drop_depth -= 1
-        if adds_link and self._link_depth:
-            self._link_depth -= 1
-
-    # -- parser events --
-    def handle_starttag(self, tag: str, attrs: list[tuple[str, str | None]]) -> None:
-        adds_drop = tag in _DROP_SUBTREE or self._is_boiler(attrs)
-        adds_link = tag == "a" and not adds_drop and not self._drop_depth
-        if tag not in _VOID_TAGS:
-            self._stack.append((tag, adds_drop, adds_link))
-        if adds_drop:
-            # Void tags are never pushed, so nothing would ever decrement the
-            # counter: a boilerplate-classed <img>/<input> must not start a
-            # drop (it has no content to drop anyway).
-            if tag not in _VOID_TAGS:
-                self._drop_depth += 1
-            return
-        if self._drop_depth:
-            return
-        if adds_link:
-            self._link_depth += 1
-        if tag in _BLOCK_TAGS:
-            self._flush(tag)
-
-    def handle_endtag(self, tag: str) -> None:
-        for i in range(len(self._stack) - 1, -1, -1):
-            if self._stack[i][0] == tag:
-                while len(self._stack) > i:
-                    self._pop_entry(self._stack.pop())
-                break
-        # Flush on the MATCHED element being a block tag (or a stray block end
-        # tag — </br>/</p> with no open element occur in wild HTML), provided
-        # the parser is no longer inside a dropped subtree. Using the current
-        # drop state rather than the pre-pop state means closing a block that
-        # wraps an open boilerplate child (<div>text<span class="ad">…</div>)
-        # still flushes the accumulated block.
-        if tag in _BLOCK_TAGS and not self._drop_depth:
-            self._flush("body")
-
-    def handle_data(self, data: str) -> None:
-        if self._drop_depth or not data:
-            return
-        self._cur.parts.append(data)
-        if self._link_depth:
-            self._cur.link_chars += len(data)
-
-    def close(self) -> None:  # flush the trailing block
-        super().close()
-        if self._cur.parts:
-            self.blocks.append(self._cur)
-            self._cur = _Block("body")
-
-
-# ---------------------------------------------------------------------------
-# Fast single-pass scanner — the production path.
-#
-# _ContentParser above IS the frozen spec (step 1: "parse with the stdlib
-# HTMLParser"); it stays as the differential ORACLE. The scanner below walks
-# the document once with the stdlib parser's OWN compiled regexes — imported,
-# not re-derived, so tokenization cannot drift — and fuses the content logic
-# (drop subtrees, block flush, link chars) inline, which removes the
-# per-event method dispatch, skips entity-unescape and slicing for data
-# inside dropped subtrees, and skips attribute value processing for
-# everything but class/id. Byte-identity vs the HTMLParser path is pinned by
-# the golden suite plus a differential fuzz test over synth pages and
-# adversarial markup (tests/test_html_extract.py).
-# ---------------------------------------------------------------------------
-
-from html import unescape as _unescape  # noqa: E402  (single import site)
-from html.parser import (  # noqa: E402 — CPython's own tolerant regexes
-    attrfind_tolerant as _ATTRFIND,
-    commentclose as _COMMENTCLOSE,
-    endtagfind as _ENDTAGFIND,
-    locatestarttagend_tolerant as _LOCATESTARTTAGEND,
-    tagfind_tolerant as _TAGFIND,
-)
-from _markupbase import (  # noqa: E402 — marked-section regexes
-    _declname_match as _DECLNAME_MATCH,
-    _markedsectionclose as _MARKEDSECTIONCLOSE,
-    _msmarkedsectionclose as _MSMARKEDSECTIONCLOSE,
-)
-
 _CDATA_CLOSE = {
     # set_cdata_mode's exact pattern, precompiled for the two CDATA elements
     "script": re.compile(r"</\s*script\s*>", re.IGNORECASE),
@@ -205,7 +94,7 @@ _MARKED_MS = frozenset({"if", "else", "endif"})
 # the subset the stdlib's parse is unambiguous and identical: simple ASCII
 # tag name, well-formed attributes (quoted values without <>&, or bare
 # values without quote/=/</&), terminated by '>' or '/>'. Anything else
-# falls back to the faithful slow path above. Differential fuzz pins the
+# takes the faithful slow path in _scan_blocks. Differential fuzz pins the
 # equivalence.
 _SIMPLE_START = re.compile(
     # The (?=...) after the name is load-bearing: stdlib tagfind_tolerant
@@ -236,8 +125,8 @@ _ASCII_LETTERS = frozenset(
 
 def _scan_blocks(raw: str) -> list[tuple[str, list[str], int]]:
     """One pass over ``raw`` producing ``(tag, parts, link_chars)`` blocks —
-    the same event stream _ContentParser sees, mirroring CPython's
-    ``HTMLParser.goahead`` control flow for a single full-buffer feed
+    the block stream the stdlib parser's callbacks build, mirroring
+    CPython's ``HTMLParser.goahead`` control flow for a single full-buffer feed
     (feed + close is equivalent: the incremental branches only DEFER work
     to the close() pass, they never split a data segment)."""
     n = len(raw)
@@ -574,34 +463,9 @@ def _decode_html(b: bytes) -> str:
         return b.decode("windows-1252", errors="replace")
 
 
-def html_to_text(html: bytes | str | None) -> str:
-    """Extract main-content text from raw HTML bytes (or str) per the frozen
-    spec above. Returns "" for empty/undecodable input; never raises."""
-    if html is None:
-        return ""
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        try:
-            html = _decode_html(bytes(html))
-        except Exception:
-            return ""
-    if not html.strip():
-        return ""
-    # Tag-free fast path: with no '<' (no markup) and no '&' (no entities to
-    # decode) the parser would emit the whole input as ONE body block, so the
-    # keep rule reduces to the >=25-chars check on the normalized text (link
-    # ratio is 0). Byte-identical to the parser path — pinned by a property
-    # test — at ~20x the throughput for plain-text payloads.
-    if "<" not in html and "&" not in html:
-        txt = _WS_RUN.sub(" ", html).strip()
-        return txt if len(txt) >= 25 else ""
-    try:
-        return _keep_blocks(_scan_blocks(html))
-    except Exception:
-        return ""
-
-
 def html_to_text_strict(html: bytes | str | None) -> str:
-    """``html_to_text`` that lets a PARSER CRASH surface instead of
+    """Extract main-content text from raw HTML bytes (or str) per the frozen
+    spec above; "" for empty input. A PARSER CRASH surfaces instead of
     returning "" (the pipeline path, mirroring ``pdf_to_text_strict``): a
     page the parser could not walk must quarantine fail-closed, not be
     recorded as publishable-with-no-spans — '' cannot distinguish "all
@@ -614,26 +478,21 @@ def html_to_text_strict(html: bytes | str | None) -> str:
         html = _decode_html(bytes(html))
     if not html.strip():
         return ""
+    # Tag-free fast path: with no '<' (no markup) and no '&' (no entities to
+    # decode) the parser would emit the whole input as ONE body block, so the
+    # keep rule reduces to the >=25-chars check on the normalized text (link
+    # ratio is 0). Byte-identical to the parser path — pinned by a property
+    # test — at ~20x the throughput for plain-text payloads.
     if "<" not in html and "&" not in html:
         txt = _WS_RUN.sub(" ", html).strip()
         return txt if len(txt) >= 25 else ""
     return _keep_blocks(_scan_blocks(html))
 
 
-def _html_to_text_parsed(html: str, strict: bool = False) -> str:
-    """The HTMLParser ORACLE path (the frozen spec's literal step 1-6).
-
-    No longer on the production path — _scan_blocks replaced it for ~4x
-    parse throughput — but kept as the executable spec: the differential
-    fuzz suite asserts scanner output byte-matches this on goldens, synth
-    corpus pages, and adversarial markup."""
-    parser = _ContentParser()
+def html_to_text(html: bytes | str | None) -> str:
+    """Lenient ``html_to_text_strict``: "" for empty, undecodable or
+    unparseable input (or a non-text argument); never raises."""
     try:
-        parser.feed(html)
-        parser.close()
+        return html_to_text_strict(html)
     except Exception:
-        if strict:
-            raise
         return ""
-    return _keep_blocks(
-        [(b.tag, b.parts, b.link_chars) for b in parser.blocks])

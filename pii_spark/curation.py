@@ -323,7 +323,6 @@ def assemble_mix(
     host_col: str = "host",
     id_col: str = "doc_id",
     text_col: str = "text",
-    eager: bool = True,
 ) -> DataFrame:
     """The training-mix DAG that runs AFTER ``curate``: benchmark
     decontamination → per-host token cap → per-source token budgets,
@@ -360,8 +359,7 @@ def assemble_mix(
     is one corpus scan plus anti-joins against in-memory id frames.
     Checkpointed id frames are self-contained (block loss is not
     lineage-recoverable — acceptable for ids, rejected for corpora,
-    same trade as ``curate``); pass ``eager=False`` to keep the plan
-    fully lazy when composing over a tiny or already-persisted corpus.
+    same trade as ``curate``).
     """
     if cfg.decontaminate_n is None and (
             benchmarks is not None or bench_keys is not None):
@@ -377,7 +375,7 @@ def assemble_mix(
         # skinny (id, reason) frame: checkpoint so downstream stages and
         # the final stitch replay anti-joins against a materialized frame
         # instead of re-running this stage's (and its ancestors') DAG
-        return ids.localCheckpoint(eager=True) if eager else ids
+        return ids.localCheckpoint(eager=True)
 
     losers: list[DataFrame] = []  # (id, reason) frames, stage order
     live = d

@@ -41,46 +41,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _tokens(text_col: str) -> Column:
-    """Lowercase whitespace tokens of ``text_col`` (doc-local)."""
-    return F.filter(F.split(F.lower(text_col), r"\s+"), lambda t: t != "")
-
-
-def _grams(toks: Column, n: int) -> Column:
-    """DISTINCT word ``n``-grams from a token-array column (doc-local,
-    pure builtin expressions — no UDF, no shuffle).
-
-    ``toks`` MUST be a materialized column (an attribute from a prior
-    projection), never the tokenization expression itself: higher-order
-    lambdas are codegen-incompatible, and in interpreted mode the lambda
-    body re-evaluates per element — an embedded split() would re-run the
-    tokenizer regex once per gram position (measured on a 160k-doc
-    corpus: the embedded form burned > 6 CPU-hours where the two-step
-    form takes seconds). One ``slice`` per position keeps the body to a
-    single attribute read.
-    """
-    # guard the short-doc case explicitly: Spark's sequence(1, 0) counts
-    # DOWN to [1, 0] (unlike DuckDB's empty generate_series) and would
-    # slice out of bounds
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " ")))
-
-
 def _gram_array(text_col: str, n: int) -> Column:
-    """Production gram derivation: same frozen semantics as
-    ``_grams(_tokens(c), n)`` (lowercase, whitespace-tokenized, distinct
-    single-space-joined ``n``-grams) in ONE codegen-friendly regex pass —
+    """Production gram derivation: same frozen semantics as the HOF spec
+    ``grams(tokens(c), n)`` in tests/oracles/spark_ops.py (lowercase,
+    whitespace-tokenized, distinct single-space-joined ``n``-grams) in ONE
+    codegen-friendly regex pass —
     whitespace is normalized to single spaces once per document, then a
     zero-width match at every token start (``(?<![^ ])``, i.e. preceded
     by a space or the string start) captures the next ``n`` tokens via
     lookahead, so overlapping grams fall out of one ``regexp_extract_all``
     instead of an interpreted nested-HOF slice-and-join per position.
-    Exact-parity with the HOF form is differential-pinned (adversarial +
-    fuzz corpora, ``tests/test_decontaminate.py``), which keeps the HOF
-    form as the executable spec. NULL text carries no grams."""
+    Exact parity with the HOF spec is differential-pinned (adversarial +
+    fuzz corpora, ``tests/test_decontaminate.py``). NULL text carries no
+    grams."""
     norm = F.trim(F.regexp_replace(F.lower(text_col), r"\s+", " "))
     pat = r"(?<![^ ])(?=((?:\S+ ){%d}\S+))" % (n - 1)
     arr = F.regexp_extract_all(norm, F.lit(pat), F.lit(1))

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pii_spark.util import documents_sql
+
 _N_PERM = 8  # minhash permutations
 _BAND = 2    # rows per band -> 4 bands
 
@@ -29,7 +31,8 @@ _BAND = 2    # rows per band -> 4 bands
 # shingles) and callers must use dedup_lsh_jaccard instead.
 JACCARD_EXACT_MAX_DOCS = 200_000
 
-# dialect-shared duplicate injection: every 10th doc gets an exact copy
+# duplicate injection, one text for both engines (the Spark side runs it
+# through ``documents_sql``): every 10th doc gets an exact copy
 # (id + 1000000), every 25th a near-copy with a suffix (id + 2000000).
 _EXACT_UNION = """
   SELECT doc_id, text FROM documents
@@ -44,27 +47,6 @@ _NEAR_UNION = """
 """
 
 
-from pii_spark.util import read_table as _t  # noqa: E402
-
-
-def _exact_union_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    dup = d.where("doc_id % 10 = 0").select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text")
-    return d.unionByName(dup)
-
-
-def _near_union_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").where("doc_id < 200").select("doc_id", "text")
-    near = (
-        _t(spark, sf_dir, "documents")
-        .where("doc_id < 200 AND doc_id % 25 = 0")
-        .select((F.col("doc_id") + 2000000).alias("doc_id"),
-                F.concat("text", F.lit(" um sufixo extra anexado")).alias("text"))
-    )
-    return d.unionByName(near)
-
-
 def _shingle_arrays(df: DataFrame) -> DataFrame:
     """(doc_id, shs): each doc's DISTINCT 3-gram word shingles as an array,
     via ONE codegen ``regexp_extract_all`` pass — space runs collapse to
@@ -73,11 +55,12 @@ def _shingle_arrays(df: DataFrame) -> DataFrame:
     frozen split-on-' ' spec and ``_SHINGLES_SQL``), then a zero-width
     match at every token start captures the next 3 tokens by lookahead.
 
-    Replaces the sequence+transform HOF build (kept as ``_shingles_hof``,
-    the differential-pinned executable spec): HOF lambdas evaluate
-    interpreted per element, and the old body embedded the split()
-    expression — re-tokenizing the doc at every shingle position, which
-    made the LSH stage ~60 s per 4000 x 3.4k-token docs on 32 cores.
+    Replaces the sequence+transform HOF build (the executable spec
+    ``shingles_hof`` in tests/oracles/spark_ops.py, differential-pinned
+    against this): HOF lambdas evaluate interpreted per element, and the
+    old body embedded the split() expression — re-tokenizing the doc at
+    every shingle position, which made the LSH stage ~60 s per 4000 x
+    3.4k-token docs on 32 cores.
     Docs with fewer than 3 tokens yield an empty array; NULL text too."""
     norm = F.trim(F.regexp_replace(F.col("text"), " +", " "))
     sh = F.coalesce(
@@ -106,29 +89,6 @@ def _shingles_with_card(df: DataFrame) -> DataFrame:
     return _shingle_arrays(df).select(
         "doc_id", F.size("shs").cast("long").alias("n"),
         F.explode("shs").alias("sh"))
-
-
-def _shingles_hof(df: DataFrame) -> DataFrame:
-    """EXECUTABLE SPEC (tests only — see ``_shingles``): the original
-    sequence + transform shingle build. Docs with fewer than 3 tokens
-    yield no shingles — guarded explicitly: Spark's sequence(1, 0) counts
-    DOWN to [1, 0] (unlike DuckDB's empty generate_series), which would
-    index element_at out of bounds. Do not call on large inputs (the
-    embedded split() re-runs per shingle position in interpreted mode)."""
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    idx = F.when(
-        F.size(toks) >= 3, F.sequence(F.lit(1), F.size(toks) - 2)
-    ).otherwise(F.array().cast("array<int>"))
-    sh = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(toks, i),
-            F.element_at(toks, i + 1),
-            F.element_at(toks, i + 2),
-        ),
-    )
-    return df.select("doc_id", F.explode(F.array_distinct(sh)).alias("sh"))
 
 
 _SHINGLES_SQL = """
@@ -298,7 +258,7 @@ def dedup_jaccard_exact_smallscale(
     pairs only) must agree with on verification slices. The name and the
     ``JACCARD_EXACT_MAX_DOCS`` guard below make that contract part of
     the API, not just this docstring."""
-    docs = _near_union_df(spark, sf_dir)
+    docs = documents_sql(spark, sf_dir, _NEAR_UNION)
     # Bounded probe: limit(N+1).count() answers over/under without
     # materializing the whole corpus — at exactly the sizes this gate
     # refuses, a full count() would itself be an extra corpus pass.
@@ -343,7 +303,7 @@ def register_queries(register) -> None:
     def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Exact dedup: hash-groupBy on a content fingerprint; the shuffle
         carries (fp, doc_id) only."""
-        u = _exact_union_df(spark, sf_dir)
+        u = documents_sql(spark, sf_dir, _EXACT_UNION)
         return (
             u.select("doc_id", F.md5("text").alias("fp"))
             .groupBy("fp")
@@ -385,7 +345,7 @@ def register_queries(register) -> None:
         signatures (min over md5(perm|shingle) — identical on any engine) →
         4 bands of 2 → self-join on band key. Shuffles only (band_key,
         doc_id)."""
-        sh = _shingles(_near_union_df(spark, sf_dir))
+        sh = _shingles(documents_sql(spark, sf_dir, _NEAR_UNION))
         return _lsh_candidates(sh).orderBy("id_a", "id_b")
 
     # --- LSH-pruned Jaccard (the production composition) --------------------
@@ -429,7 +389,7 @@ def register_queries(register) -> None:
         Shuffle discipline: LSH shuffles (band_key, doc_id); verification
         shuffles (doc_id, sh) keyed to the candidate sides. Text never moves.
         """
-        u = _near_union_df(spark, sf_dir)
+        u = documents_sql(spark, sf_dir, _NEAR_UNION)
         p = _jaccard_on_candidates(u)
         return (
             p.select("id_a", "id_b",
@@ -486,7 +446,7 @@ def register_queries(register) -> None:
         non-trivial clusters are summarized. The oracle computes the same
         components via a recursive CTE (transitive closure + min) — an
         entirely independent algorithm for the same answer."""
-        u = _near_union_df(spark, sf_dir)
+        u = documents_sql(spark, sf_dir, _NEAR_UNION)
         dup = _jaccard_on_candidates(u).where("jac >= 500") \
             .select("id_a", "id_b")
         verts = u.select(F.col("doc_id").alias("id"))
@@ -529,7 +489,8 @@ def register_queries(register) -> None:
         exchange keyed only by doc-local values; measured 2x slower at
         sf1.0). The HOF lambda is the SAFE interpreted shape: O(lanes)
         over the element and accumulator, no embedded re-tokenization."""
-        u = _exact_union_df(spark, sf_dir).where("doc_id % 1000000 < 100")
+        u = documents_sql(spark, sf_dir, _EXACT_UNION) \
+            .where("doc_id % 1000000 < 100")
         arr = F.filter(F.split("text", " "), lambda t: t != "")
         staged = u.withColumn("hs", F.transform(arr, lambda t: F.md5(t)))
         hi = ("8", "9", "a", "b", "c", "d", "e", "f")

@@ -33,12 +33,6 @@ def _quant(col):
     return F.transform(col, lambda x: F.round(x * 1000).cast("long"))
 
 
-def _qdot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"),
-        lambda acc, x: acc + x)
-
-
 _QUANT_SQL = "list_transform({col}, x -> CAST(round(x * 1000) AS BIGINT))"
 _QDOT_SQL = ("list_sum(list_transform(generate_series(1, {dim}), "
              "i -> {a}[i] * {b}[i]))")
@@ -151,32 +145,13 @@ def _pair_dot_scorer(eq: DataFrame, n_queries: int):
 
 def _plane_weights(table: int, planes: int) -> np.ndarray:
     """(dim, planes) int64 weight matrix — the same global-sequence
-    formula ``_bucket_expr`` evaluates per element: plane g = table*planes
-    + j, dim i (1-based) -> ((g*64 + i) * 2654435761) % 19 - 9."""
+    formula the per-element spec ``bucket_expr`` (tests/oracles/
+    spark_ops.py) evaluates: plane g = table*planes + j, dim i (1-based)
+    -> ((g*64 + i) * 2654435761) % 19 - 9."""
     g = (np.int64(table) * planes
          + np.arange(planes, dtype=np.int64))[None, :]
     i = np.arange(1, _DIM + 1, dtype=np.int64)[:, None]
     return (g * 64 + i) * np.int64(2654435761) % 19 - 9
-
-
-def _bucket_expr(col, table: int, planes: int):
-    """Sign-bit bucket key for hash table ``table``: planes are drawn from a
-    single deterministic global sequence (global plane g = table*planes+j,
-    dim i -> integer weight ((g*64+i)*2654435761 % 19) - 9), so tables are
-    independent and both engines derive identical keys."""
-    def weight(g):
-        # NB: capture g via factory — a 3-arg lambda would be misread
-        return lambda x, i: x * (
-            ((F.lit(g) * 64 + i) * 2654435761 % 19).cast("long") - 9)
-
-    bits = []
-    for j in range(planes):
-        s = F.aggregate(
-            F.zip_with(col, F.sequence(F.lit(1), F.lit(_DIM)),
-                       weight(table * planes + j)),
-            F.lit(0).cast("long"), lambda acc, x: acc + x)
-        bits.append(F.when(s > 0, "1").otherwise("0"))
-    return F.concat(*bits)
 
 
 def knn_lsh_frame(
@@ -221,7 +196,7 @@ def knn_lsh_frame(
     # all tables' sign-bit buckets in ONE Arrow matmul per batch (the
     # per-element HOF form paid tables x planes x dim interpreted
     # dispatches per row); weights and comparisons are exact int64, so
-    # the bucket strings are byte-identical to _bucket_expr's
+    # the bucket strings are byte-identical to the HOF spec's
     wmats = np.concatenate(
         [_plane_weights(t, planes) for t in range(tables)], axis=1)
 
@@ -305,7 +280,7 @@ def register_queries(register) -> None:
         exact integer dot products, rank window per query."""
         return knn_bruteforce_frame(_t(spark, sf_dir, "embeddings"))
 
-    # oracle generation shares the plane-weight formula with _bucket_expr:
+    # oracle generation shares the plane-weight formula with _plane_weights:
     # global plane g = table*planes + j, dim i -> ((g*64+i)*2654435761 % 19)-9
     def sign_bits(t: int) -> str:
         return " || ".join(

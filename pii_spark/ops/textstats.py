@@ -430,8 +430,12 @@ def with_dup_line_stats(docs: DataFrame,
                         text_col: str = "text") -> DataFrame:
     """``docs`` plus ``dup_line_pm`` / ``dup_line_char_pm`` columns as a
     pure narrow projection (``_line_run_stats``) — docs with no non-blank
-    lines read 0 for both (the inline twin of ``dup_line_stats``'s
-    absent-row + caller-coalesce contract)."""
+    lines read 0 for both. Per doc: ``dup_line_pm`` (per-mille of non-blank
+    lines repeating an earlier line) and ``dup_line_char_pm`` (per-mille
+    of non-blank line chars inside repeated lines). The explode/groupBy
+    form is the executable spec ``dup_line_stats_hof`` in
+    tests/oracles/spark_ops.py, which the differential test pins this
+    against."""
     zero = F.lit(0).cast("long")
     tmp = docs.withColumn("__dls", _line_run_stats(text_col))
     s = F.col("__dls")
@@ -445,51 +449,6 @@ def with_dup_line_stats(docs: DataFrame,
             F.when(s["n"] > 0, F.floor(
                 s["dc"] * 1000.0 / s["tc"]).cast("long")),
             zero).alias("dup_line_char_pm"),
-    )
-
-
-def dup_line_stats(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
-    """Line-repetition half of ``repetition_stats``, standalone so callers
-    needing only the line gates skip the bigram scan entirely. Per doc:
-    ``dup_line_pm`` (per-mille of non-blank lines repeating an earlier
-    line) and ``dup_line_char_pm`` (per-mille of non-blank line chars
-    inside repeated lines). Docs with no non-blank lines are ABSENT
-    (callers coalesce to 0). Doc-local computation (``_line_run_stats``);
-    the original explode/groupBy form survives as ``dup_line_stats_hof``,
-    the executable spec the differential test pins this against."""
-    s = _line_run_stats(text_col)
-    return docs.select(F.col(id_col), s.alias("__s")).where(
-        F.col("__s.n") > 0
-    ).select(
-        id_col,
-        F.floor(F.col("__s.dups") * 1000.0 / F.col("__s.n"))
-        .cast("long").alias("dup_line_pm"),
-        F.floor(F.col("__s.dc") * 1000.0 / F.col("__s.tc"))
-        .cast("long").alias("dup_line_char_pm"),
-    )
-
-
-def dup_line_stats_hof(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """EXECUTABLE SPEC (tests only — see ``dup_line_stats``): the original
-    explode → groupBy(id, line) derivation, kept verbatim so the
-    doc-local scan stays differential-pinned against the readable form.
-    Do not call on large inputs (the exchange carries line strings keyed
-    only by doc-local values)."""
-    lines = docs.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), "\n")).alias("l")
-    ).select(
-        id_col, F.regexp_replace("l", r"^\s+|\s+$", "").alias("l"),
-    ).where(F.col("l") != "")
-    per_line = lines.groupBy(id_col, "l").agg(F.count("*").alias("c"))
-    return per_line.groupBy(id_col).agg(
-        F.floor(F.sum(F.col("c") - 1) * 1000.0 / F.sum("c"))
-        .cast("long").alias("dup_line_pm"),
-        F.floor(F.sum(F.when(F.col("c") > 1,
-                             F.col("c") * F.length("l")).otherwise(0))
-                * 1000.0 / F.sum(F.col("c") * F.length("l")))
-        .cast("long").alias("dup_line_char_pm"),
     )
 
 
@@ -514,8 +473,9 @@ def _all_grams(norm: Column, n: int) -> Column:
     once per gram position — measured 72 s for 4000 x 3.4k-token docs on
     32 cores for the gate stats; the regex form is a single linear pass
     in whole-stage codegen. Exact parity with the HOF form is pinned by
-    ``ngram_repetition_stats_hof`` differential tests. NULL text carries
-    no grams (empty array, never NULL)."""
+    differential tests against ``ngram_repetition_stats_hof``
+    (tests/oracles/spark_ops.py). NULL text carries no grams (empty
+    array, never NULL)."""
     pat = r"(?<![^ ])(?=((?:\S+ ){%d}\S+))" % (n - 1)
     return F.coalesce(F.regexp_extract_all(norm, F.lit(pat), F.lit(1)),
                       F.array().cast("array<string>"))
@@ -643,32 +603,20 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
     * ``top_bigram_char_pm`` — per-mille of token characters covered by
                              the most frequent word bigram (count x len)
 
-    All doc-local: the lines/bigram pass shuffles on (doc_id, value) —
-    keys that never cross documents — and emissions are floored per-mille
-    integers (hash-stable across engines, same idiom as quality_score).
-    Filter downstream with e.g. ``dup_line_pm < 300`` (the Gopher-family
-    thresholds); this operator only measures.
+    One narrow projection over the doc-local scans
+    (``with_ngram_repetition_stats`` + ``with_dup_line_stats``): no
+    shuffle, no join, one output row per input row whatever its id.
+    Emissions are floored per-mille integers (hash-stable across engines,
+    same idiom as quality_score). Filter downstream with e.g.
+    ``dup_line_pm < 300`` (the Gopher-family thresholds); this operator
+    only measures.
     """
-    line_stats = dup_line_stats(docs, id_col=id_col, text_col=text_col)
-
-    # top bigram via the shuffle-free doc-local scan (_run_stats)
-    top = with_ngram_repetition_stats(
-        docs.select(F.col(id_col), F.col(text_col).alias("text")),
-        top_ns=(2,), dup_ns=(), text_col="text",
-    ).select(id_col, "top_2gram_char_pm")
-    return (
-        docs.select(id_col)
-        .join(line_stats, id_col, "left")
-        .join(top, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("dup_line_pm", F.lit(0)).alias("dup_line_pm"),
-            F.coalesce("dup_line_char_pm", F.lit(0))
-            .alias("dup_line_char_pm"),
-            F.coalesce("top_2gram_char_pm", F.lit(0))
-            .alias("top_bigram_char_pm"),
-        )
-    )
+    stats = with_dup_line_stats(with_ngram_repetition_stats(
+        docs.select(id_col, text_col), top_ns=(2,), dup_ns=(),
+        text_col=text_col), text_col=text_col)
+    return stats.select(
+        id_col, "dup_line_pm", "dup_line_char_pm",
+        F.col("top_2gram_char_pm").alias("top_bigram_char_pm"))
 
 
 def ngram_repetition_stats(
@@ -695,12 +643,12 @@ def ngram_repetition_stats(
     counts in one sorted-run scan (``_run_stats``) — no explode, no
     shuffle, no join. Floored per-mille integers; ties broken (count,
     gram chars, gram) like ``repetition_stats``. The original
-    sequence+transform explode/groupBy build survives as
-    ``ngram_repetition_stats_hof``, the executable spec the differential
-    test pins this against — it both re-tokenized the doc at every gram
-    position (the interpreted-HOF hazard ``decontaminate._grams``
-    documents) and shuffled corpus-sized gram strings for what is per-doc
-    arithmetic.
+    sequence+transform explode/groupBy build is the executable spec
+    ``ngram_repetition_stats_hof`` in tests/oracles/spark_ops.py, which
+    the differential test pins this against — it both re-tokenized the
+    doc at every gram position (the interpreted-HOF hazard the
+    decontamination spec ``grams`` documents) and shuffled corpus-sized
+    gram strings for what is per-doc arithmetic.
     """
     return with_ngram_repetition_stats(
         docs.select(F.col(id_col), F.col(text_col).alias("text")),
@@ -711,67 +659,3 @@ def ngram_repetition_stats(
         *[f"dup_{n}gram_char_pm" for n in sorted(set(dup_ns))],
     )
 
-
-def ngram_repetition_stats_hof(
-    docs: DataFrame,
-    top_ns: tuple[int, ...] = (2, 3, 4),
-    dup_ns: tuple[int, ...] = (5, 10),
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """EXECUTABLE SPEC (tests only — see ``ngram_repetition_stats``): the
-    original sequence+transform gram build, kept verbatim so the
-    production regex derivation stays differential-pinned against the
-    readable HOF semantics. Do not call on large inputs: the lambda body
-    embeds the split() expression, which interpreted HOF evaluation
-    re-runs at every gram position (quadratic in document length)."""
-    ns = sorted(set(top_ns) | set(dup_ns))
-    if not ns or min(ns) < 2:
-        raise ValueError(f"n-gram sizes must be >= 2, got {ns}")
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-
-    def gram_array(n):
-        def mk(i):
-            return F.concat_ws(" ", *[
-                F.element_at(toks, i + j) for j in range(n)])
-        return F.when(
-            F.size(toks) >= n,
-            F.transform(F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                        lambda i: F.struct(F.lit(n).alias("n"),
-                                           mk(i).alias("g")))
-        ).otherwise(F.array().cast(
-            "array<struct<n:int,g:string>>"))
-
-    exploded = docs.select(
-        F.col(id_col),
-        F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t))
-        .alias("tok_chars"),
-        F.explode(F.concat(*[gram_array(n) for n in ns])).alias("x"),
-    ).select(id_col, "tok_chars", "x.n", "x.g")
-    counts = exploded.groupBy(id_col, "tok_chars", "n", "g").agg(
-        F.count("*").alias("c"))
-    glen = F.length("g") - (F.col("n") - 1)
-    per_n = counts.groupBy(id_col, "n").agg(
-        F.max(F.struct(F.col("c"), glen.alias("gl"), F.col("g"))).alias("m"),
-        F.sum(F.when(F.col("c") >= 2, F.col("c") * glen).otherwise(0))
-        .alias("dup_chars"),
-        F.first("tok_chars").alias("tc"),
-    ).select(
-        id_col, "n",
-        F.least(F.lit(1000), F.floor(
-            F.col("m.c") * F.col("m.gl") * 1000.0 / F.col("tc"))
-            .cast("long")).alias("top_pm"),
-        F.least(F.lit(1000), F.floor(
-            F.col("dup_chars") * 1000.0 / F.col("tc")).cast("long"))
-        .alias("dup_pm"),
-    )
-    agg_cols = (
-        [F.max(F.when(F.col("n") == n, F.col("top_pm")))
-         .alias(f"top_{n}gram_char_pm") for n in sorted(set(top_ns))]
-        + [F.max(F.when(F.col("n") == n, F.col("dup_pm")))
-           .alias(f"dup_{n}gram_char_pm") for n in sorted(set(dup_ns))]
-    )
-    stats = per_n.groupBy(id_col).agg(*agg_cols)
-    out_cols = [c for c in stats.columns if c != id_col]
-    return docs.select(id_col).join(stats, id_col, "left").select(
-        id_col, *[F.coalesce(c, F.lit(0)).alias(c) for c in out_cols])

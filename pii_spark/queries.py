@@ -38,7 +38,8 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-from pii_spark.util import checksum_udf, read_table as _t  # noqa: E402
+from pii_spark.util import (  # noqa: E402
+    checksum_udf, documents_sql, read_table as _t)
 
 
 def _aug_docs(spark: SparkSession, sf_dir: str, *keep: str) -> DataFrame:
@@ -1366,7 +1367,8 @@ def _curation_dag_oracle() -> str:
 # line dedup), exact copies (fires stage 3), per-doc-suffixed near copies
 # (fires stage 4 — the suffix line is UNIQUE per doc so line dedup cannot
 # collapse it back to an exact copy), plus short and repetitive rows for the
-# quality gates. Pure SQL, identical text on both engines.
+# quality gates. Pure SQL, one text for both engines (the Spark side runs it
+# through ``documents_sql``).
 _BOILER = ("'Menu Inicio Contato Sobre' || chr(10) || text || chr(10) || "
            "'Copyright 2026 Todos os direitos reservados'")
 _CURATION_CORPUS_SQL = f"""
@@ -1403,29 +1405,7 @@ def curation_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     evidence)."""
     from pii_spark.curation import CurationConfig, curate
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    boiler = F.expr(_BOILER)
-    corpus = (
-        d.where("doc_id < 250").select("doc_id", boiler.alias("text"))
-        .unionByName(
-            d.where("doc_id < 40").select(
-                (F.col("doc_id") + 1000000).alias("doc_id"),
-                boiler.alias("text")))
-        .unionByName(
-            d.where("doc_id < 250 AND doc_id % 25 = 0").select(
-                (F.col("doc_id") + 2000000).alias("doc_id"),
-                F.concat(boiler,
-                         F.lit(" um sufixo extra anexado numero "),
-                         F.col("doc_id").cast("string")).alias("text")))
-        .unionByName(
-            d.where("doc_id < 3").select(
-                (F.col("doc_id") + 3000000).alias("doc_id"),
-                F.lit("poucas palavras aqui").alias("text")))
-        .unionByName(
-            d.where("doc_id < 3").select(
-                (F.col("doc_id") + 4000000).alias("doc_id"),
-                F.expr("repeat('spam ham ', 60)").alias("text")))
-    )
+    corpus = documents_sql(spark, sf_dir, _CURATION_CORPUS_SQL)
     out = curate(corpus, CurationConfig(
         min_tokens=30, max_dup_line_pm=300, max_top_2gram_char_pm=200,
         max_dup_5gram_char_pm=300, line_dedup_max_doc_freq=5,

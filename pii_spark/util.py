@@ -12,6 +12,14 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def documents_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
+    """Registry SQL text that reads ``documents``, run by Spark over the
+    driver-provided documents table — so a corpus both engines derive from
+    ``documents`` is written once, as the text the DuckDB oracle embeds."""
+    return spark.sql("WITH documents AS (SELECT * FROM {d}) " + sql,
+                     d=read_table(spark, sf_dir, "documents"))
+
+
 def write_bucketed_table(
     df: DataFrame, table: str, bucket_col: str, n_buckets: int,
     sort_col: str | None = None,

@@ -202,15 +202,17 @@ def test_bench_keys_xor_benchmarks(frames):
 def test_gram_array_fast_path_matches_hof_reference(spark):
     """The production regex gram derivation (`_gram_array`) must be
     element-identical (as a set — both distinct) to the interpreted-HOF
-    reference (`_grams(_tokens(c), n)`) on adversarial and fuzz corpora;
+    reference (`grams(tokens(c), n)`) on adversarial and fuzz corpora;
     the HOF form is the executable spec of the frozen normalization."""
     import random
 
-    from pii_spark.ops.decontaminate import _gram_array, _grams, _tokens
+    from oracles.spark_ops import grams, tokens
+
+    from pii_spark.ops.decontaminate import _gram_array
 
     def hof(df, n):
-        return (df.select("doc_id", _tokens("text").alias("toks"))
-                  .select("doc_id", _grams(F.col("toks"), n).alias("grams")))
+        return (df.select("doc_id", tokens("text").alias("toks"))
+                  .select("doc_id", grams(F.col("toks"), n).alias("grams")))
 
     def fast(df, n):
         return df.select("doc_id", _gram_array("text", n).alias("grams"))

@@ -281,6 +281,21 @@ def test_strict_html_matches_lenient_on_wild_corpus():
         assert html_to_text_strict(h) == html_to_text(h)
 
 
+def test_lenient_html_to_text_never_raises_on_non_text():
+    """html_to_text is the lenient wrapper: whatever html_to_text_strict
+    raises on (a non-text argument, a codec that is not a text encoding)
+    reads "" instead."""
+    import pytest
+
+    from pii_core.html_extract import html_to_text_strict
+
+    for bad in (12345, ["<p>x</p>"],
+                b'<meta charset="base64"><p>texto</p>'):
+        with pytest.raises(Exception):
+            html_to_text_strict(bad)
+        assert html_to_text(bad) == ""
+
+
 def test_charset_resolution_latin1_and_declared():
     """Charset step 0: a windows-1252 page must not mojibake accented
     names (blind utf-8+replace turned 'José' into 'Jos\\ufffd' and the
@@ -309,7 +324,7 @@ def test_charset_resolution_latin1_and_declared():
 # ---------------------------------------------------------------------------
 # Scanner vs HTMLParser-oracle differential suite (the fast single-pass
 # scanner replaced the HTMLParser callbacks on the production path; the
-# _ContentParser path IS the frozen spec and stays as the oracle).
+# callback parser in tests/oracles/html_extract.py IS the frozen spec).
 # ---------------------------------------------------------------------------
 
 def _scan_out(h):
@@ -321,8 +336,10 @@ def _scan_out(h):
 
 
 def _oracle_out(h):
-    from pii_core.html_extract import _ContentParser, _keep_blocks
-    p = _ContentParser()
+    from oracles.html_extract import ContentParser
+
+    from pii_core.html_extract import _keep_blocks
+    p = ContentParser()
     try:
         p.feed(h)
         p.close()

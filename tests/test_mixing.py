@@ -674,18 +674,3 @@ def test_sample_mixture_randomized_parity_vs_naive_window(spark):
                     want_drop[d] = "over_budget"
         assert got_kept == want_kept, f"trial {trial}: kept mismatch"
         assert got_drop == want_drop, f"trial {trial}: dropped mismatch"
-
-
-def test_assemble_mix_eager_and_lazy_row_identical(plane):
-    """eager=False keeps the fully-lazy plan (no localCheckpoint jobs);
-    results must be row-identical to the default eager composition."""
-    from pii_spark.curation import MixConfig, assemble_mix
-
-    docs, bench, _, _ = plane
-    cfg = MixConfig(**MIX_CFG_KW)
-    a = {(r["doc_id"], r["drop_reason"])
-         for r in assemble_mix(docs, cfg, benchmarks=bench).collect()}
-    b = {(r["doc_id"], r["drop_reason"])
-         for r in assemble_mix(docs, cfg, benchmarks=bench,
-                               eager=False).collect()}
-    assert a == b

@@ -35,11 +35,11 @@ def test_html_to_text_bytes_never_raises(b):
 def test_html_tag_free_fast_path_matches_parser(s):
     # The fast path must be byte-identical to the full HTMLParser path for
     # every tag-free, entity-free input (the only inputs it handles).
-    from pii_core.html_extract import _html_to_text_parsed
+    from oracles.html_extract import html_to_text_parsed
 
     if not s.strip():
         return
-    assert html_to_text(s) == _html_to_text_parsed(s)
+    assert html_to_text(s) == html_to_text_parsed(s)
 
 
 @settings(max_examples=60, deadline=None)
@@ -178,17 +178,15 @@ def test_scanner_matches_htmlparser_oracle_on_any_text(s):
     oracle path on ARBITRARY unicode (markup-ish or not), including the
     exception outcome — hypothesis explores what the seeded fuzz suites
     cannot."""
-    from pii_core.html_extract import (
-        _ContentParser,
-        _keep_blocks,
-        _scan_blocks,
-    )
+    from oracles.html_extract import ContentParser
+
+    from pii_core.html_extract import _keep_blocks, _scan_blocks
 
     try:
         got = _keep_blocks(_scan_blocks(s))
     except Exception as e:  # noqa: BLE001 — exception parity asserted below
         got = ("RAISE", type(e).__name__)
-    p = _ContentParser()
+    p = ContentParser()
     try:
         p.feed(s)
         p.close()

@@ -72,6 +72,20 @@ def test_lineage_derives_from_committed_results(spark, tmp_path, monkeypatch):
     assert lineage_bytes == committed_bytes
 
 
+def _quarantined_pages(spark, n):
+    """``n`` (url, html, text) pages that quarantine fail-closed: unbroken
+    20 kB runs (see the breaker test)."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("html", T.BinaryType()),
+        T.StructField("text", T.StringType()),
+    ])
+    return spark.createDataFrame(
+        [(f"bad{i}", None, "x" * 20000) for i in range(n)], schema)
+
+
 def _lineage_key(rows):
     return sorted((r["partition_id"], r["docs"], r["bytes"],
                    sorted((r["spans_by_type"] or {}).items())) for r in rows)
@@ -87,19 +101,10 @@ def test_write_counters_equal_committed_files(spark, tmp_path):
     import pii_spark.resume as resume
     from accented_pages import accented_pages_df
     from pii_spark.extract import lineage_from_results
-    from pyspark.sql import types as T
 
     rdir, ldir = str(tmp_path / "res"), str(tmp_path / "lin")
-    schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-    ])
-    # unbroken 20 kB runs quarantine fail-closed (see the breaker test)
-    bad = spark.createDataFrame(
-        [(f"bad{i}", None, "x" * 20000) for i in range(5)], schema)
     first = pages_df(spark, 30, seed=12).select("url", "html", "text") \
-        .unionByName(bad)
+        .unionByName(_quarantined_pages(spark, 5))
     accented = accented_pages_df(spark, 25, seed=12) \
         .select("url", "html", "text").unionByName(first)
     increments = [
@@ -270,6 +275,74 @@ def test_adopt_crashed_run_salvages_landed_results(
     out = run_incremental(spark, pages_df(spark, 12, seed=3), rdir, ldir,
                           "r3", num_partitions=2)
     assert out["docs"] == 0  # nothing left to extract
+
+
+def test_adopt_before_lineage_crash_matches_counter_lineage(
+        spark, tmp_path, monkeypatch):
+    """A run that crashed between its results write and its lineage append
+    left no lineage, so adoption derives it from the committed rows
+    (``lineage_from_results``). Per partition it must equal the lineage a
+    clean run of the same pages writes from the write's counters —
+    quarantined and non-ASCII pages included."""
+    import pii_spark.resume as resume
+    from accented_pages import accented_pages_df
+
+    pages = accented_pages_df(spark, 20, seed=14) \
+        .select("url", "html", "text") \
+        .unionByName(pages_df(spark, 15, seed=14)
+                     .select("url", "html", "text")) \
+        .unionByName(_quarantined_pages(spark, 3))
+
+    rdir, ldir = str(tmp_path / "res"), str(tmp_path / "lin")
+    _crash_after_results(monkeypatch)
+    with pytest.raises(RuntimeError, match="crash"):
+        run_incremental(spark, pages, rdir, ldir, "r1", num_partitions=3)
+    monkeypatch.undo()
+    assert not resume._lineage_has_run(ldir, "r1")
+    assert resume.adopt_crashed_runs(spark, rdir, ldir) == ["r1"]
+
+    clean_r, clean_l = str(tmp_path / "cres"), str(tmp_path / "clin")
+    out = run_incremental(spark, pages, clean_r, clean_l, "r1",
+                          num_partitions=3)
+    assert (out["docs"], out["errors"]) == (38, 3)
+
+    def lineage(d):
+        return spark.read.schema(resume._lineage_schema()).parquet(d) \
+            .where(F.col("run_id") == "r1").collect()
+
+    adopted, clean = lineage(ldir), lineage(clean_l)
+    assert sum(r["docs"] for r in adopted) == 38
+    assert _lineage_key(adopted) == _lineage_key(clean)
+
+
+def test_zero_doc_first_increment_then_normal_commit(spark, tmp_path):
+    """A first increment with no pages commits through the early return
+    (marker docs=0, no lineage dir); the rollup over the missing lineage
+    dir is an empty frame of the summary schema, and the next increment
+    commits normally."""
+    import json
+    import os
+
+    import pii_spark.resume as resume
+
+    rdir, ldir = str(tmp_path / "res"), str(tmp_path / "lin")
+    out = run_incremental(spark, pages_df(spark, 5, seed=8).limit(0),
+                          rdir, ldir, "r0", num_partitions=2)
+    assert out == {"run_id": "r0", "docs": 0, "errors": 0}
+    with open(resume._marker_path(rdir, "r0")) as f:
+        assert json.load(f) == {"run_id": "r0", "docs": 0}
+    assert not os.path.exists(ldir)
+    summ = lineage_summary(spark, ldir, rdir)
+    assert summ.schema == resume._lineage_summary_schema()
+    assert summ.collect() == []
+
+    out = run_incremental(spark, pages_df(spark, 7, seed=8), rdir, ldir,
+                          "r1", num_partitions=2)
+    assert out["docs"] == 7
+    assert resume.committed_run_ids(rdir) == ["r0", "r1"]
+    assert {r["run_id"]: r["docs"]
+            for r in lineage_summary(spark, ldir, rdir).collect()} \
+        == {"r1": 7}
 
 
 def test_adopt_refuses_after_later_increment_overlaps(

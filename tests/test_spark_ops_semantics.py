@@ -429,6 +429,29 @@ def test_line_dedup_properties_random_corpora(spark):
     assert again == once
 
 
+def test_repetition_stats_one_row_per_input_row(spark):
+    """repetition_stats measures each row from its own text: an id that
+    repeats k times yields k rows (not k^2 from joins on the id), and a
+    NULL-id row gets the stats its text has under a real id."""
+    from pii_spark.ops.textstats import repetition_stats
+
+    text_a = "linha um\nlinha um\nlinha dois\nlinha um"
+    text_b = "clique aqui clique aqui clique aqui agora"
+    rows = [(1, text_a), (1, text_b), (1, text_b), (2, text_b),
+            (3, text_a), (None, text_a)]
+    out = repetition_stats(spark.createDataFrame(
+        rows, "doc_id long, text string")).collect()
+    assert len(out) == len(rows)
+    by_id: dict = {}
+    for r in out:
+        by_id.setdefault(r["doc_id"], []).append(
+            (r["dup_line_pm"], r["dup_line_char_pm"],
+             r["top_bigram_char_pm"]))
+    assert by_id[3][0] != (0, 0, 0)  # text_a has repeated lines
+    assert by_id[None] == by_id[3]
+    assert sorted(by_id[1]) == sorted(by_id[3] + by_id[2] * 2)
+
+
 def test_ngram_repetition_stats_vs_python_oracle(spark):
     """Generalized Gopher n-gram family vs a direct Counter-based oracle,
     plus consistency: top_2gram must equal repetition_stats' bigram."""
@@ -710,10 +733,9 @@ def test_ngram_repetition_stats_matches_hof_spec(spark):
     """The production codegen-regex gram derivation must be row-identical
     to the sequence+transform executable spec on adversarial + fuzz
     corpora (incl. NULL text and non-Java-whitespace unicode spaces)."""
-    from pii_spark.ops.textstats import (
-        ngram_repetition_stats,
-        ngram_repetition_stats_hof,
-    )
+    from oracles.spark_ops import ngram_repetition_stats_hof
+
+    from pii_spark.ops.textstats import ngram_repetition_stats
 
     texts = _GRAM_ADVERSARIAL + _rand_texts() + [None]
     df = spark.createDataFrame(
@@ -728,14 +750,12 @@ def test_ngram_repetition_stats_matches_hof_spec(spark):
 
 def test_dup_line_stats_matches_hof_spec(spark):
     """The doc-local line-run scan must be row-identical to the
-    explode/groupBy executable spec — including CRLF trim identity,
-    blank-line exclusion, and the absent-row contract for docs with no
-    non-blank lines; with_dup_line_stats must read 0 for those."""
-    from pii_spark.ops.textstats import (
-        dup_line_stats,
-        dup_line_stats_hof,
-        with_dup_line_stats,
-    )
+    explode/groupBy executable spec — including CRLF trim identity and
+    blank-line exclusion; docs the spec leaves absent (no non-blank
+    lines) must read 0 in with_dup_line_stats."""
+    from oracles.spark_ops import dup_line_stats_hof
+
+    from pii_spark.ops.textstats import with_dup_line_stats
 
     texts = [
         "a\nb\na\nb\na",
@@ -751,11 +771,8 @@ def test_dup_line_stats_matches_hof_spec(spark):
     ] + _rand_texts(seed=23)
     df = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string")
-    got = {r["doc_id"]: (r["dup_line_pm"], r["dup_line_char_pm"])
-           for r in dup_line_stats(df).collect()}
     want = {r["doc_id"]: (r["dup_line_pm"], r["dup_line_char_pm"])
             for r in dup_line_stats_hof(df).collect()}
-    assert got == want
     inline = {r["doc_id"]: (r["dup_line_pm"], r["dup_line_char_pm"])
               for r in with_dup_line_stats(df).collect()}
     assert len(inline) == len(texts)  # inline keeps EVERY row
@@ -767,27 +784,31 @@ def test_shingles_match_hof_spec(spark):
     """The production codegen-regex shingle pass must emit the same
     (doc_id, sh) set as the sequence+transform spec — including tokens
     that CONTAIN tabs/newlines (split-on-' ' semantics, not backslash-s)."""
-    from pii_spark.ops.dedup import _shingles, _shingles_hof
+    from oracles.spark_ops import shingles_hof
+
+    from pii_spark.ops.dedup import _shingles
 
     texts = _GRAM_ADVERSARIAL + _rand_texts(seed=11) + [None]
     df = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string")
     got = {(r["doc_id"], r["sh"]) for r in _shingles(df).collect()}
-    want = {(r["doc_id"], r["sh"]) for r in _shingles_hof(df).collect()}
+    want = {(r["doc_id"], r["sh"]) for r in shingles_hof(df).collect()}
     assert got == want
     # both emit per-doc DISTINCT shingles, so row counts must agree too
-    assert _shingles(df).count() == _shingles_hof(df).count()
+    assert _shingles(df).count() == shingles_hof(df).count()
 
 
 def test_lsh_bucket_udf_matches_expr_spec(spark):
     """The Arrow matmul bucket derivation (knn_lsh_frame's _buckets) must
     produce byte-identical bucket strings to the per-element expression
-    spec ``_bucket_expr`` for every table."""
+    spec ``bucket_expr`` for every table."""
     import numpy as np
     from pyspark.sql import functions as F
 
+    from oracles.spark_ops import bucket_expr
+
     from pii_spark.ops.similarity import (
-        _DIM, _N_PLANES, _N_TABLES, _bucket_expr, _plane_weights, _quant)
+        _DIM, _N_PLANES, _N_TABLES, _plane_weights, _quant)
 
     rng = np.random.RandomState(5)
     rows = [(i, [float(x) for x in rng.randn(_DIM)]) for i in range(64)]
@@ -795,7 +816,7 @@ def test_lsh_bucket_udf_matches_expr_spec(spark):
     eq = df.select("vec_id", _quant("embedding").alias("e"))
     spec = eq.select(
         "vec_id", *[
-            _bucket_expr(F.col("e"), t, _N_PLANES).alias(f"b{t}")
+            bucket_expr(F.col("e"), t, _N_PLANES).alias(f"b{t}")
             for t in range(_N_TABLES)
         ]).orderBy("vec_id").collect()
     # recompute via the weight matrices the UDF uses
