@@ -257,14 +257,3 @@ def detect_spans(text: str) -> list[Span]:
             found.append(Span(m.start(), m.end(), typ, DETECTOR_CONF, ntok))
     found.sort(key=lambda s: (s.start, s.end, s.type))
     return found
-
-
-def count_matches(text: str) -> dict[str, int]:
-    """Validated match count per detector name (lineage / quick stats)."""
-    out: dict[str, int] = {}
-    for name, _typ, rx, ok in DETECTORS:
-        if name == "email":  # same '@'-anchored scan as detect_spans
-            out[name] = len(_email_spans(text or ""))
-            continue
-        out[name] = sum(1 for m in rx.finditer(text or "") if ok(m.group(0)))  # type: ignore[operator]
-    return out

@@ -2,7 +2,9 @@
 
 ``extract_page_batch`` (the Spark UDF's call), ``extract_page`` and
 ``extract_document`` all run the same cross-document batch loop; the two
-per-document entry points are one-record calls into it. The per-document
+per-document entry points are one-record calls into it. The loop has one
+emitter call form (``emit_batch``) and one decode route (a ready window of
+decode units, for every ``decode``/``aggregate`` mode). The per-document
 executable spec this loop is checked against lives in
 ``tests/oracles/pipeline.py``.
 
@@ -50,6 +52,9 @@ from pii_core.ner_stub import StubEmitter
 from pii_core.spans import Span, filter_spans, merge_and_resolve, spans_from_bio
 from pii_core.tokenizer import WordTokenizer
 
+# The pipeline calls an emitter only as ``emit_batch(texts, offsets_list)``
+# (one (T,C) array per chunk; optional ``labels`` name its label space).
+# The alias is the per-chunk call the oracle uses; both emitters offer it.
 Emitter = Callable[[str, list[tuple[int, int]]], np.ndarray]
 
 
@@ -69,8 +74,8 @@ class ExtractConfig:
     use_detectors: bool = True
     use_ner: bool = True
     tokenizer_piece_len: int = 8
-    # chunks per NER forward pass (reference --batch_size default 8,
-    # infer_pii.py:372-375); honored when the emitter provides emit_batch
+    # chunks per emit_batch forward pass (reference --batch_size default
+    # 8, infer_pii.py:372-375)
     batch_size: int = 8
     # web-scale recovery for multi-kB unbroken char runs (minified JS,
     # base64 blobs): False = reference-parity fail-fast (doc quarantined
@@ -166,9 +171,9 @@ class ExtractConfig:
 
 _PII_SET = frozenset(PII_TYPES)
 
-# Documents per cross-document batched-Viterbi call (extract_page_batch):
-# the packed DP's NumPy call overhead amortizes up to ~64 sequences, then
-# cache pressure erodes the win (measured on C=27).
+# Decode units per cross-document batched-Viterbi call: the packed DP's
+# NumPy call overhead amortizes up to ~64 sequences, then cache pressure
+# erodes the win (measured on C=27).
 _DECODE_BATCH_DOCS = 64
 # Docs buffered before decode batches are cut. Web corpora are heavy-tailed
 # (p50 ~170 tokens, p99 ~4500 on the synthetic corpus): batching FIFO would
@@ -192,18 +197,11 @@ def _label_ctx(emitter: Emitter):
     return labels_list, l2i, id2label, l2i["O"]
 
 
-def _decode_and_filter(keys, em_global, cfg: ExtractConfig, ctx,
-                       pred: list[int] | None = None) -> list[Span]:
-    """Spans from a (K,C) emission matrix. ``pred`` short-circuits the
-    decode when the label path was already computed (the cross-document
-    batched-Viterbi path) — it must be exactly what ``viterbi_bio`` would
-    return for this matrix."""
-    labels_list, _l2i, id2label, o_id = ctx
-    if pred is None:
-        if cfg.decode == "bio_viterbi":
-            pred = viterbi_bio(em_global, labels_list, o_id)
-        else:
-            pred = [int(x) for x in np.argmax(em_global, axis=-1)]
+def _decode_and_filter(keys, em_global, pred: list[int], cfg: ExtractConfig,
+                       ctx) -> list[Span]:
+    """Filtered spans from a (K,C) emission matrix and its label path
+    ``pred`` (what ``viterbi_bio``, or the argmax, gives for it)."""
+    id2label = ctx[2]
     spans = spans_from_bio(keys, pred, em_global, id2label, cfg.conf_agg)
     return filter_spans(
         spans,
@@ -217,62 +215,36 @@ def _decode_and_filter(keys, em_global, cfg: ExtractConfig, ctx,
 def _mean_logit_matrix(items, n_chunks: int, trusted_offsets: bool = False):
     """One document's global (keys, (K,C) mean-logit matrix) from its
     (chunk, offsets, emissions) stream, or None if no tokens survive.
-    ``keys`` are sorted global (start,end) char offsets.
+    Offsets are the (N,2) int64 arrays ``build_chunks_with_offsets``
+    returns; ``keys`` are sorted global (start,end) char offsets.
 
     ``trusted_offsets=True`` asserts the offsets came from a slice-stable
-    tokenizer's own scan (``build_chunks_with_offsets``), which produces
-    non-empty tokens with strictly increasing starts BY CONSTRUCTION — the
-    single-chunk fast path then skips its per-token validation loop. The
-    differential test pins trusted and untrusted results identical on that
-    provenance."""
+    tokenizer's own scan, which produces non-empty tokens with strictly
+    increasing starts BY CONSTRUCTION — the single-chunk fast path then
+    skips its validation. The differential test pins trusted and untrusted
+    results identical on that provenance."""
     # Single-chunk fast path (the common case for web pages): no overlap
     # to average, so the chunk emissions ARE the global emissions —
     # identical result to the dict accumulation with count=1 (pinned
-    # against the dict-accumulation oracle, tests/oracles/pipeline.py). A
-    # chunk with REPEATED offsets (an emitter/tokenizer adapter emitting
-    # duplicate spans) must fall through to the general path, which dedups
-    # and averages repeated keys — returning them raw here would make the
-    # result depend on whether the document happened to be single-chunk.
-    items = list(items)
+    # against the dict-accumulation oracle, tests/oracles/pipeline.py).
+    # Offsets that are all non-empty (a < b) with STRICTLY increasing
+    # starts are unique and already in the general path's sorted order;
+    # anything else (empty (0,0) specials from an adapter, repeats,
+    # disorder) falls through to the general path, which dedups, averages
+    # and sorts — returning such keys raw would make the result depend on
+    # whether the document happened to be single-chunk.
     if n_chunks == 1:
         if not items:
             return None
         ch, offs, em = items[0]
-        # One validation pass, no set-of-tuples build: offsets that are all
-        # non-empty (a < b) with STRICTLY increasing starts are unique AND
-        # already in the general path's sorted order (regex tokenizers
-        # produce exactly this shape), so the chunk emissions ARE the
-        # global emissions and — when char_start is 0 — ``offs`` itself is
-        # the keys list, zero copies. Anything else (empty offsets from a
-        # specials-emitting adapter, repeats, disorder) falls through to
-        # the general path, whose dict accumulation dedups/averages/sorts;
-        # the old set-based condition also accepted unsorted-unique keys
-        # and returned them UNSORTED, diverging from the general path's
-        # sorted order — narrowing the condition removed that corner.
-        if trusted_offsets:
-            ok = True
-        elif isinstance(offs, np.ndarray):
-            # vectorized twin of the tuple-list loop below: non-empty
-            # tokens (a < b) with strictly increasing starts
-            ok = bool((offs[:, 0] < offs[:, 1]).all()) and (
-                offs.shape[0] < 2
-                or bool((np.diff(offs[:, 0]) > 0).all()))
-        else:
-            pa = -1
-            ok = True
-            for a, b in offs:
-                if a >= b or a <= pa:
-                    ok = False
-                    break
-                pa = a
-        if ok and len(offs):
+        em = np.asarray(em, dtype=np.float32)
+        ok = trusted_offsets or (
+            bool((offs[:, 0] < offs[:, 1]).all())
+            and (offs.shape[0] < 2 or bool((np.diff(offs[:, 0]) > 0).all())))
+        # a malformed emission falls through to the general path's raise
+        if ok and len(offs) and em.shape[:1] == offs.shape[:1]:
             cs = ch.char_start
-            if isinstance(offs, np.ndarray):
-                keys = offs if cs == 0 else offs + np.int64(cs)
-            else:
-                keys = (offs if cs == 0
-                        else [(a + cs, b + cs) for a, b in offs])
-            return keys, np.asarray(em, dtype=np.float32)
+            return (offs if cs == 0 else offs + np.int64(cs)), em
 
     # Accumulate per-token logits keyed by GLOBAL (start,end) char offsets
     # so overlapping chunks average out (reference infer_pii.py:209-235).
@@ -294,12 +266,10 @@ def _mean_logit_matrix(items, n_chunks: int, trusted_offsets: bool = False):
     enc_parts: list[np.ndarray] = []
     sels: list[np.ndarray] = []
     for ch, offs, em in got:
-        o = np.asarray(offs, dtype=np.int64).reshape(-1, 2)
-        if o.shape[0] != em.shape[0]:
-            raise ValueError(
-                f"chunk offsets/emissions mismatch: {o.shape[0]} vs "
-                f"{em.shape[0]}")
-        g = o + np.int64(ch.char_start)
+        if em.shape[:1] != offs.shape[:1]:
+            raise ValueError(f"chunk offsets/emissions mismatch: "
+                             f"{offs.shape} vs {em.shape}")
+        g = offs + np.int64(ch.char_start)
         keep = g[:, 0] < g[:, 1]
         if not keep.all():
             g = g[keep]
@@ -340,31 +310,6 @@ def _mean_logit_matrix(items, n_chunks: int, trusted_offsets: bool = False):
     # sorted-key order because np.unique sorts the packed keys
     em_global = (acc / cnt[:, None]).astype(np.float32, copy=False)
     return keys, em_global
-
-
-def _decode_chunk_emissions(items, n_chunks: int, cfg: ExtractConfig,
-                            ctx, trusted_offsets: bool = False) -> list[Span]:
-    """One document's NER spans from its (chunk, offsets, emissions) stream.
-
-    ``items`` yields in CHUNK ORDER — the fp32 accumulation order — so the
-    result is byte-identical however the emissions were grouped into
-    forward calls."""
-    if cfg.aggregate == "mean_logits":
-        kg = _mean_logit_matrix(items, n_chunks, trusted_offsets)
-        if kg is None:
-            return []
-        return _decode_and_filter(kg[0], kg[1], cfg, ctx)
-
-    # aggregate == "none": per-chunk decode, shift to global offsets, merge later
-    # (reference infer_pii.py:237-275).
-    out: list[Span] = []
-    for ch, offs, em in items:
-        local = _decode_and_filter(offs, em, cfg, ctx)
-        out.extend(
-            Span(s.start + ch.char_start, s.end + ch.char_start, s.type, s.conf, s.n_tokens)
-            for s in local
-        )
-    return out
 
 
 class DocTooLargeError(ValueError):
@@ -422,7 +367,7 @@ def _page_record(url: str, extracted: str, spans: list[Span],
     }
 
 
-def _emit_group(group, emitter: Emitter, emit_batch):
+def _emit_group(group, emit_batch):
     """Emissions for one cross-document chunk group. On a batched-forward
     failure, RETRY PER CHUNK so the error is attributed to the page that
     caused it: the healthy neighbors in the group still get real emissions
@@ -432,28 +377,23 @@ def _emit_group(group, emitter: Emitter, emit_batch):
     exists to prevent."""
     texts = [ch.text for _, ch, _ in group]
     offsets = [offs for _, _, offs in group]
-    if emit_batch is not None:
-        try:
-            ems = list(emit_batch(texts, offsets))
-            if len(ems) == len(group):
-                return ems
-            # wrong count is an emitter contract bug: fall through to the
-            # per-chunk path so the miscounted batch can't silently pair
-            # emissions with the wrong chunks (zip would truncate)
-        except Exception:  # noqa: BLE001 — isolate below
-            pass
+    try:
+        ems = list(emit_batch(texts, offsets))
+        if len(ems) == len(group):
+            return ems
+        # wrong count is an emitter contract bug: fall through to the
+        # per-chunk calls so the miscounted batch can't silently pair
+        # emissions with the wrong chunks (zip would truncate)
+    except Exception:  # noqa: BLE001 — isolate below
+        pass
     out = []
     for text, offs in zip(texts, offsets):
         try:
-            if emit_batch is not None:
-                one = list(emit_batch([text], [offs]))
-                if len(one) != 1:
-                    raise RuntimeError(
-                        f"emit_batch returned {len(one)} emissions for 1 "
-                        "chunk")
-                out.append(one[0])
-            else:
-                out.append(emitter(text, offs))
+            one = list(emit_batch([text], [offs]))
+            if len(one) != 1:
+                raise RuntimeError(
+                    f"emit_batch returned {len(one)} emissions for 1 chunk")
+            out.append(one[0])
         except Exception as e:  # noqa: BLE001 — per-page quarantine
             out.append(e)
     return out
@@ -467,27 +407,35 @@ def _extract_core(records, cfg: ExtractConfig, emitter: Emitter | None,
     (url, extracted_text, merged spans, should_be_public) or the Exception
     that page raised, in input order.
 
+    Emitter contract: the loop calls ``emitter.emit_batch(texts,
+    offsets_list)`` and nothing else. It is looked up once, before any
+    page runs, so an emitter without it aborts the call (quarantining it
+    per page would fail-close every page).
+
     Cross-DOCUMENT chunk batching: chunks from ALL documents share
-    ``emitter.emit_batch`` forward passes in groups of ``cfg.batch_size``,
+    ``emit_batch`` forward passes in groups of ``cfg.batch_size``,
     regardless of document boundaries. This generalizes the reference's
     per-document ``--batch_size`` forward batching (infer_pii.py:180-201)
     across documents: web corpora are dominated by single-chunk pages, so
     per-document batching degenerates to batch-of-1 forwards and a real GPU
     emitter starves. Here 8 single-chunk documents share one forward pass.
 
+    Decode units: a document whose last chunk is through becomes units
+    ``(keys, emissions, char_shift)`` — one mean-logit matrix on global
+    offsets (shift 0), or with ``aggregate="none"`` one per chunk on its
+    LOCAL offsets (so ``(0,0)`` specials still read as specials), shifted
+    by its ``char_start`` (reference infer_pii.py:237-275). Every config
+    decodes the same way: a ``_DECODE_WINDOW_DOCS`` ready window, its units
+    sorted longest-first and cut into sub-batches, each decoded by argmax
+    rows or ``viterbi_bio_batch`` (bit-identical to ``viterbi_bio``, the
+    per-unit retry when a batch call fails).
+
     Streaming: documents are prepared (payload → text → chunks → offsets),
     emitted, aggregated, and finalized in ONE interleaved pass — a forward
-    group fires as soon as ``batch_size`` chunks are pending; a document's
-    chunks collapse to its (keys, mean-logit matrix) the moment its last
-    chunk is through; label decode runs in cross-document groups (a
-    ``_DECODE_WINDOW_DOCS`` ready window, sorted longest-first, cut into
-    ``_DECODE_BATCH_DOCS`` packed sub-batches — bit-identical batched
-    Viterbi). Peak extra memory is O(batch_size × chunk +
-    _DECODE_WINDOW_DOCS documents' (keys, matrix, text) tuples) — the
-    WINDOW, not the sub-batch, is the buffering bound; the cell budget
-    caps only the packed float64 copy. Still far below O(Arrow batch):
-    an up-front phase split would buffer every chunk text and per-token
-    offset tuple for all ~1024 batched docs.
+    group fires as soon as ``batch_size`` chunks are pending. Peak extra
+    memory is O(batch_size × chunk + _DECODE_WINDOW_DOCS documents' units
+    and text) — the WINDOW, not the sub-batch, is the buffering bound; the
+    cell budget caps only the packed float64 copy.
 
     Byte-identity: group boundaries are consecutive ``batch_size`` slices
     of the global chunk stream (independent of where document boundaries
@@ -512,18 +460,10 @@ def _extract_core(records, cfg: ExtractConfig, emitter: Emitter | None,
     elif tokenizer is None:
         tokenizer = cfg.make_tokenizer()
     ctx = _label_ctx(emitter)
-    emit_batch = getattr(emitter, "emit_batch", None)
-    step = max(1, int(cfg.batch_size)) if emit_batch is not None else 1
-    # Cross-document BATCHED Viterbi (the default decode+aggregate): docs
-    # whose emissions are complete queue their (keys, mean-logit matrix)
-    # and decode together in groups of _DECODE_BATCH_DOCS through
-    # viterbi_bio_batch — bit-identical paths, but the DP's per-step NumPy
-    # cost amortizes across the group (~3x decode speedup; decoding is the
-    # single-core hot spot when emissions are cheap). Output order is
-    # preserved: ready is FIFO in input order and flushes in order.
-    batched_viterbi = (cfg.decode == "bio_viterbi"
-                       and cfg.aggregate == "mean_logits")
+    emit_batch = emitter.emit_batch
+    step = cfg.batch_size
     labels_list, o_id = ctx[0], ctx[3]
+    argmax = cfg.decode == "argmax"
     # offsets below all come from build_chunks_with_offsets over THIS
     # tokenizer: slice-stable scans are strictly-increasing/non-empty by
     # construction, so the aggregation fast path may skip its validation
@@ -534,9 +474,9 @@ def _extract_core(records, cfg: ExtractConfig, emitter: Emitter | None,
     # [url, extracted, n_chunks, err, n_left, items]
     pending: deque[list] = deque()
     buf: list = []  # (doc_state, chunk, offsets) awaiting a forward group
-    # Phase-A results awaiting the batched decode, in input order:
-    # ("done", result_or_exception) | ("decode", url, extracted, keys, em)
-    ready: deque[tuple] = deque()
+    # Docs awaiting the decode, in input order: (url, extracted, units)
+    # or the page's Exception
+    ready: deque = deque()
 
     def finalize(url, extracted, ner) -> tuple | Exception:
         """NER + detector spans → merged spans + public decision."""
@@ -549,93 +489,93 @@ def _extract_core(records, cfg: ExtractConfig, emitter: Emitter | None,
         except Exception as e:  # noqa: BLE001 — per-page quarantine
             return e
 
-    def phase_a(d) -> tuple:
-        """Everything before the label decode: error routing + mean-logit
-        aggregation. Returns a ready-queue entry."""
+    def phase_a(d) -> tuple | Exception:
+        """Everything before the label decode: error routing and the
+        document's decode units."""
         url, extracted, n_chunks, err, _n_left, items = d
         if err is None:
             err = next((em for _, _, em in items
                         if isinstance(em, Exception)), None)
         if err is not None:
-            return ("done", err)
-        if not n_chunks:
-            return ("done", finalize(url, extracted, []))
-        if not batched_viterbi:
-            try:
-                ner = _decode_chunk_emissions(iter(items), n_chunks, cfg,
-                                              ctx, trusted_offs)
-            except Exception as e:  # noqa: BLE001 — per-page quarantine
-                return ("done", e)
-            return ("done", finalize(url, extracted, ner))
+            return err
         try:
+            if cfg.aggregate == "none":
+                units = []
+                for ch, offs, em in items:
+                    em = np.asarray(em)
+                    if em.shape[:1] != offs.shape[:1]:
+                        raise ValueError(f"chunk offsets/emissions mismatch: "
+                                         f"{offs.shape} vs {em.shape}")
+                    units.append((offs, em, ch.char_start))
+                return url, extracted, units
             kg = _mean_logit_matrix(items, n_chunks, trusted_offs)
         except Exception as e:  # noqa: BLE001 — per-page quarantine
-            return ("done", e)
-        if kg is None:
-            return ("done", finalize(url, extracted, []))
-        return ("decode", url, extracted, kg[0], kg[1])
+            return e
+        return url, extracted, [] if kg is None else [(kg[0], kg[1], 0)]
+
+    def decode_one(em) -> list[int]:
+        return (np.argmax(em, axis=-1).tolist() if argmax
+                else viterbi_bio(em, labels_list, o_id))
+
+    def run_sub(ems: list) -> list:
+        """Label paths for one sub-batch. A batch-level failure (or a
+        miscount) retries each unit alone, so only the failing page
+        quarantines and its healthy neighbors still decode."""
+        try:
+            got = ([decode_one(em) for em in ems] if argmax
+                   else viterbi_bio_batch(ems, labels_list, o_id))
+            if len(got) == len(ems):
+                return got
+        except Exception:  # noqa: BLE001 — isolate per unit below
+            pass
+        got = []
+        for em in ems:
+            try:
+                got.append(decode_one(em))
+            except Exception as e:  # noqa: BLE001 — per-page quarantine
+                got.append(e)
+        return got
 
     def flush_ready(drain: bool) -> None:
         while len(ready) >= _DECODE_WINDOW_DOCS or (drain and ready):
             take = [ready.popleft()
                     for _ in range(min(_DECODE_WINDOW_DOCS, len(ready)))]
-            dec = [r for r in take if r[0] == "decode"]
-            preds: dict[int, list[int] | Exception] = {}
-
-            def run_sub(sub: list[int]) -> None:
-                ems = [dec[j][4] for j in sub]
-                try:
-                    got = viterbi_bio_batch(ems, labels_list, o_id)
-                    if len(got) != len(ems):
-                        # zip would silently truncate and the preds lookup
-                        # below would then abort the whole task — same
-                        # count-contract guard as the emit_batch paths
-                        raise RuntimeError(
-                            f"viterbi_bio_batch returned {len(got)} paths "
-                            f"for {len(ems)} sequences")
-                except Exception:  # noqa: BLE001 — isolate per page below
-                    # a batch-level failure must not poison healthy
-                    # neighbors: retry each document through the
-                    # single-sequence decoder and quarantine individually
-                    got = []
-                    for em in ems:
-                        try:
-                            got.append(viterbi_bio(em, labels_list, o_id))
-                        except Exception as e:  # noqa: BLE001
-                            got.append(e)
-                for j, p in zip(sub, got):
+            ems = [u[1] for r in take if not isinstance(r, Exception)
+                   for u in r[2]]
+            # longest-first so each sub-batch holds units of similar
+            # length (decode order is free; output stays FIFO)
+            subs: list[list[int]] = []
+            cells = 0
+            for j in sorted(range(len(ems)), reverse=True,
+                            key=lambda j: ems[j].shape[0]):
+                k = int(ems[j].shape[0])
+                if (not subs or len(subs[-1]) >= _DECODE_BATCH_DOCS
+                        or cells + k > _DECODE_CELL_BUDGET):
+                    subs.append([])
+                    cells = 0
+                subs[-1].append(j)
+                cells += k
+            preds: list = [None] * len(ems)
+            for sub in subs:
+                for j, p in zip(sub, run_sub([ems[j] for j in sub])):
                     preds[j] = p
-
-            if dec:
-                # longest-first so each packed sub-batch holds documents of
-                # similar length (decode order is free; output stays FIFO)
-                order = sorted(range(len(dec)), reverse=True,
-                               key=lambda j: dec[j][4].shape[0])
-                sub: list[int] = []
-                cells = 0
-                for j in order:
-                    k = int(dec[j][4].shape[0])
-                    if sub and (len(sub) >= _DECODE_BATCH_DOCS
-                                or cells + k > _DECODE_CELL_BUDGET):
-                        run_sub(sub)
-                        sub, cells = [], 0
-                    sub.append(j)
-                    cells += k
-                if sub:
-                    run_sub(sub)
-            di = 0
+            ui = 0
             for r in take:
-                if r[0] == "done":
-                    out.append(r[1])
+                if isinstance(r, Exception):
+                    out.append(r)
                     continue
-                _, url, extracted, keys, em = r
-                pred = preds[di]
-                di += 1
-                if isinstance(pred, Exception):
-                    out.append(pred)
-                    continue
+                url, extracted, units = r
+                doc_preds = preds[ui:ui + len(units)]
+                ui += len(units)
                 try:
-                    ner = _decode_and_filter(keys, em, cfg, ctx, pred=pred)
+                    ner: list[Span] = []
+                    for (keys, em, shift), pred in zip(units, doc_preds):
+                        if isinstance(pred, Exception):
+                            raise pred
+                        spans = _decode_and_filter(keys, em, pred, cfg, ctx)
+                        ner.extend(spans if not shift else (
+                            s._replace(start=s.start + shift,
+                                       end=s.end + shift) for s in spans))
                 except Exception as e:  # noqa: BLE001 — per-page quarantine
                     out.append(e)
                     continue
@@ -645,8 +585,8 @@ def _extract_core(records, cfg: ExtractConfig, emitter: Emitter | None,
         while len(buf) >= step or (drain and buf):
             group, del_n = buf[:step], min(step, len(buf))
             del buf[:del_n]
-            for (d, ch, offs), em in zip(
-                    group, _emit_group(group, emitter, emit_batch)):
+            for (d, ch, offs), em in zip(group, _emit_group(group,
+                                                            emit_batch)):
                 d[5].append((ch, offs, em))
                 d[4] -= 1
             while pending and pending[0][4] == 0:

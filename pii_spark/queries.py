@@ -68,8 +68,9 @@ _AUG_FROM = f"(SELECT *, {sf.inline(sf.AUG_TEXT)} AS aug FROM documents) d"
     """,
 )
 def detector_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compiled-regex detector match counts per lang (detectors stage;
-    reference-equivalent: count_matches, pii_core/detectors.py)."""
+    """Compiled-regex detector match counts per lang (detectors stage:
+    JVM-side email/phone/CEP patterns, the SQL analogue of the
+    ``pii_core/detectors.py`` scans)."""
     d = _aug_docs(spark, sf_dir)
     def n(pat):
         return F.size(F.regexp_extract_all(F.col("aug"), F.lit(pat), F.lit(0)))
@@ -1044,7 +1045,8 @@ def distinct_values_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataset row order). The distributed analogue of "file order" is
     (doc_id, within-doc position): each (label, value) takes the MIN of that
     composite key, then a per-label rank yields the first 10; per-label
-    stats ride along on a broadcast-sized join. At scale the rank would be
+    stats are window aggregates over the same label partition, so the
+    per-doc work is planned once. At scale the rank would be
     pruned two-phase like evaljob.error_bucket_samples; the groupBy shuffles
     (label, value, fk) only — never text. (Merged from the round-2
     ``distinct_values_by_label`` + ``distinct_values_first_seen`` entries —
@@ -1070,20 +1072,17 @@ def distinct_values_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("label", "value")
         .agg(F.min(F.col("doc_id") * 100000 + F.col("pos")).alias("fk"))
     )
-    stats = firsts.groupBy("label").agg(
-        F.count("*").alias("n_distinct"),
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-    )
-    w = Window.partitionBy("label").orderBy("fk", "value")
-    top = (
-        firsts.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 10)
-    )
+    by_label = Window.partitionBy("label")
     return (
-        top.join(F.broadcast(stats), "label")
-        .select("label", F.col("rn").cast("long").alias("rn"), "value",
-                "n_distinct", "min_value", "max_value")
+        firsts.select(
+            "label",
+            F.row_number().over(by_label.orderBy("fk", "value"))
+            .cast("long").alias("rn"),
+            "value",
+            F.count("*").over(by_label).alias("n_distinct"),
+            F.min("value").over(by_label).alias("min_value"),
+            F.max("value").over(by_label).alias("max_value"))
+        .where(F.col("rn") <= 10)
         .orderBy("label", "rn")
     )
 

@@ -260,9 +260,6 @@ def run_incremental(
         results.withColumn("run_id", F.lit(run_id))
         .write.mode("append").partitionBy("run_id").parquet(results_dir)
     )
-    if not _exists(results_dir):  # first run over an empty input
-        _write_marker(results_dir, run_id, 0)
-        return {"run_id": run_id, "docs": 0, "errors": 0}
     # Exact, not approximate: the mapInPandas stage is the write job's
     # RESULT stage (its tasks write the files), and Spark applies a result
     # task's accumulator update once per partition, from the first

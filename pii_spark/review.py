@@ -139,27 +139,33 @@ def _recomputed_public(has_error: bool) -> F.Column:
     return F.col("error").isNull() & clean
 
 
-def add_missing(results: DataFrame, review: DataFrame) -> DataFrame:
-    """Reference ``--add-missing`` (pii_value_review.py:307-325): for each
-    reviewed (type, value) literally present in extracted_text but absent
-    from spans, count it as a candidate. Emitted as a report frame
-    (url, type, value) — occurrence offsets are doc-local and are produced
-    by the extraction UDF on the next full run."""
+def _missing_with_text(results: DataFrame, review: DataFrame) -> DataFrame:
+    """(url, type, value, txt): each reviewed (type, value) literally in a
+    row's extracted_text (``txt``, kept from the one scan that tested it)
+    but absent from its spans."""
     # empty review values are never candidates: instr(text, '') returns 1,
     # which would flag EVERY document (apply_missing's occurrence SQL has
-    # the same guard; this is the report API's copy of it)
+    # the same guard)
     pairs = F.broadcast(review.select("type", "value").distinct()
                         .where(F.length("value") > 0))
     have = results.select(
         "url", F.explode_outer("spans").alias("s")
     ).select("url", F.col("s.type").alias("type"), F.col("s.value").alias("value"))
     candidates = (
-        results.select("url", "extracted_text")
+        results.select("url", F.col("extracted_text").alias("txt"))
         .crossJoin(pairs)
-        .where(F.instr("extracted_text", F.col("value")) > 0)
-        .select("url", "type", "value")
+        .where(F.instr("txt", F.col("value")) > 0)
     )
     return candidates.join(have, ["url", "type", "value"], "left_anti")
+
+
+def add_missing(results: DataFrame, review: DataFrame) -> DataFrame:
+    """Reference ``--add-missing`` (pii_value_review.py:307-325): for each
+    reviewed (type, value) literally present in extracted_text but absent
+    from spans, count it as a candidate. Emitted as a report frame
+    (url, type, value) — occurrence offsets are doc-local and are produced
+    by the extraction UDF on the next full run."""
+    return _missing_with_text(results, review).select("url", "type", "value")
 
 
 # Greedy non-overlapping literal occurrences of `value` in `txt`, 0-based
@@ -206,10 +212,8 @@ def apply_missing(results: DataFrame, review: DataFrame) -> DataFrame:
     missing spans can be added; should_be_public is still recomputed
     fail-closed like every other row.
     """
-    cand = add_missing(results, review)
     occ = (
-        cand.join(results.select("url", F.col("extracted_text").alias("txt")),
-                  "url")
+        _missing_with_text(results, review)
         .withColumn("occ", F.expr(_GREEDY_OCC_SQL))
         .select("url", "type", "value", F.explode("occ").alias("start"))
     )

@@ -4,7 +4,6 @@ import pytest
 
 from pii_core.detectors import (
     cnpj_checksum_ok,
-    count_matches,
     cpf_checksum_ok,
     detect_spans,
 )
@@ -62,13 +61,6 @@ def test_bare_cpf_inside_phone_resolved_by_length():
     assert len(spans) == 1
     got = text[spans[0].start:spans[0].end]
     assert got == "(11) 14447-7735"
-
-
-def test_count_matches():
-    text = "a@b.co e c@d.org, CPF 529.982.247-25"
-    c = count_matches(text)
-    assert c["email"] == 2 and c["cpf"] == 1 and c["cnpj"] == 0
-    assert count_matches("") == {k: 0 for k in c}
 
 
 def test_empty_text():

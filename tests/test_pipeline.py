@@ -3,6 +3,7 @@ logic, detector/NER union, and parity of the batch core with the
 per-document oracle (tests/oracles/pipeline.py)."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from pii_core.labels import PII_TYPES
@@ -247,9 +248,9 @@ def test_batch_vs_per_page_parity_property(data):
     docs = data.draw(st.lists(st_doc, min_size=1, max_size=12))
     max_length = data.draw(st.integers(16, 64))
     stride = data.draw(st.integers(0, min(15, max_length - 3)))
-    # decode/aggregate drawn too: the non-default combinations route
-    # through extract_page_batch's single-doc finalize branch (no batched
-    # Viterbi) and must stay byte-identical there as well
+    # decode/aggregate drawn too: every combination decodes through the
+    # same batched window (argmax rows or batched Viterbi, one unit per
+    # document or per chunk) and must stay byte-identical there
     cfg = ExtractConfig(max_length=max_length, stride=stride,
                         batch_size=data.draw(st.integers(1, 7)),
                         decode=data.draw(st.sampled_from(
@@ -407,6 +408,102 @@ def test_emitter_failure_quarantines_only_its_page():
             assert rec == oracle.extract_page(url, html, text, cfg), url
 
 
+@pytest.mark.parametrize("aggregate", ["mean_logits", "none"])
+def test_decode_failure_quarantines_only_its_page(monkeypatch, aggregate):
+    """A decode failure in the batched window quarantines only the page
+    whose matrix fails: the failed batch call retries each unit alone
+    through viterbi_bio, and every neighbor (multi-chunk pages included)
+    equals the per-document oracle."""
+    import pii_core.pipeline as pl
+    from pii_core.ner_stub import StubEmitter
+    from pii_spark.synth import gen_pages
+
+    poison, mark = "GATILHO_DO_DECODE", 12345.0
+
+    class MarkingEmitter(StubEmitter):
+        def emit_batch(self, texts, offsets_list):
+            ems = super().emit_batch(texts, offsets_list)
+            return [np.full_like(em, mark) if poison in t else em
+                    for t, em in zip(texts, ems)]
+
+    real_viterbi = pl.viterbi_bio
+    batch_calls = []
+
+    def batch_down(ems, labels, o_id):
+        batch_calls.append(len(ems))
+        raise RuntimeError("batched decode down")
+
+    def flaky(em, labels, o_id):
+        if (np.asarray(em) == mark).any():
+            raise RuntimeError("decode exploded on one page")
+        return real_viterbi(em, labels, o_id)
+
+    monkeypatch.setattr(pl, "viterbi_bio_batch", batch_down)
+    monkeypatch.setattr(pl, "viterbi_bio", flaky)
+    pages = [(p["url"], p["html"], p["text"]) for p in gen_pages(20, seed=9)]
+    pages.insert(7, ("poisoned", None, f"{poison} " * 80))
+    cfg = ExtractConfig(max_length=64, stride=16, aggregate=aggregate)
+    recs = pl.extract_page_batch(pages, cfg, MarkingEmitter(),
+                                 cfg.make_tokenizer())
+    assert batch_calls
+    assert [u for (u, _h, _t), r in zip(pages, recs)
+            if isinstance(r, Exception)] == ["poisoned"]
+    assert "decode exploded" in str(recs[7])
+    for (url, html, text), rec in zip(pages, recs):
+        if url != "poisoned":
+            assert rec == oracle.extract_page(url, html, text, cfg), url
+
+
+@pytest.mark.parametrize("aggregate", ["mean_logits", "none"])
+@pytest.mark.parametrize("bad", [None, "short"])
+def test_malformed_emission_quarantines_only_its_page(aggregate, bad):
+    """An emitter that returns something other than one row per token for
+    one chunk (None, a short array) quarantines only that page: the
+    decode window never sees a malformed matrix, so the call does not
+    abort and the neighbors equal the per-document oracle."""
+    from pii_core.ner_stub import StubEmitter
+    from pii_core.pipeline import extract_page_batch
+    from pii_spark.synth import gen_pages
+
+    class Malformed(StubEmitter):
+        def emit_batch(self, texts, offsets_list):
+            ems = super().emit_batch(texts, offsets_list)
+            return [em if "GATILHO" not in t
+                    else None if bad is None else em[:-1]
+                    for t, em in zip(texts, ems)]
+
+    pages = [(p["url"], p["html"], p["text"]) for p in gen_pages(12, seed=9)]
+    pages.insert(5, ("poisoned", None, "texto com GATILHO no meio"))
+    cfg = ExtractConfig(aggregate=aggregate)
+    recs = extract_page_batch(pages, cfg, Malformed(), cfg.make_tokenizer())
+    assert [u for (u, _h, _t), r in zip(pages, recs)
+            if isinstance(r, Exception)] == ["poisoned"]
+    assert "mismatch" in str(recs[5])
+    for (url, html, text), rec in zip(pages, recs):
+        if url != "poisoned":
+            assert rec == oracle.extract_page(url, html, text, cfg), url
+
+
+def test_emitter_without_emit_batch_aborts_the_call():
+    """emit_batch is the only emitter call form: an emitter without it
+    makes extract_page_batch raise before any page runs, instead of
+    returning one quarantined record per page (a fail-closed corpus)."""
+    from pii_core.ner_stub import StubEmitter
+    from pii_core.pipeline import extract_page_batch
+
+    class CallOnly:
+        labels = StubEmitter.labels
+
+        def __call__(self, text, offsets):
+            return StubEmitter()(text, offsets)
+
+    cfg = ExtractConfig()
+    with pytest.raises(AttributeError, match="emit_batch"):
+        extract_page_batch([("u1", None, "Maria Clara Santos aqui"),
+                            ("u2", None, "sem pii")],
+                           cfg, CallOnly(), cfg.make_tokenizer())
+
+
 def test_per_doc_path_rejects_tokenizer_only_under_model_path():
     """ADVICE r4 (medium): extract_document with a caller-supplied
     tokenizer but no emitter must raise when cfg.model_path is set —
@@ -502,12 +599,10 @@ def test_trusted_offsets_path_equivalent():
         char_start = 0
     ch = Ch()
     em = np.array([[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]], dtype=np.float32)
-    items = [(ch, [(0, 0), (1, 3), (1, 3)], em)]
-    kg = pl._mean_logit_matrix(items, 1, trusted_offsets=False)
-    keys, m = kg
-    # keys may be a list of tuples or an (K,2) ndarray — the CONTRACT is
-    # the key values/order (spans_from_bio asarray-normalizes either form)
-    assert np.asarray(keys).tolist() == [[1, 3]]
+    offs = np.array([(0, 0), (1, 3), (1, 3)], dtype=np.int64)
+    keys, m = pl._mean_logit_matrix([(ch, offs, em)], 1,
+                                    trusted_offsets=False)
+    assert keys.tolist() == [[1, 3]]
     assert np.allclose(m, [[4.0, 5.0]])
 
 

@@ -267,3 +267,6 @@ def test_fixture_algebras_staged_not_inlined(spark, sfd, name):
         assert node.count("* 104729") <= 1, node[:200]
     if name == "checksum_validate":  # one chain per candidate, plan-wide
         assert (plan.count("* 7919"), plan.count("* 104729")) == (1, 1)
+    if name in ("distinct_values_report", "review_add_missing"):
+        # one plan branch reads the staged per-doc frame
+        assert plan.count("* 7919") == 1

@@ -316,10 +316,10 @@ def test_adopt_before_lineage_crash_matches_counter_lineage(
 
 
 def test_zero_doc_first_increment_then_normal_commit(spark, tmp_path):
-    """A first increment with no pages commits through the early return
-    (marker docs=0, no lineage dir); the rollup over the missing lineage
-    dir is an empty frame of the summary schema, and the next increment
-    commits normally."""
+    """A first increment with no pages commits through the common path
+    with zero counters (marker docs=0, no lineage dir); the rollup over
+    the missing lineage dir is an empty frame of the summary schema, and
+    the next increment commits normally."""
     import json
     import os
 

@@ -105,6 +105,9 @@ class FakeTransformerEmitter:
         rows = align_rows(offsets, enc_offsets, enc["attention_mask"])
         return em[rows]
 
+    def emit_batch(self, texts, offsets_list):
+        return [self(t, o) for t, o in zip(texts, offsets_list)]
+
 
 def test_adapter_contract():
     ad = HFTokenizerAdapter(FakeFastTokenizer())
@@ -182,8 +185,8 @@ class _SpyBatchEmitter:
 @pytest.mark.parametrize("aggregate", ["mean_logits", "none"])
 def test_batched_emission_identical_to_per_chunk(aggregate):
     """Micro-batching chunks through emit_batch (reference --batch_size)
-    must be byte-identical to per-chunk calls, and must respect the
-    configured group size."""
+    must be byte-identical to one-chunk forward passes (batch_size=1), and
+    must respect the configured group size."""
     from pii_core.ner_stub import StubEmitter
     from pii_core.tokenizer import WordTokenizer
 
@@ -192,13 +195,8 @@ def test_batched_emission_identical_to_per_chunk(aggregate):
     base = dict(max_length=48, stride=8, boundary_backoff=8,
                 aggregate=aggregate, use_detectors=False)
 
-    class NoBatch:
-        labels = StubEmitter.labels
-
-        def __call__(self, t, o):
-            return StubEmitter()(t, o)
-
-    unbatched = extract_document(text, ExtractConfig(**base), NoBatch(), tok)
+    unbatched = extract_document(
+        text, ExtractConfig(**base, batch_size=1), StubEmitter(), tok)
     spy = _SpyBatchEmitter(StubEmitter())
     batched = extract_document(
         text, ExtractConfig(**base, batch_size=3), spy, tok)
@@ -212,11 +210,6 @@ def test_fake_transformer_padded_batch_alignment():
     row's logits project back onto its own offsets."""
     tok = FakeFastTokenizer()
     em = FakeTransformerEmitter(tok, max_length=64)
-
-    def emit_batch(texts, offsets_list):
-        return [em(t, o) for t, o in zip(texts, offsets_list)]
-
-    em.emit_batch = emit_batch
     short, long = "Ana Lima", "o requerente compareceu com Bruno Castro hoje"
     adapter = HFTokenizerAdapter(tok)
     o1, o2 = adapter.encode(short), adapter.encode(long)
