@@ -62,32 +62,6 @@ def bio_transitions(labels: list[str]) -> np.ndarray:
     return trans
 
 
-def _validated_emissions(
-    emissions: np.ndarray,
-    labels: list[str],
-    o_id: int,
-    force_o_mask: np.ndarray | None,
-) -> np.ndarray:
-    """Shared (T,C) validation + force-O masking for both decode entry
-    points. Returns the (possibly copied) fp32 emission matrix."""
-    em = np.asarray(emissions, dtype=np.float32)
-    if em.ndim != 2:
-        raise ValueError(f"emissions must be (T,C), got {em.shape}")
-    t, c = em.shape
-    if c != len(labels):
-        raise ValueError(f"emissions C={c} != len(labels)={len(labels)}")
-    if not 0 <= int(o_id) < c:
-        raise ValueError(f"invalid o_id={o_id}")
-    if force_o_mask is not None:
-        m = np.asarray(force_o_mask, dtype=bool)
-        if m.shape != (t,):
-            raise ValueError(f"force_o_mask must be (T,), got {m.shape}")
-        em = em.copy()  # only the masked path mutates; callers keep theirs
-        em[m, :] = NEG
-        em[m, int(o_id)] = 0.0
-    return em
-
-
 # Minimum strictly-positive (max - runner-up) row gap for the tie-aware
 # shortcut. Its exactness proof compares float64 path scores that differ, in
 # exact arithmetic, by at least one row's positive gap; float64 rounding can
@@ -229,17 +203,31 @@ def viterbi_bio(
     o_id: int,
     force_o_mask: np.ndarray | None = None,
 ) -> list[int]:
-    """Best BIO-legal label-id path for a (T,C) emission matrix."""
-    em = _validated_emissions(emissions, labels, o_id, force_o_mask)
+    """Best BIO-legal label-id path for a (T,C) emission matrix: the
+    argmax shortcut when it is provably the optimum, else the DP below."""
+    em = np.asarray(emissions, dtype=np.float32)
+    if em.ndim != 2:
+        raise ValueError(f"emissions must be (T,C), got {em.shape}")
     t, c = em.shape
+    if c != len(labels):
+        raise ValueError(f"emissions C={c} != len(labels)={len(labels)}")
+    if not 0 <= int(o_id) < c:
+        raise ValueError(f"invalid o_id={o_id}")
+    if force_o_mask is not None:
+        m = np.asarray(force_o_mask, dtype=bool)
+        if m.shape != (t,):
+            raise ValueError(f"force_o_mask must be (T,), got {m.shape}")
+        em = em.copy()  # only the masked path mutates; callers keep theirs
+        em[m, :] = NEG
+        em[m, int(o_id)] = 0.0
     if t == 0:
         return []
-
-    start, free_cols, i_cols, i_prev = _bio_structure(tuple(labels))
 
     short = _argmax_shortcut(em, labels)
     if short is not None:
         return short
+
+    start, free_cols, i_cols, i_prev = _bio_structure(tuple(labels))
 
     # Fast DP exploiting the BIO transition structure instead of a dense
     # (C,C) matmul per step: columns reachable from ANY legal prev (O, B-*)
@@ -296,119 +284,15 @@ def viterbi_bio_batch(
     o_id: int,
     force_o_masks: list[np.ndarray | None] | None = None,
 ) -> list[list[int]]:
-    """``viterbi_bio`` over MANY sequences at once — bit-identical paths.
-
-    The single-sequence DP's per-step cost is a ~C-element Python loop;
-    per-step NumPy loses there because fixed ndarray-call overhead dominates
-    at C≈27. Batching flips that: sequences are sorted by length
-    (descending) and PACKED — each time step runs one set of NumPy ops over
-    the (n_active, C) slice of every sequence still alive, so the call
-    overhead amortizes across the batch while short sequences retire from
-    the bottom (no padding rows, no padding semantics to prove).
-
-    Exactness: scores accumulate in float64 exactly as the Python DP's
-    ``float`` arithmetic (fp32 emissions convert exactly; same adds, same
-    comparisons); ``argmax`` picks the first maximum like ``list.index
-    (max())``; the I-column tie prefers the B predecessor via strict
-    ``pi > pb`` — every tie-break matches, so the returned paths are
-    identical, not merely equally-scoring (pytest pins this per element
-    against ``viterbi_bio``, ties included)."""
+    """``viterbi_bio`` over a list of sequences (one document's decode
+    units), one path per matrix in input order."""
     masks = (force_o_masks if force_o_masks is not None
              else [None] * len(emissions))
     if len(masks) != len(emissions):
         raise ValueError(
             f"{len(masks)} masks for {len(emissions)} emission matrices")
-    ems = [_validated_emissions(e, labels, o_id, m)
-           for e, m in zip(emissions, masks)]
-    out: list[list[int] | None] = [None] * len(ems)
-    todo: list[int] = []
-    for i, em in enumerate(ems):
-        if em.shape[0] == 0:
-            out[i] = []
-        else:
-            short = _argmax_shortcut(em, labels)
-            if short is not None:
-                out[i] = short
-            else:
-                todo.append(i)
-    if len(todo) == 1:  # packed overhead loses to the Python DP for one seq
-        i = todo[0]
-        out[i] = viterbi_bio(ems[i], labels, o_id)
-        todo = []
-    if not todo:
-        return out  # type: ignore[return-value]
-
-    start, free_cols, i_cols, i_prev = _bio_structure(tuple(labels))
-    c = len(labels)
-    neg = np.float64(float(NEG))
-    order = sorted(todo, key=lambda i: ems[i].shape[0], reverse=True)
-    lens = np.asarray([ems[i].shape[0] for i in order])
-    b, t_max = len(order), int(lens[0])
-    # packed rows: sequence k's step-ti emissions live at packed[offs[k]+ti]
-    packed = np.concatenate([ems[i] for i in order]).astype(np.float64)
-    offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    # n_act per step: sequences with length > ti (sorted desc => a prefix);
-    # 'left' on the ascending negation counts STRICTLY greater — a length-ti
-    # sequence's last step is ti-1, so it must be retired at step ti
-    n_act_at = np.searchsorted(-lens, -np.arange(t_max), side="left")
-    # TIME-MAJOR re-pack: rows ordered (step, seq) so each step's active
-    # emissions are ONE contiguous view — replaces a fancy-index gather
-    # (allocation + index arithmetic) on the hottest line of the loop.
-    row_start = np.concatenate(([0], np.cumsum(n_act_at)))
-    perm = np.concatenate(
-        [offs[:n_act_at[ti]] + ti for ti in range(t_max)])
-    packed_tm = packed[perm]
-
-    pb_idx, pi_idx = (i_prev[:, 0], i_prev[:, 1]) if len(i_cols) else (
-        np.empty(0, np.int64), np.empty(0, np.int64))
-    # every column is free or I-X in a well-formed label space: the
-    # malformed-column fill (gbest + NEG, dense-DP semantics) is only
-    # needed when some column is neither
-    has_malformed = len(free_cols) + len(i_cols) < c
-    score = packed_tm[:b] + start.astype(np.float64)  # (B,C) step-0 scores
-    final = np.empty((b, c), dtype=np.float64)
-    nxt_buf = np.empty((b, c), dtype=np.float64)
-    icol_buf = np.empty((b, len(i_cols)), dtype=np.float64)
-    back: list[np.ndarray | None] = [None]
-    n_act = b
-    for ti in range(1, t_max):
-        na = int(n_act_at[ti])
-        if na < n_act:  # retiring sequences' step-(len-1) scores are final
-            final[na:n_act] = score[na:n_act]
-            n_act = na
-        s = score[:n_act]
-        gbest = s.max(axis=1)
-        g = s.argmax(axis=1)
-        bk = np.empty((n_act, c), dtype=np.int32)
-        bk[:] = g[:, None]
-        nxt = nxt_buf[:n_act]
-        if has_malformed:
-            # malformed labels keep gbest + NEG (dense-DP semantics)
-            nxt[:] = gbest[:, None] + neg
-        nxt[:, free_cols] = gbest[:, None]
-        if len(i_cols):
-            pb = icol_buf[:n_act]
-            np.take(s, pb_idx, axis=1, out=pb)
-            pi = s[:, pi_idx]
-            take = pi > pb  # strict: ties keep the B predecessor
-            np.copyto(pb, pi, where=take)
-            nxt[:, i_cols] = pb
-            bk[:, i_cols] = np.where(take, pi_idx, pb_idx)
-        back.append(bk)
-        rs = row_start[ti]
-        np.add(packed_tm[rs:rs + n_act], nxt, out=score[:n_act])
-    final[:n_act] = score[:n_act]
-
-    paths = np.zeros((b, t_max), dtype=np.int32)
-    rows = np.arange(b)
-    paths[rows, lens - 1] = final.argmax(axis=1)
-    for ti in range(t_max - 1, 0, -1):
-        na = int(n_act_at[ti])
-        bk = back[ti]
-        paths[:na, ti - 1] = bk[rows[:na], paths[:na, ti]]
-    for k, i in enumerate(order):
-        out[i] = paths[k, :lens[k]].tolist()
-    return out  # type: ignore[return-value]
+    return [viterbi_bio(e, labels, o_id, m)
+            for e, m in zip(emissions, masks)]
 
 
 @lru_cache(maxsize=8)

@@ -110,7 +110,7 @@ class TransformerEmitter:
     """
 
     def __init__(self, model_name_or_path: str, device: str = "cpu",
-                 max_length: int = 512, pad_to_max: bool = True):
+                 max_length: int = 512):
         import torch  # noqa: PLC0415 — optional dep, load-once slot
         from transformers import (  # noqa: PLC0415
             AutoModelForTokenClassification,
@@ -124,7 +124,6 @@ class TransformerEmitter:
             model_name_or_path).to(device).eval()
         self._device = device
         self._max_length = int(max_length)
-        self._pad_to_max = bool(pad_to_max)
         id2label = self._model.config.id2label
         self.labels = [id2label[i] for i in range(len(id2label))]
         self.tokenizer_adapter = HFTokenizerAdapter(self._tok)
@@ -143,23 +142,22 @@ class TransformerEmitter:
         attention mask distinguishes padding). Each row is projected onto
         its content tokens via ``align_rows``.
 
-        Padding policy and determinism: with ``pad_to_max`` (the default)
-        every batch pads to the FIXED ``max_length`` width, so a chunk's
-        logits do not depend on which neighbors happen to share its batch —
-        required for the engine's partition-count-invariance contract now
-        that pii_core.pipeline batches chunks across documents (kernel
-        shapes vary with pad-to-longest, and fp32 reductions vary with
-        shape). The cost is wasted FLOPs on short chunks; set
-        ``pad_to_max=False`` to trade bitwise run-to-run identity for
-        throughput (the reference's own padding=True behavior). Residual
-        caveat either way: nondeterministic GPU kernels need
-        ``torch.use_deterministic_algorithms(True)`` for strict parity."""
+        Padding policy and determinism: every batch pads to the FIXED
+        ``max_length`` width, so a chunk's logits do not depend on which
+        neighbors happen to share its batch — required for the engine's
+        partition-count-invariance contract, because pii_core.pipeline
+        batches chunks across documents (kernel shapes vary with
+        pad-to-longest, and fp32 reductions vary with shape). The cost is
+        wasted FLOPs on short chunks, against the reference's own
+        pad-to-longest (``padding=True``). Residual caveat: nondeterministic
+        GPU kernels need ``torch.use_deterministic_algorithms(True)`` for
+        strict parity."""
         enc = self._tok(
             list(texts),
             add_special_tokens=True,
             truncation=True,
             max_length=self._max_length,
-            padding="max_length" if self._pad_to_max else True,
+            padding="max_length",
             return_offsets_mapping=True,
             return_tensors="pt",
         )
@@ -181,8 +179,7 @@ class TransformerEmitter:
 
 
 def load_transformer_emitter(model_name_or_path: str, device: str = "cpu",
-                             max_length: int = 512,
-                             pad_to_max: bool = True) -> TransformerEmitter:
+                             max_length: int = 512) -> TransformerEmitter:
     """Load the real emitter, with a clear error when the optional deps are
     missing (the sandbox default — StubEmitter remains the hermetic path)."""
     if not has_transformer_deps():
@@ -190,4 +187,4 @@ def load_transformer_emitter(model_name_or_path: str, device: str = "cpu",
             "TransformerEmitter requires torch and transformers; install "
             "them or use pii_core.ner_stub.StubEmitter")
     return TransformerEmitter(model_name_or_path, device=device,
-                              max_length=max_length, pad_to_max=pad_to_max)
+                              max_length=max_length)

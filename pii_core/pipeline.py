@@ -1,10 +1,11 @@
 """Extraction pipeline: one batch core behind every entry point.
 
 ``extract_page_batch`` (the Spark UDF's call), ``extract_page`` and
-``extract_document`` all run the same cross-document batch loop; the two
-per-document entry points are one-record calls into it. The loop has one
-emitter call form (``emit_batch``) and one decode route (a ready window of
-decode units, for every ``decode``/``aggregate`` mode). The per-document
+``extract_document`` all run the same batch loop; the two per-document
+entry points are one-record calls into it. The loop batches only the
+emitter's forward passes (one call form, ``emit_batch``, across document
+boundaries); each document is decoded and finalized on its own, as soon as
+its last chunk's emissions arrive, like the reference. The per-document
 executable spec this loop is checked against lives in
 ``tests/oracles/pipeline.py``.
 
@@ -43,7 +44,8 @@ from typing import Callable
 import numpy as np
 
 from pii_core.chunking import ChunkingConfigError, build_chunks_with_offsets
-from pii_core.decoding import viterbi_bio, viterbi_bio_batch
+# viterbi_bio is unused here; perfbench's traced run wraps it by this name
+from pii_core.decoding import viterbi_bio, viterbi_bio_batch  # noqa: F401
 from pii_core.detectors import detect_spans
 from pii_core.html_extract import html_to_text_strict
 from pii_core.labels import PII_TYPES, label_maps
@@ -88,11 +90,6 @@ class ExtractConfig:
     # StubEmitter + WordTokenizer path runs, byte-identical as before.
     model_path: str | None = None
     model_device: str = "cpu"
-    # True (default): the transformer emitter pads every forward to the
-    # fixed max_length width, so a chunk's logits never depend on which
-    # neighbors share its batch (the partition-invariance contract). False
-    # trades bitwise run-to-run identity for pad-to-longest throughput.
-    pad_to_max: bool = True
     # Giant-page straggler bound: a payload larger than this quarantines
     # fail-closed (DocTooLargeError, error row, never public) BEFORE any
     # parse work. A 100-TB crawl contains multi-MB pathological pages, and
@@ -164,27 +161,12 @@ class ExtractConfig:
 
             emitter = load_transformer_emitter(
                 self.model_path, device=self.model_device,
-                max_length=self.max_length, pad_to_max=self.pad_to_max)
+                max_length=self.max_length)
             return emitter, emitter.tokenizer_adapter
         return StubEmitter(), self.make_tokenizer()
 
 
 _PII_SET = frozenset(PII_TYPES)
-
-# Decode units per cross-document batched-Viterbi call: the packed DP's
-# NumPy call overhead amortizes up to ~64 sequences, then cache pressure
-# erodes the win (measured on C=27).
-_DECODE_BATCH_DOCS = 64
-# Docs buffered before decode batches are cut. Web corpora are heavy-tailed
-# (p50 ~170 tokens, p99 ~4500 on the synthetic corpus): batching FIFO would
-# pair one long doc with 63 short ones, and after the short ones retire the
-# packed DP crawls through thousands of near-empty steps. Sorting a wider
-# window by length first makes every sub-batch length-homogeneous.
-_DECODE_WINDOW_DOCS = 8 * _DECODE_BATCH_DOCS
-# Token-row cap per packed sub-batch: bounds the float64 packed matrix and
-# int32 backpointers (~500k rows * 27 labels ≈ 160 MB together) when the
-# window holds many book-length documents.
-_DECODE_CELL_BUDGET = 500_000
 
 
 def _label_ctx(emitter: Emitter):
@@ -195,21 +177,6 @@ def _label_ctx(emitter: Emitter):
     l2i = {lab: i for i, lab in enumerate(labels_list)}
     id2label = {i: lab for lab, i in l2i.items()}
     return labels_list, l2i, id2label, l2i["O"]
-
-
-def _decode_and_filter(keys, em_global, pred: list[int], cfg: ExtractConfig,
-                       ctx) -> list[Span]:
-    """Filtered spans from a (K,C) emission matrix and its label path
-    ``pred`` (what ``viterbi_bio``, or the argmax, gives for it)."""
-    id2label = ctx[2]
-    spans = spans_from_bio(keys, pred, em_global, id2label, cfg.conf_agg)
-    return filter_spans(
-        spans,
-        conf_threshold=cfg.conf_threshold,
-        conf_threshold_by_type=cfg.conf_threshold_by_type,
-        min_span_tokens=cfg.min_span_tokens,
-        min_span_tokens_by_type=cfg.min_span_tokens_by_type,
-    )
 
 
 def _mean_logit_matrix(items, n_chunks: int, trusted_offsets: bool = False):
@@ -424,18 +391,16 @@ def _extract_core(records, cfg: ExtractConfig, emitter: Emitter | None,
     ``(keys, emissions, char_shift)`` — one mean-logit matrix on global
     offsets (shift 0), or with ``aggregate="none"`` one per chunk on its
     LOCAL offsets (so ``(0,0)`` specials still read as specials), shifted
-    by its ``char_start`` (reference infer_pii.py:237-275). Every config
-    decodes the same way: a ``_DECODE_WINDOW_DOCS`` ready window, its units
-    sorted longest-first and cut into sub-batches, each decoded by argmax
-    rows or ``viterbi_bio_batch`` (bit-identical to ``viterbi_bio``, the
-    per-unit retry when a batch call fails).
+    by its ``char_start`` (reference infer_pii.py:237-275). The document's
+    units decode together, by argmax rows or one ``viterbi_bio_batch``
+    call, so a decode failure quarantines exactly that document.
 
     Streaming: documents are prepared (payload → text → chunks → offsets),
     emitted, aggregated, and finalized in ONE interleaved pass — a forward
-    group fires as soon as ``batch_size`` chunks are pending. Peak extra
-    memory is O(batch_size × chunk + _DECODE_WINDOW_DOCS documents' units
-    and text) — the WINDOW, not the sub-batch, is the buffering bound; the
-    cell budget caps only the packed float64 copy.
+    group fires as soon as ``batch_size`` chunks are pending, and each
+    document finishes, in input order, once its last emission is in. Peak
+    extra memory is O(batch_size × chunk) plus the documents still waiting
+    on a forward group or on an earlier document's emissions.
 
     Byte-identity: group boundaries are consecutive ``batch_size`` slices
     of the global chunk stream (independent of where document boundaries
@@ -459,10 +424,9 @@ def _extract_core(records, cfg: ExtractConfig, emitter: Emitter | None,
         tokenizer = tokenizer if tokenizer is not None else own_tokenizer
     elif tokenizer is None:
         tokenizer = cfg.make_tokenizer()
-    ctx = _label_ctx(emitter)
+    labels_list, _, id2label, o_id = _label_ctx(emitter)
     emit_batch = emitter.emit_batch
     step = cfg.batch_size
-    labels_list, o_id = ctx[0], ctx[3]
     argmax = cfg.decode == "argmax"
     # offsets below all come from build_chunks_with_offsets over THIS
     # tokenizer: slice-stable scans are strictly-increasing/non-empty by
@@ -474,24 +438,11 @@ def _extract_core(records, cfg: ExtractConfig, emitter: Emitter | None,
     # [url, extracted, n_chunks, err, n_left, items]
     pending: deque[list] = deque()
     buf: list = []  # (doc_state, chunk, offsets) awaiting a forward group
-    # Docs awaiting the decode, in input order: (url, extracted, units)
-    # or the page's Exception
-    ready: deque = deque()
 
-    def finalize(url, extracted, ner) -> tuple | Exception:
-        """NER + detector spans → merged spans + public decision."""
-        try:
-            spans = ner + detect_spans(extracted) if cfg.use_detectors else ner
-            merged = merge_and_resolve(
-                spans, resolve_overlaps=cfg.resolve_overlaps)
-            return (url, extracted, merged,
-                    not any(s.type in _PII_SET for s in merged))
-        except Exception as e:  # noqa: BLE001 — per-page quarantine
-            return e
-
-    def phase_a(d) -> tuple | Exception:
-        """Everything before the label decode: error routing and the
-        document's decode units."""
+    def finish(d) -> tuple | Exception:
+        """One document whose emissions are all in: error routing, decode
+        units, label decode, NER + detector spans → merged spans + public
+        decision."""
         url, extracted, n_chunks, err, _n_left, items = d
         if err is None:
             err = next((em for _, _, em in items
@@ -507,79 +458,31 @@ def _extract_core(records, cfg: ExtractConfig, emitter: Emitter | None,
                         raise ValueError(f"chunk offsets/emissions mismatch: "
                                          f"{offs.shape} vs {em.shape}")
                     units.append((offs, em, ch.char_start))
-                return url, extracted, units
-            kg = _mean_logit_matrix(items, n_chunks, trusted_offs)
+            else:
+                kg = _mean_logit_matrix(items, n_chunks, trusted_offs)
+                units = [] if kg is None else [(kg[0], kg[1], 0)]
+            ems = [em for _, em, _ in units]
+            preds = ([np.argmax(em, axis=-1).tolist() for em in ems]
+                     if argmax else viterbi_bio_batch(ems, labels_list, o_id))
+            ner: list[Span] = []
+            for (keys, em, shift), pred in zip(units, preds):
+                spans = filter_spans(
+                    spans_from_bio(keys, pred, em, id2label, cfg.conf_agg),
+                    conf_threshold=cfg.conf_threshold,
+                    conf_threshold_by_type=cfg.conf_threshold_by_type,
+                    min_span_tokens=cfg.min_span_tokens,
+                    min_span_tokens_by_type=cfg.min_span_tokens_by_type,
+                )
+                ner.extend(spans if not shift else (
+                    s._replace(start=s.start + shift, end=s.end + shift)
+                    for s in spans))
+            spans = ner + detect_spans(extracted) if cfg.use_detectors else ner
+            merged = merge_and_resolve(
+                spans, resolve_overlaps=cfg.resolve_overlaps)
+            return (url, extracted, merged,
+                    not any(s.type in _PII_SET for s in merged))
         except Exception as e:  # noqa: BLE001 — per-page quarantine
             return e
-        return url, extracted, [] if kg is None else [(kg[0], kg[1], 0)]
-
-    def decode_one(em) -> list[int]:
-        return (np.argmax(em, axis=-1).tolist() if argmax
-                else viterbi_bio(em, labels_list, o_id))
-
-    def run_sub(ems: list) -> list:
-        """Label paths for one sub-batch. A batch-level failure (or a
-        miscount) retries each unit alone, so only the failing page
-        quarantines and its healthy neighbors still decode."""
-        try:
-            got = ([decode_one(em) for em in ems] if argmax
-                   else viterbi_bio_batch(ems, labels_list, o_id))
-            if len(got) == len(ems):
-                return got
-        except Exception:  # noqa: BLE001 — isolate per unit below
-            pass
-        got = []
-        for em in ems:
-            try:
-                got.append(decode_one(em))
-            except Exception as e:  # noqa: BLE001 — per-page quarantine
-                got.append(e)
-        return got
-
-    def flush_ready(drain: bool) -> None:
-        while len(ready) >= _DECODE_WINDOW_DOCS or (drain and ready):
-            take = [ready.popleft()
-                    for _ in range(min(_DECODE_WINDOW_DOCS, len(ready)))]
-            ems = [u[1] for r in take if not isinstance(r, Exception)
-                   for u in r[2]]
-            # longest-first so each sub-batch holds units of similar
-            # length (decode order is free; output stays FIFO)
-            subs: list[list[int]] = []
-            cells = 0
-            for j in sorted(range(len(ems)), reverse=True,
-                            key=lambda j: ems[j].shape[0]):
-                k = int(ems[j].shape[0])
-                if (not subs or len(subs[-1]) >= _DECODE_BATCH_DOCS
-                        or cells + k > _DECODE_CELL_BUDGET):
-                    subs.append([])
-                    cells = 0
-                subs[-1].append(j)
-                cells += k
-            preds: list = [None] * len(ems)
-            for sub in subs:
-                for j, p in zip(sub, run_sub([ems[j] for j in sub])):
-                    preds[j] = p
-            ui = 0
-            for r in take:
-                if isinstance(r, Exception):
-                    out.append(r)
-                    continue
-                url, extracted, units = r
-                doc_preds = preds[ui:ui + len(units)]
-                ui += len(units)
-                try:
-                    ner: list[Span] = []
-                    for (keys, em, shift), pred in zip(units, doc_preds):
-                        if isinstance(pred, Exception):
-                            raise pred
-                        spans = _decode_and_filter(keys, em, pred, cfg, ctx)
-                        ner.extend(spans if not shift else (
-                            s._replace(start=s.start + shift,
-                                       end=s.end + shift) for s in spans))
-                except Exception as e:  # noqa: BLE001 — per-page quarantine
-                    out.append(e)
-                    continue
-                out.append(finalize(url, extracted, ner))
 
     def pump(drain: bool) -> None:
         while len(buf) >= step or (drain and buf):
@@ -590,8 +493,7 @@ def _extract_core(records, cfg: ExtractConfig, emitter: Emitter | None,
                 d[5].append((ch, offs, em))
                 d[4] -= 1
             while pending and pending[0][4] == 0:
-                ready.append(phase_a(pending.popleft()))
-            flush_ready(drain=False)
+                out.append(finish(pending.popleft()))
 
     for url, html, text in records:
         d = [url, None, 0, None, 0, []]
@@ -629,8 +531,7 @@ def _extract_core(records, cfg: ExtractConfig, emitter: Emitter | None,
             # partial emission stream into a plausible-but-wrong record
             d[3] = RuntimeError(
                 f"internal: {d[4]} emissions missing for {d[0]!r}")
-        ready.append(phase_a(d))
-    flush_ready(drain=True)
+        out.append(finish(d))
     return out
 
 
@@ -646,7 +547,8 @@ def extract_page_batch(
     page raised (callers quarantine — the Spark UDF maps it to a
     fail-closed error row). A failing page never poisons its neighbors:
     prep errors, EMITTER errors (isolated per chunk via ``_emit_group``),
-    and decode errors all quarantine only their own page. Each record
+    and decode errors (each document decodes alone) all quarantine only
+    their own page. Each record
     equals the per-document executable spec ``tests/oracles/pipeline.py``
     on the same row, however ``records`` is split across calls
     (pytest-pinned parity)."""

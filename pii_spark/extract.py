@@ -111,7 +111,7 @@ def _extract_batches(cfg: ExtractConfig, passthrough: tuple[str, ...] = (),
             # short-doc (single-chunk) web corpora. Per-doc chunk order —
             # and so fp32 accumulation order — is unchanged, and emissions
             # are composition-invariant (stub: pure per-chunk; transformer:
-            # fixed-width pad_to_max padding): output is byte-identical at
+            # fixed max_length padding): output is byte-identical at
             # any batch split or partition count. Emitter failures isolate
             # per page (pipeline._emit_group), never kill the task.
             recs = extract_page_batch(
@@ -159,7 +159,6 @@ def extract_pages(
     pages: DataFrame,
     cfg: ExtractConfig | None = None,
     num_partitions: int | None = None,
-    salt: int = DEFAULT_SALT,
     counters=None,
 ) -> DataFrame:
     """pages (url, html[, text]) -> results. See module docstring.
@@ -187,12 +186,12 @@ def extract_pages(
         # to rebalance (Python worker reuse amortizes the startups). But
         # the floor matters on SMALL inputs: per-task Arrow round-trips
         # and scheduling overhead dominate when partitions hold few docs
-        # (measured: a 12k-page corpus runs 1.6x faster at 1x than 4x),
-        # and tiny decode windows also batch Viterbi worse. Catalyst's
-        # pre-shuffle size estimate picks the regime without an extra
-        # action; file sources report real bytes, while in-memory/unknown
-        # relations report Long.Max and conservatively take the 4x
-        # ceiling — estimates only steer BETWEEN the two safe bounds.
+        # (measured: a 12k-page corpus runs 1.6x faster at 1x than 4x).
+        # Catalyst's pre-shuffle size estimate picks the regime without an
+        # extra action; file sources report real bytes, while
+        # in-memory/unknown relations report Long.Max and conservatively
+        # take the 4x ceiling — estimates only steer BETWEEN the two safe
+        # bounds.
         par = spark.sparkContext.defaultParallelism
         try:
             est_bytes = int(pruned._jdf.queryExecution().optimizedPlan()
@@ -212,11 +211,13 @@ def extract_pages(
         target = max(1, est_bytes // (64 << 20))  # ~64 MB input per task
         num_partitions = max(par, min(4 * par, target))
 
-    # Salted repartition: xxhash64(url, salt) spreads pathological hosts
-    # (many urls from one site == many rows with similar prefixes) uniformly;
-    # RoundRobin would also balance but breaks deterministic co-location for
-    # resume diffing, and hash(url) alone keeps lineage stable across runs.
-    salted = pruned.repartition(num_partitions, F.xxhash64(F.col("url"), F.lit(salt)))
+    # Salted repartition: xxhash64(url, DEFAULT_SALT) spreads pathological
+    # hosts (many urls from one site == many rows with similar prefixes)
+    # uniformly; RoundRobin would also balance but breaks deterministic
+    # co-location for resume diffing, and the fixed salt keeps
+    # partition_id, and so lineage, stable across runs.
+    salted = pruned.repartition(
+        num_partitions, F.xxhash64(F.col("url"), F.lit(DEFAULT_SALT)))
 
     return salted.mapInPandas(_extract_batches(cfg, counters=counters),
                               schema=RESULTS_WITH_PID)

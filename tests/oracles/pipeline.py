@@ -11,7 +11,7 @@ written the plain way:
 
 It shares none of the production loop's fast paths — cross-document forward
 groups, the single-chunk and trusted-offsets shortcuts, the packed
-``np.unique`` accumulation, batched Viterbi, vectorized span building — so
+``np.unique`` accumulation, vectorized span building — so
 parity tests against it check each of them. Payload sniffing, chunking,
 detectors, filtering and merging are single-implementation stages and are
 called from production as they are.

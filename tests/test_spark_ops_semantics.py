@@ -44,7 +44,7 @@ def test_jaccard_scores_near_dups_high(spark, sfd):
     the DuckDB oracle it used to carry in the registry."""
     import duckdb
 
-    from pii_spark.ops.dedup import (
+    from oracles.dedup import (
         JACCARD_EXACT_SMALLSCALE_ORACLE,
         dedup_jaccard_exact_smallscale,
     )
@@ -70,7 +70,7 @@ def test_jaccard_exact_guard_refuses_large_corpus(spark, sfd, monkeypatch):
     launching a quadratic shared-shingle join."""
     import pytest
 
-    from pii_spark.ops import dedup
+    from oracles import dedup
 
     monkeypatch.setattr(dedup, "JACCARD_EXACT_MAX_DOCS", 1)
     with pytest.raises(ValueError, match="dedup_lsh_jaccard"):
