@@ -20,17 +20,28 @@ Modes:
     command and appends {ts, cmd, wall_s, steal_pct, rc} to
     BENCH/steal_runs.jsonl — a SIDECAR ledger (bench.py's own ledgers are
     frozen-format; entries correlate by timestamp).
+
+``--worker-init``
+    Per-task import-cache cost on reused Python workers: one
+    ``extract_pages`` pass on ``local[4]`` over ``gen_pages(400)`` in 4
+    partitions, then a 4-partition probe ``mapInPandas`` that reports, per
+    task, the zip importers left in ``sys.path_importer_cache`` and the
+    milliseconds of one ``importlib.invalidate_caches()`` call (what
+    pyspark's ``setup_spark_files`` pays at the start of every task).
+    Prints JSON and appends it to BENCH/worker_init.jsonl.
 """
 
 from __future__ import annotations
 
 import argparse
+import importlib
 import json
 import os
 import statistics
 import subprocess
 import sys
 import time
+import zipimport
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -194,15 +205,71 @@ def mixplane_fixed_cost(repeats: int = 2, sizes=(8, 32),
     return 0
 
 
+def worker_init(n_pages: int = 400, parts: int = 4) -> int:
+    import pandas as pd
+    from pyspark import TaskContext
+
+    from pii_spark.extract import extract_pages
+    from pii_spark.schemas import PAGES_SCHEMA
+    from pii_spark.session import get_spark
+    from pii_spark.synth import gen_pages
+
+    def probe(batches):
+        for _ in batches:
+            pass
+        n_zip = sum(isinstance(f, zipimport.zipimporter)
+                    for f in sys.path_importer_cache.values())
+        t0 = time.perf_counter()
+        importlib.invalidate_caches()
+        ms = (time.perf_counter() - t0) * 1e3
+        yield pd.DataFrame({"task": [TaskContext.get().partitionId()],
+                            "worker_pid": [os.getpid()],
+                            "zip_importers": [n_zip],
+                            "invalidate_ms": [ms]})
+
+    spark = get_spark(cores=parts, app="worker-init")
+    try:
+        cols = [f.name for f in PAGES_SCHEMA.fields]
+        pages = spark.createDataFrame(
+            [tuple(p[c] for c in cols) for p in gen_pages(n_pages)],
+            PAGES_SCHEMA)
+        t0 = time.perf_counter()
+        extract_pages(pages, num_partitions=parts) \
+            .write.format("noop").mode("overwrite").save()
+        extract_s = time.perf_counter() - t0
+        rows = (spark.range(parts, numPartitions=parts)
+                .mapInPandas(probe, "task int, worker_pid long, "
+                             "zip_importers int, invalidate_ms double")
+                .orderBy("task").collect())
+    finally:
+        spark.stop()
+    tasks = [{"task": r["task"], "worker_pid": r["worker_pid"],
+              "zip_importers": r["zip_importers"],
+              "invalidate_ms": round(r["invalidate_ms"], 2)} for r in rows]
+    rec = {"ts": time.time(), "pages": n_pages, "partitions": parts,
+           "extract_s": round(extract_s, 2), "tasks": tasks,
+           "max_zip_importers": max(t["zip_importers"] for t in tasks),
+           "median_invalidate_ms": round(statistics.median(
+               t["invalidate_ms"] for t in tasks), 2)}
+    os.makedirs("BENCH", exist_ok=True)
+    with open("BENCH/worker_init.jsonl", "a") as f:
+        f.write(json.dumps(rec) + "\n")
+    print(json.dumps(rec))
+    return 0
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--mixplane-fixed-cost", action="store_true")
     ap.add_argument("--repeats", type=int, default=2)
+    ap.add_argument("--worker-init", action="store_true")
     ap.add_argument("--steal", nargs=argparse.REMAINDER,
                     help="wrap a command, recording steal%% around it")
     args = ap.parse_args()
     if args.steal:
         return steal_wrap(args.steal)
+    if args.worker_init:
+        return worker_init()
     if args.mixplane_fixed_cost:
         return mixplane_fixed_cost(repeats=args.repeats)
     ap.print_help()

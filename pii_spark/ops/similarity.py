@@ -459,7 +459,14 @@ def _register_ivf(register) -> None:
         vectors as centroids) partitions the corpus into cells; each query
         probes only its own cell. At 100 TB the corpus is *written*
         partitioned by cell id, so probes are partition-pruned scans — the
-        assignment cross-join is corpus x 8 tiny broadcast rows, one pass."""
+        assignment cross-join is corpus x 8 tiny broadcast rows, one pass.
+
+        NULL-embedding rows are un-scoreable and excluded everywhere, as in
+        knn_bruteforce_frame: a NULL row is never a centroid, a query or a
+        candidate (as a query every dot would be NULL and the window would
+        emit k arbitrary "neighbors"). The oracle SQL above still assigns
+        NULL rows to a cell, so the two agree only on corpora without NULL
+        embeddings; encode or drop such rows upstream."""
         from pyspark.sql import Window
 
         v = _t(spark, sf_dir, "embeddings") \

@@ -690,6 +690,39 @@ def test_knn_frames_exclude_null_embeddings(spark):
     assert 12 not in {r["neighbor_id"] for r in lsh}
 
 
+def test_knn_ivf_excludes_null_embeddings(spark, tmp_path):
+    """knn_ivf drops NULL-embedding rows before the centroid pick, the
+    cell assignment and the scoring: no such vec_id appears as a query or
+    as a neighbour, and the result is the one over the corpus without
+    them. (Its oracle SQL still assigns NULL rows to a cell.)"""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(3)
+    n = 60
+    null_ids = {3, 9, 40}  # a centroid + query, a query, a candidate
+    emb = [None if i in null_ids
+           else rng.standard_normal(64).astype(np.float32).tolist()
+           for i in range(n)]
+    table = pa.table({
+        "vec_id": pa.array(range(n), pa.int64()),
+        "embedding": pa.array(emb, pa.list_(pa.float32())),
+        "label": pa.array([i % 4 for i in range(n)], pa.int32())})
+    with_nulls, without = tmp_path / "with_nulls", tmp_path / "without"
+    with_nulls.mkdir()
+    without.mkdir()
+    pq.write_table(table, with_nulls / "embeddings.parquet")
+    pq.write_table(table.filter(pa.compute.is_valid(table["embedding"])),
+                   without / "embeddings.parquet")
+
+    got = QUERIES["knn_ivf"](spark, str(with_nulls)).collect()
+    assert got and all(r["qdot"] is not None for r in got)
+    assert not null_ids & {r["query_id"] for r in got}
+    assert not null_ids & {r["neighbor_id"] for r in got}
+    assert got == QUERIES["knn_ivf"](spark, str(without)).collect()
+
+
 # --- codegen-regex gram/shingle derivations vs their HOF executable specs
 
 
