@@ -30,18 +30,18 @@ Nothing silently disappears: the audit is
 underlying operator (hashes and ids move, text moves only doc-locally);
 see each operator's own docstring for its 100 TB story.
 
-NOT fully lazy when near-dedup is on: the connected-components loop runs
-a driver action per round, so ``curate`` transiently persists three
-frames for the loop's duration — the skinny (id, fp) exact-dedup frame
-(~0.13x the text footprint, measured), the (id, text) near-dedup
-survivors (the verify stage reads the text four times; caching the
-exploded shingles instead would pin 3.4x the text), and the verified
-pairs — all released before returning (persist keeps lineage, so
-executor loss recomputes instead of breaking the frame; the small
-id-only loser frames are localCheckpointed so the returned stitch
-re-runs the upstream once, not twice). With
-``near_dup_jaccard_pm=None`` the returned plan is fully lazy. Cache the
-returned frame if you will run several actions over it.
+Eagerness: ``curate`` always runs ONE eager action, even with every dedup
+stage off — it pins (``_pin``: ``localCheckpoint(eager=True)``) the
+skinny (id, gate reason, fingerprint) decision frame, so line dedup and
+the gate stats run once however many later jobs read the decisions.
+With near-dedup on, ``connected_components`` adds its own pins: the
+verified pairs, the start labels, and one label frame per round (one
+convergence count each). No text frame is pinned or persisted: the
+returned frame re-attaches the text from the input by one id join, so
+each action over it re-reads (and, if enabled, re-line-dedups) the
+corpus once. Trade: a checkpointed id frame cannot be rebuilt from
+lineage if an executor's blocks are lost. Cache the returned frame if
+you will run several actions over it.
 """
 
 from __future__ import annotations
@@ -110,6 +110,17 @@ class CurationConfig:
                     "gate")
 
 
+def _pin(ids: DataFrame) -> DataFrame:
+    """``localCheckpoint(eager=True)`` of a SKINNY id-keyed frame (ids,
+    reasons, fingerprints — never text): every later job and the final
+    stitch read it as a materialized ``Scan ExistingRDD`` instead of
+    re-running the stages and ancestors that derived it. Trade: a
+    checkpointed frame is self-contained, so if an executor's blocks
+    are lost it cannot be rebuilt from lineage — acceptable for id
+    frames, rejected for corpora (text is never pinned)."""
+    return ids.localCheckpoint(eager=True)
+
+
 def curate(docs: DataFrame, cfg: CurationConfig | None = None,
            id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, text, drop_reason) for every input doc — see module docstring."""
@@ -169,115 +180,48 @@ def curate(docs: DataFrame, cfg: CurationConfig | None = None,
     for cond, r in reversed(gates):  # first listed gate wins
         reason = F.when(cond, r).otherwise(reason)
 
-    eager = cfg.near_dup_jaccard_pm is not None
-    if eager:
-        from pyspark import StorageLevel  # noqa: PLC0415
+    # ONE pinned decision frame: line dedup, the gate stats and the
+    # fingerprint run once, and every dedup job below plus the final
+    # stitch reads (id, gate, fp) from memory. One frame, not one per
+    # stage: a pin per loser frame would re-run line dedup for each.
+    scored = _pin(sig.select(id_col, reason.alias("gate"),
+                             normalized_fp("text").alias("fp")))
+    live = scored.where(F.col("gate").isNull())
+    audit = scored.select(id_col, "gate")
+    reasons = ["gate"]
 
-        # SKINNY (id, drop_reason) localCheckpoint: in eager mode the
-        # gate frame is evaluated by three separate jobs (the exact
-        # stage's checkpoint, the live2 persist, the final stitch) —
-        # uncheckpointed, the gate stats re-ran per job (measured when
-        # they were the dominant expression: full DAG 181 s vs 72 s for
-        # one gates pass; still ~19 s/pass at sf0.1 after the
-        # _run_stats doc-local rewrite, worth running once). Text is
-        # NOT pinned: it re-attaches from d by id join, so the
-        # checkpoint is two thin columns. With near-dedup off the plan
-        # stays fully lazy (same contract as the other eager-section
-        # caches).
-        reasons = sig.select(id_col, reason.alias("drop_reason")) \
-            .localCheckpoint(eager=True)
-        tagged = d.join(reasons, id_col).select(
-            id_col, "text", "drop_reason")
-    else:
-        tagged = sig.select(id_col, "text", reason.alias("drop_reason"))
-    live = tagged.where(F.col("drop_reason").isNull()).select(id_col, "text")
-
-    # --- stages 3+4: exact then near dedup among quality survivors -------
-
-    # Every transient persist registers here and is released in ONE finally:
-    # a failure anywhere in the eager section (the eager localCheckpoint
-    # job, plan construction, the CC loop) must not leak cached blocks into
-    # a long-lived driver session.
-    transient: list[DataFrame] = []
-    try:
-        # --- stage 3: exact dedup ---------------------------------------
-        if cfg.exact_dedup:
-            fp = normalized_fp("text")  # the SHARED fingerprint (dedup.py)
-            fp_frame = live.select(F.col(id_col), fp.alias("fp"))
-            if eager:
-                # SKINNY persist: (id, 32-byte fp) caches at ~0.13x the
-                # text frame's footprint (measured on the sf0.01 corpus:
-                # 0.019 MB vs 0.15 MB for (id, text); exploded shingles
-                # would pin 3.4x the text — the WRONG frame to cache), yet
-                # still stops the keeper groupBy and the loser join from
-                # re-running line-dedup + gates
-                fp_frame = fp_frame.persist(StorageLevel.MEMORY_AND_DISK)
-                transient.append(fp_frame)
-            keeper = fp_frame.groupBy("fp").agg(
-                F.min(id_col).alias("keep_id"))
-            exact_losers = fp_frame.join(
-                keeper, "fp").where(F.col(id_col) != F.col("keep_id")) \
-                .select(id_col)
-            if eager:
-                # small id-only frame, made self-contained so the RETURNED
-                # stitch re-executes the upstream once (for tagged), not
-                # twice (same localCheckpoint contract as
-                # connected_components' result: block loss on a
-                # checkpointed frame is not recoverable by lineage —
-                # acceptable for id-frames, rejected for corpora)
-                exact_losers = exact_losers.localCheckpoint(eager=True)
-        else:
-            exact_losers = live.limit(0).select(id_col)
-        live2 = live.join(exact_losers, id_col, "left_anti")
-
-        # --- stage 4: near dedup ----------------------------------------
-        if eager:
-            # The connected-components loop runs a driver action per
-            # round, so its inputs must not re-execute the upstream DAG
-            # every round: PERSIST (not localCheckpoint — persist keeps
-            # lineage, so losing an executor's blocks recomputes instead
-            # of permanently breaking the frame) live2 once and the
-            # verified pairs once. live2 pins (id, text) — the TEXT is
-            # required here, the shingle verify reads it four times
-            # (cand/card/a/b sides) — and is the floor for this stage:
-            # id+text caches ~22x smaller than the exploded shingle frame
-            # would (measured above). All caches are released before
-            # returning: CC's result is internally localCheckpointed
-            # (self-contained), and the returned frame only references
-            # tagged/exact_losers/near_losers. This stage is the ONLY
-            # eager path in curate(); with near-dedup off the plan stays
-            # fully lazy.
-            live2_p = live2.persist(StorageLevel.MEMORY_AND_DISK)
-            transient.append(live2_p)
-            named = live2_p.select(F.col(id_col).alias("doc_id"), "text")
-            pairs = (
-                _jaccard_on_candidates(named)
-                .where(F.col("jac") >= cfg.near_dup_jaccard_pm)
-                .select("id_a", "id_b")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            transient.append(pairs)
-            comp = connected_components(
-                live2_p.select(F.col(id_col).alias("id")), pairs)
-            near_losers = comp.where("rep != id").select(
-                F.col("id").alias(id_col))
-        else:
-            near_losers = live2.limit(0).select(id_col)
-    finally:
-        for p in transient:
-            p.unpersist()
-
-    # --- stitch the audit trail back together ---------------------------
-    return (
-        tagged
-        .join(exact_losers.select(
+    # --- stage 3: exact dedup -------------------------------------------
+    if cfg.exact_dedup:
+        keeper = live.groupBy("fp").agg(F.min(id_col).alias("keep_id"))
+        exact_losers = live.join(keeper, "fp") \
+            .where(F.col(id_col) != F.col("keep_id")).select(id_col)
+        live = live.join(exact_losers, id_col, "left_anti")
+        audit = audit.join(exact_losers.select(
             id_col, F.lit("exact_dup").alias("_r3")), id_col, "left")
-        .join(near_losers.select(
-            id_col, F.lit("near_dup").alias("_r4")), id_col, "left")
-        .select(
-            id_col, "text",
-            F.coalesce("drop_reason", "_r3", "_r4").alias("drop_reason"),
-        )
+        reasons.append("_r3")
+
+    # --- stage 4: near dedup --------------------------------------------
+    if cfg.near_dup_jaccard_pm is not None:
+        # text re-attaches from d for the survivors only; the verified
+        # pairs and the labels are pinned inside connected_components,
+        # so the LSH + Jaccard verify runs once
+        named = d.join(live.select(id_col), id_col, "left_semi") \
+            .select(F.col(id_col).alias("doc_id"), "text")
+        pairs = _jaccard_on_candidates(named) \
+            .where(F.col("jac") >= cfg.near_dup_jaccard_pm)
+        comp = connected_components(
+            live.select(F.col(id_col).alias("id")), pairs)
+        audit = audit.join(
+            comp.where("rep != id").select(
+                F.col("id").alias(id_col), F.lit("near_dup").alias("_r4")),
+            id_col, "left")
+        reasons.append("_r4")
+
+    # --- stitch the audit trail back onto the text ------------------------
+    return (
+        d.join(audit, id_col)
+        .select(id_col, "text",
+                F.coalesce(*reasons).alias("drop_reason"))
         .unionByName(null_rows)
     )
 
@@ -349,17 +293,15 @@ def assemble_mix(
     is on, neither when off).
 
     Eagerness (the ``curate`` id-frame contract): each stage's loser ids
-    are ``localCheckpoint(eager=True)``-ed as they are derived — three
-    tiny (id, reason) frames. Without this the composition is lazy but
+    are pinned (``_pin``) as they are derived — three tiny (id, reason)
+    frames. Without this the composition is lazy but
     QUADRATIC: ``sample_mixture`` references its input ~6 times and each
     reference would re-run the upstream anti-join chain INCLUDING the
     decontamination gram explode (measured at sf0.1 replicated 32x:
     the lazy form did not finish in 9 minutes; the checkpointed form
     runs the explode once). With the checkpoints, re-evaluating ``live``
-    is one corpus scan plus anti-joins against in-memory id frames.
-    Checkpointed id frames are self-contained (block loss is not
-    lineage-recoverable — acceptable for ids, rejected for corpora,
-    same trade as ``curate``).
+    is one corpus scan plus anti-joins against in-memory id frames
+    (``_pin`` states the block-loss trade).
     """
     if cfg.decontaminate_n is None and (
             benchmarks is not None or bench_keys is not None):
@@ -370,12 +312,6 @@ def assemble_mix(
     d = docs.select(F.col(id_col), F.col(source_col).alias("__src"),
                     F.col(host_col).alias("__host"),
                     F.col(text_col).alias("text"))
-
-    def _pin(ids: DataFrame) -> DataFrame:
-        # skinny (id, reason) frame: checkpoint so downstream stages and
-        # the final stitch replay anti-joins against a materialized frame
-        # instead of re-running this stage's (and its ancestors') DAG
-        return ids.localCheckpoint(eager=True)
 
     losers: list[DataFrame] = []  # (id, reason) frames, stage order
     live = d

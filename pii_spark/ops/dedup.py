@@ -146,43 +146,43 @@ def connected_components(
     of its own label and its neighbors' labels (one join + one groupBy),
     stopping at fixpoint. Dedup clusters are near-cliques with tiny
     diameter, so this converges in 2-3 rounds regardless of corpus size;
-    each round's shuffle carries (id, label) pairs only. The driver runs a
-    one-row convergence check per round (an iterative algorithm's inherent
-    control loop, not a data collect); at 100 TB checkpoint the label frame
-    every few rounds to truncate lineage."""
+    each round's shuffle carries (id, label) pairs only.
+
+    Lineage is cut at every step: the (id_a, id_b) pairs and the start
+    labels are ``localCheckpoint(eager=True)``-ed once (so an expensive
+    pair source — the LSH + Jaccard verify — runs exactly once), and each
+    round checkpoints its (id, old_rep, rep) frame, so a round plans one
+    join + groupBy over two in-memory frames, never the whole history.
+    The driver's one-row convergence check per round (an iterative
+    algorithm's inherent control loop, not a data collect) reads that
+    checkpointed frame. The result is self-contained; like any
+    checkpointed frame it cannot be rebuilt from lineage if an
+    executor's blocks are lost."""
+    pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(pairs.select(
         F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    labels = vertices.select(F.col("id"), F.col("id").alias("rep"))
-    stepped = None
+    labels = vertices.select(F.col("id"), F.col("id").alias("rep")) \
+        .localCheckpoint(eager=True)
     for _ in range(max_iter):
         nbr = (
             edges.join(labels.withColumnRenamed("id", "src"), "src")
             .groupBy("dst").agg(F.min("rep").alias("nrep"))
             .withColumnRenamed("dst", "id")
         )
-        # old and new label in ONE projection: the convergence check below
-        # is a filter on this frame, not an extra corpus-size join per round
-        prev = stepped
+        # old and new label in ONE frame: the convergence check is a
+        # filter on it, not an extra join per round
         stepped = (
             labels.join(nbr, "id", "left")
             .select("id", F.col("rep").alias("old_rep"),
                     F.least(F.col("rep"),
                             F.coalesce("nrep", "rep")).alias("rep"))
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        changed = stepped.where("rep < old_rep").limit(1).count()
-        if prev is not None:
-            prev.unpersist()
         labels = stepped.select("id", "rep")
-        if changed == 0:
-            # self-contained result with truncated lineage, then release the
-            # loop's cache — nothing stays pinned for the session's lifetime
-            out = labels.localCheckpoint(eager=True)
-            stepped.unpersist()
-            return out
-    stepped.unpersist()
+        if stepped.where("rep < old_rep").limit(1).count() == 0:
+            return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds — "
         "component diameter exceeds max_iter (raise it; labels would be "

@@ -172,11 +172,13 @@ def test_redaction_is_pure_projection_no_exchange_no_python(spark, tmp_path):
 
 def test_curation_dag_plan_no_cartesian_and_pruned_scan(spark, tmp_path):
     """The composed curate() DAG (all four stages) must never enumerate
-    pairs (LSH buckets only) and its parquet scan must prune to the two
-    columns the DAG reads."""
+    pairs (LSH buckets only) and its parquet scans must prune to the two
+    columns the DAG reads. curate() returns a stitch over pinned id
+    frames, so the near-dup verify it ran is checked on its own plan."""
     import pandas as pd
 
     from pii_spark.curation import CurationConfig, curate
+    from pii_spark.ops.dedup import _jaccard_on_candidates
 
     p = str(tmp_path / "docs")
     pd.DataFrame(
@@ -195,8 +197,16 @@ def test_curation_dag_plan_no_cartesian_and_pruned_scan(spark, tmp_path):
     plan = _plan(out)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    scan = re.search(r"ReadSchema: struct<([^>]*)", plan).group(1)
-    assert "unused" not in scan  # column pruning reached the source
+    scans = re.findall(r"ReadSchema: struct<([^>]*)", plan)
+    assert scans
+    for scan in scans:
+        assert "unused" not in scan  # column pruning reached the source
+    verify = _plan(_jaccard_on_candidates(
+        spark.read.parquet(p).select("doc_id", "text")))
+    # the LSH minhash/band stage is in this plan
+    assert re.search(r"md5\((cast\()?concat", verify)
+    assert "CartesianProduct" not in verify
+    assert "BroadcastNestedLoopJoin" not in verify
 
 
 def test_quality_gates_are_pure_projection_no_exchange(spark, tmp_path):

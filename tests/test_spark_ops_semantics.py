@@ -127,6 +127,19 @@ def test_connected_components_chain_triangle_isolated(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 99: 99}
 
 
+def test_connected_components_raises_when_not_converged(spark):
+    """The chain 1-2-3-4 needs more than one propagation round: with
+    max_iter=1 the labels are still moving, so the call must raise
+    rather than return wrong representatives."""
+    from pii_spark.ops.dedup import connected_components
+
+    verts = spark.createDataFrame([(i,) for i in (1, 2, 3, 4)], "id long")
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4)],
+                                  "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(verts, pairs, max_iter=1)
+
+
 def test_url_canonicalization_golden(spark):
     from pyspark.sql import functions as F
 
