@@ -23,8 +23,9 @@ The parquet emulation reproduces the atomicity with a PER-RUN COMMIT MARKER
    pass — the write is the only action). The extraction UDF counts each
    partition's lineage (docs, bytes, error rows, spans by type) over the
    rows it hands to that write, so nothing reads the run back: the
-   quarantine breaker runs on those counts and the lineage rows append
-   from them as one small driver-built frame.
+   quarantine breaker runs on those counts, and the lineage rows land
+   from them as one parquet file the driver publishes by rename (no
+   Spark job).
 3. ``<run_id>.committed`` lands last via write-to-temp + atomic rename.
    The marker IS the commit: every reader (``committed_urls``,
    ``lineage_summary``, the next increment's anti-join) filters to marked
@@ -78,7 +79,8 @@ def _committed_schema():
 
 def _lineage_schema():
     """Read schema for the lineage dir (hive-partitioned by run_id, same
-    STRING pinning rationale as ``_committed_schema``)."""
+    STRING pinning rationale as ``_committed_schema``); ``_append_lineage``
+    writes the other columns in these types."""
     from pyspark.sql import types as T  # noqa: PLC0415
 
     return T.StructType([
@@ -89,6 +91,19 @@ def _lineage_schema():
                       T.MapType(T.StringType(), T.LongType()), True),
         T.StructField("run_id", T.StringType(), False),
     ])
+
+
+# Characters Spark hive-escapes in a partition dir name on a POSIX host
+# (``ExternalCatalogUtils.escapePathName``): control chars, DEL and these.
+_HIVE_ESCAPED = frozenset('"#%\'*/:=?\\[]^{\x7f'
+                          + "".join(map(chr, range(1, 32))))
+
+
+def _escape_hive(value: str) -> str:
+    """Spark's partition-path escaping (%XX per special char), so a dir the
+    driver writes is named as a ``partitionBy`` write would name it."""
+    return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c
+                   for c in value)
 
 
 def _unescape_hive(name: str) -> str:
@@ -204,7 +219,9 @@ def run_incremental(
        (``extract_pages(counters=)``), read only after the write returns:
        no Spark action reads the run back, and a lineage row can never
        describe a document that failed to land (a failed write raises
-       before the counters are read).
+       before the counters are read). The rows land as one parquet file
+       the driver publishes by rename (``_append_lineage``), not as a
+       Spark job.
     4. The commit marker lands LAST (temp + atomic rename). A crash before
        it leaves the run unmarked: readers and the next increment's
        anti-join ignore it completely — its urls re-extract under the next
@@ -280,35 +297,9 @@ def run_incremental(
             "then adopt_crashed_runs to salvage or vacuum_uncommitted to "
             "discard")
     if n:
-        _append_lineage(_lineage_from_counters(spark, per_pid, run_id),
-                        lineage_dir)
+        _append_lineage(per_pid, run_id, lineage_dir)
     _write_marker(results_dir, run_id, n)
     return {"run_id": run_id, "docs": n, "errors": errs}
-
-
-def _lineage_from_counters(
-    spark: SparkSession, per_pid: dict, run_id: str
-) -> DataFrame:
-    """The run's lineage rows — the columns ``lineage_from_results`` builds —
-    from the write's per-partition counters, as one partition (one lineage
-    file per run). Built from a pandas frame so it ships over Arrow (a
-    row-list ``createDataFrame`` goes through a Python worker and costs
-    several times more)."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql import types as T  # noqa: PLC0415
-
-    pids = sorted(per_pid)
-    pdf = pd.DataFrame({
-        "run_id": [run_id] * len(pids),
-        "partition_id": pids,
-        "docs": [per_pid[p]["docs"] for p in pids],
-        "bytes": [per_pid[p]["bytes"] for p in pids],
-        "spans_by_type": [per_pid[p]["spans_by_type"] for p in pids],
-    })
-    schema = T.StructType(
-        [T.StructField("run_id", T.StringType(), False)]
-        + [f for f in _lineage_schema().fields if f.name != "run_id"])
-    return spark.createDataFrame(pdf, schema=schema).coalesce(1)
 
 
 def _flat_lineage_files(lineage_dir: str) -> list[str]:
@@ -404,12 +395,49 @@ def migrate_lineage_layout(spark: SparkSession, lineage_dir: str) -> int:
     return total
 
 
-def _append_lineage(lineage: DataFrame, lineage_dir: str) -> None:
-    """Lineage appends hive-partitioned by run_id — same layout as results —
-    so ``vacuum_uncommitted`` can discard a crashed run's lineage rows with
-    a driver-side rmtree instead of rewriting the side table."""
+def _append_lineage(per_pid: dict, run_id: str, lineage_dir: str) -> None:
+    """Land a run's lineage, one row per partition of ``per_pid`` (the
+    counters' shape: ``{partition_id: {"docs", "bytes", "spans_by_type",
+    ...}}``), as ONE parquet file under ``run_id=<escaped id>/`` — the
+    hive layout of results, so ``vacuum_uncommitted`` discards a crashed
+    run's lineage with a driver-side rmtree. So few rows are not worth a
+    Spark job: the driver writes them with pyarrow in ``_lineage_schema``'s
+    types into a hidden staging dir (readers skip it) and publishes that
+    dir with one rename. The ``run_id=`` dir, which ``_lineage_has_run``
+    reads as "landed", thus appears whole or not at all: a crash
+    mid-write leaves only staging, and adoption still writes the run's
+    lineage."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
+    from pyspark.sql import types as T  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
     _require_partitioned_layout(lineage_dir)
-    lineage.write.mode("append").partitionBy("run_id").parquet(lineage_dir)
+    schema = to_arrow_schema(T.StructType(
+        [f for f in _lineage_schema().fields if f.name != "run_id"]))
+    pids = sorted(per_pid)
+    table = pa.Table.from_pydict({
+        "partition_id": pids,
+        "docs": [per_pid[p]["docs"] for p in pids],
+        "bytes": [per_pid[p]["bytes"] for p in pids],
+        "spans_by_type": [sorted(per_pid[p]["spans_by_type"].items())
+                          for p in pids],
+    }, schema=schema)
+    staging, target = _lineage_run_dirs(lineage_dir, run_id)
+    shutil.rmtree(staging, ignore_errors=True)  # a crashed attempt's leftover
+    os.makedirs(staging)
+    pq.write_table(table, os.path.join(staging, "part-00000.snappy.parquet"),
+                   compression="snappy")
+    if os.path.lexists(target):
+        raise FileExistsError(f"lineage for run {run_id!r} already landed")
+    os.rename(staging, target)
+
+
+def _lineage_run_dirs(lineage_dir: str, run_id: str) -> tuple[str, str]:
+    """(hidden staging dir, published ``run_id=`` dir) of a run's lineage."""
+    name = "run_id=" + _escape_hive(run_id)
+    return (os.path.join(lineage_dir, "." + name),
+            os.path.join(lineage_dir, name))
 
 
 def adopt_crashed_runs(
@@ -460,13 +488,17 @@ def adopt_crashed_runs(
             f"crashed runs {between} extracted overlapping urls; adopting "
             "all of them would double-commit — vacuum the redundant ones "
             "first (nothing was adopted)")
-    # phase 2 — adopt: lineage (if missing) then marker, per run
+    # phase 2 — adopt: lineage (if missing) then marker, per run. Lineage
+    # is one row per partition, so collecting it is bounded by the
+    # partition count, not by the corpus.
     adopted = []
     for rid in rids:
         res = all_res.where(F.col("run_id") == rid)
-        n = res.count()
+        per_pid = {r["partition_id"]: r.asDict()
+                   for r in lineage_from_results(res, rid).collect()}
+        n = sum(c["docs"] for c in per_pid.values())
         if n and not _lineage_has_run(lineage_dir, rid):
-            _append_lineage(lineage_from_results(res, rid), lineage_dir)
+            _append_lineage(per_pid, rid, lineage_dir)
         _write_marker(results_dir, rid, n)
         adopted.append(rid)
     return adopted
@@ -489,6 +521,8 @@ def vacuum_uncommitted(results_dir: str, lineage_dir: str) -> list[str]:
             shutil.rmtree(part)
         for part in _run_partition_dirs(lineage_dir, rid):
             shutil.rmtree(part)
+        shutil.rmtree(_lineage_run_dirs(lineage_dir, rid)[0],
+                      ignore_errors=True)  # a crashed lineage write's staging
         os.remove(os.path.join(_commits_dir(results_dir), f"{rid}.reserved"))
         removed.append(rid)
     return removed

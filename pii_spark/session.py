@@ -19,10 +19,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Docs per Arrow batch entering the extraction UDF. Measured on the bench
-# corpus: 1024 beats 256 by ~25% (fewer batch boundaries / pandas
-# constructions) and 4096 regresses (worse tail balance); worst-case batch
-# memory at 1024 is ~64 MB (1024 x ~60 KB long-doc html) — safely bounded.
+# Docs per Arrow batch entering the extraction UDF. On 4 vCPUs (5,000-page
+# crawl passes, seeds 5 and 9, 8 alternating reps per size in one session)
+# 1024, 512 and 256 are within noise: medians 2.98 / 3.14 / 3.11 s and
+# 2.93 / 2.99 / 2.94 s per pass. 4096 was not re-timed; on an earlier host
+# it regressed (worse tail balance). The size bounds memory: the worst-case
+# batch at 1024 is ~64 MB (1024 x ~60 KB long-doc html).
 ARROW_BATCH = 1024
 
 

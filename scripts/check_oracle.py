@@ -52,6 +52,18 @@ def mismatch(sdf, odf) -> str | None:
     return None
 
 
+def query_line(ok: bool, name: str, detail: str, spark_s: float,
+               oracle_s: float | None = None) -> str:
+    """One per-query result line. Spark's seconds (plan + collect) and the
+    DuckDB oracle's seconds are timed apart and printed apart, so a slow
+    oracle is not read as a slow Spark query. The times come before the
+    detail, which may run over several lines."""
+    times = f"spark {spark_s:.1f}s"
+    if oracle_s is not None:
+        times += f", oracle {oracle_s:.1f}s"
+    return f"{'ok  ' if ok else 'FAIL'} {name} [{times}]: {detail}"
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
@@ -81,26 +93,32 @@ def main() -> int:
             sdf = fn(spark, args.sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"SPARK ERROR: {e}"))
-            print(f"FAIL {name}: spark error: {str(e)[:500]}")
+            print(query_line(False, name, f"spark error: {str(e)[:500]}",
+                             time.time() - t0))
             continue
+        spark_s = time.time() - t0
         if name not in ORACLES:
-            print(f"ok   {name}: rows-only, {len(sdf)} rows "
-                  f"({time.time() - t0:.1f}s)")
+            print(query_line(True, name, f"rows-only, {len(sdf)} rows",
+                             spark_s))
             if len(sdf) == 0:
                 failures.append((name, "rows-only query returned 0 rows"))
             continue
+        t0 = time.time()
         try:
             odf = con.execute(ORACLES[name]).df()
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"DUCKDB ERROR: {e}"))
-            print(f"FAIL {name}: duckdb error: {str(e)[:500]}")
+            print(query_line(False, name, f"duckdb error: {str(e)[:500]}",
+                             spark_s, time.time() - t0))
             continue
+        oracle_s = time.time() - t0
         why = mismatch(sdf, odf)
         if why is not None:
             failures.append((name, why))
-            print(f"FAIL {name}: {why}")
+            print(query_line(False, name, why, spark_s, oracle_s))
             continue
-        print(f"ok   {name}: {len(sdf)} rows match ({time.time() - t0:.1f}s)")
+        print(query_line(True, name, f"{len(sdf)} rows match", spark_s,
+                         oracle_s))
 
     spark.stop()
     print(f"\n{ran - len(failures)}/{ran} queries pass")

@@ -15,7 +15,7 @@ import json
 import pytest
 
 from pii_spark.queries import ORACLES, QUERIES
-from scripts.check_oracle import mismatch
+from scripts.check_oracle import mismatch, query_line
 
 FIXTURE_QUERIES = [
     "detector_counts", "checksum_validate", "should_be_public",
@@ -50,3 +50,12 @@ def test_fixture_query_matches_oracle(spark, sf_dir, duck, name):
     got = QUERIES[name](spark, sf_dir).toPandas()
     assert len(got) > 0
     assert mismatch(got, duck.execute(ORACLES[name]).df()) is None
+
+
+def test_query_line_times_spark_and_oracle_apart():
+    assert query_line(True, "curation_dag", "306 rows match", 12.44, 87.6) \
+        == "ok   curation_dag [spark 12.4s, oracle 87.6s]: 306 rows match"
+    assert query_line(True, "knn", "rows-only, 5 rows", 0.31) \
+        == "ok   knn [spark 0.3s]: rows-only, 5 rows"
+    assert query_line(False, "q", "2 differing rows\n  spark: []", 1.0, 0.0) \
+        == "FAIL q [spark 1.0s, oracle 0.0s]: 2 differing rows\n  spark: []"

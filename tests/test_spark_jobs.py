@@ -587,6 +587,163 @@ def test_vacuum_handles_hive_escaped_run_ids(spark, tmp_path, monkeypatch):
     assert out["docs"] == 6
 
 
+def _committed_rows(spark, rdir, rid):
+    import pii_spark.resume as resume
+
+    return spark.read.schema(resume._committed_schema()).parquet(rdir) \
+        .where(F.col("run_id") == rid)
+
+
+def _lineage_rows(spark, ldir, rid):
+    import pii_spark.resume as resume
+
+    return spark.read.schema(resume._lineage_schema()).parquet(ldir) \
+        .where(F.col("run_id") == rid).collect()
+
+
+def _summary(spark, ldir, rdir):
+    return sorted((r["run_id"], r["docs"], r["bytes"],
+                   sorted((r["spans_by_type"] or {}).items()))
+                  for r in lineage_summary(spark, ldir, rdir).collect())
+
+
+def test_lineage_crash_before_publish_leaves_no_run_dir(
+        spark, tmp_path, monkeypatch):
+    """The driver writes a run's lineage file into hidden staging and
+    publishes it with one dir rename. A crash after the file is written
+    but before the rename must leave no ``run_id=`` dir: an existing one
+    reads as "lineage landed", so a dir made before the write would let
+    ``adopt_crashed_runs`` skip the run's lineage for good."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    import pii_spark.resume as resume
+    from pii_spark.extract import lineage_from_results
+
+    rdir, ldir = str(tmp_path / "res"), str(tmp_path / "lin")
+    run_incremental(spark, pages_df(spark, 8, seed=3), rdir, ldir, "r1",
+                    num_partitions=2)
+    before = _summary(spark, ldir, rdir)
+
+    written: list[str] = []
+    real = pq.write_table
+
+    def write_then_crash(table, where, *a, **k):
+        real(table, where, *a, **k)
+        written.append(where)
+        raise RuntimeError("crash before lineage publish")
+
+    monkeypatch.setattr(pq, "write_table", write_then_crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        run_incremental(spark, pages_df(spark, 12, seed=3), rdir, ldir, "r2",
+                        num_partitions=2)
+    monkeypatch.undo()
+
+    assert len(written) == 1 and os.path.isfile(written[0])
+    assert resume._run_partition_dirs(ldir, "r2") == []
+    assert not resume._lineage_has_run(ldir, "r2")
+    assert _summary(spark, ldir, rdir) == before
+
+    assert resume.adopt_crashed_runs(spark, rdir, ldir) == ["r2"]
+    got = _lineage_rows(spark, ldir, "r2")
+    want = lineage_from_results(_committed_rows(spark, rdir, "r2"),
+                                "r2").collect()
+    assert sum(r["docs"] for r in got) == 4
+    assert _lineage_key(got) == _lineage_key(want)
+
+    # vacuuming a run that crashed the same way leaves no staging behind
+    monkeypatch.setattr(pq, "write_table", write_then_crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        run_incremental(spark, pages_df(spark, 14, seed=3), rdir, ldir, "r3",
+                        num_partitions=2)
+    monkeypatch.undo()
+    assert resume.vacuum_uncommitted(rdir, ldir) == ["r3"]
+    assert sorted(os.listdir(ldir)) == ["run_id=r1", "run_id=r2"]
+
+
+HIVE_ESCAPED_RUN_IDS = [
+    "2026-08-16T10:30:00", "a=b", "x%y", "q?#*", "sp ace", "br[a]{c}^",
+    "tab\tx", "quo'te\"",
+]
+
+
+def test_driver_lineage_dir_names_match_spark_escaping(
+        spark, tmp_path, monkeypatch):
+    """The driver names a run's lineage dir as Spark's ``partitionBy``
+    names the run's results dir (``ExternalCatalogUtils.escapePathName``),
+    so every reader and ``vacuum_uncommitted`` finds both by one rule."""
+    import os
+
+    import pii_spark.resume as resume
+
+    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog \
+        .ExternalCatalogUtils.escapePathName
+    rdir, ldir = str(tmp_path / "res"), str(tmp_path / "lin")
+
+    def run_dirs(base):
+        return sorted(d for d in os.listdir(base) if d.startswith("run_id="))
+
+    # crashed before the marker: both dirs land, the run stays uncommitted
+    _crash_before_marker(monkeypatch)
+    for i, rid in enumerate(HIVE_ESCAPED_RUN_IDS):
+        with pytest.raises(RuntimeError, match="crash"):
+            run_incremental(spark, pages_df(spark, 3, seed=100 + i), rdir,
+                            ldir, rid, num_partitions=2)
+    monkeypatch.undo()
+    want = sorted(f"run_id={escape(rid)}" for rid in HIVE_ESCAPED_RUN_IDS)
+    assert run_dirs(ldir) == run_dirs(rdir) == want
+
+    assert resume.vacuum_uncommitted(rdir, ldir) \
+        == sorted(HIVE_ESCAPED_RUN_IDS)
+    assert run_dirs(ldir) == run_dirs(rdir) == []
+
+    for i, rid in enumerate(HIVE_ESCAPED_RUN_IDS):
+        run_incremental(spark, pages_df(spark, 3, seed=100 + i), rdir, ldir,
+                        rid, num_partitions=2)
+    assert run_dirs(ldir) == run_dirs(rdir) == want
+    assert {r["run_id"]: r["docs"]
+            for r in lineage_summary(spark, ldir, rdir).collect()} \
+        == {rid: 3 for rid in HIVE_ESCAPED_RUN_IDS}
+
+
+def test_spark_written_and_driver_written_lineage_mix(spark, tmp_path):
+    """Existing deployments hold lineage that Spark's ``partitionBy`` wrote.
+    Runs the driver writes next to it must read through ``lineage_summary``
+    and ``_lineage_schema`` with the same per-partition rows as
+    ``lineage_from_results``."""
+    import shutil
+    from collections import Counter
+
+    import pii_spark.resume as resume
+    from pii_spark.extract import lineage_from_results
+
+    rdir, ldir = str(tmp_path / "res"), str(tmp_path / "lin")
+    rids = ["old", "new1", "2026-08-16T10:30:00"]
+    for i, rid in enumerate(rids):
+        run_incremental(spark, pages_df(spark, 10 + i, seed=20 + i), rdir,
+                        ldir, rid, num_partitions=3)
+        if rid == "old":  # rewrite this run's lineage the Spark way
+            shutil.rmtree(resume._run_partition_dirs(ldir, rid)[0])
+            lineage_from_results(_committed_rows(spark, rdir, rid), rid) \
+                .write.mode("append").partitionBy("run_id").parquet(ldir)
+
+    summ = {r["run_id"]: r
+            for r in lineage_summary(spark, ldir, rdir).collect()}
+    assert set(summ) == set(rids)
+    for i, rid in enumerate(rids):
+        want = lineage_from_results(_committed_rows(spark, rdir, rid),
+                                    rid).collect()
+        assert _lineage_key(_lineage_rows(spark, ldir, rid)) \
+            == _lineage_key(want), rid
+        assert summ[rid]["docs"] == 10 + i
+        assert summ[rid]["bytes"] == sum(r["bytes"] for r in want)
+        spans = Counter()
+        for r in want:
+            spans.update(r["spans_by_type"])
+        assert summ[rid]["spans_by_type"] == dict(spans), rid
+
+
 @pytest.fixture()
 def tiny_results(spark):
     from pii_spark.extract import extract_pages
