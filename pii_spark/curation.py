@@ -8,15 +8,15 @@ order real pipelines use):
 1. **line-level boilerplate removal** (optional, ``ops.dedup.line_dedup``)
    — transforms text, drops nothing.
 2. **quality gates** — token count + Gopher repetition signals
-   (``ops.textstats.repetition_stats`` / ``ngram_repetition_stats``);
+   (``ops.textstats.with_dup_line_stats`` /
+   ``with_ngram_repetition_stats``);
    cheap doc-local filters run BEFORE any corpus-wide dedup work.
 3. **exact dedup** — whitespace-normalized md5 fingerprint, keep the
    minimum doc id per group.
 4. **near dedup** — MinHash+LSH candidates → exact-Jaccard verify →
    connected components → keep each cluster's minimum id
-   (``ops.dedup._shingles`` / ``_jaccard_on_candidates`` /
-   ``connected_components``: the dedup_lsh_jaccard + dedup_clusters
-   composition).
+   (``ops.dedup._jaccard_on_candidates`` / ``connected_components``: the
+   dedup_lsh_jaccard + dedup_clusters composition).
 
 ``curate`` returns ONE frame: every input doc id with its (possibly
 line-deduped) text and a ``drop_reason`` — null for survivors, else the

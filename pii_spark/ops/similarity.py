@@ -376,10 +376,13 @@ def register_queries(register) -> None:
         the former per-pair expression evaluated, on the same exact
         integers. The crossJoin + 3 interpreted HOF dots per pair form
         ran ~corpus × probes × 3 × dim lambda dispatches (it stopped
-        finishing at sf1.0's 20k×800 pairs; this finishes in ~1 s).
-        Probes ≪ corpus by the injection construction; corpus-scale
-        all-pairs similarity belongs to knn_lsh / knn_ivf, as SCALE.md
-        documents."""
+        finishing at sf1.0; this finishes in ~1 s). Every aug row with
+        vec_id ≥ 10000 is a probe, originals included: 80 of 2,080 rows
+        at sf0.1 (2,000 embeddings), but about 10,800 of 20,800 at a
+        20,000-row table, whose originals from 10,000 up count too — so
+        the collected probe matrix is not small at that scale.
+        Corpus-scale all-pairs similarity belongs to knn_lsh / knn_ivf,
+        as SCALE.md documents."""
         e = _t(spark, sf_dir, "embeddings").select(
             "vec_id", _quant("embedding").alias("e"))
         aug = e.unionByName(

@@ -48,7 +48,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -106,26 +105,14 @@ def _escape_hive(value: str) -> str:
                    for c in value)
 
 
-def _unescape_hive(name: str) -> str:
-    """Invert Spark/Hive partition-path escaping (%XX per special char)."""
-    return re.sub("%([0-9A-Fa-f]{2})",
-                  lambda m: chr(int(m.group(1), 16)), name)
-
-
-def _run_partition_dirs(base: str, run_id: str) -> list[str]:
-    """On-disk ``run_id=<id>`` partition dirs for ``run_id`` under ``base``.
-
-    Spark hive-ESCAPES special characters when writing partition dirs (a
-    run_id like ``2026-08-16T10:30:00`` lands as ``...10%3A30%3A00``), so a
-    path built by f-string would silently miss it; match by unescaping the
-    directory names instead."""
-    if not os.path.isdir(base):
-        return []
-    return [
-        os.path.join(base, d) for d in os.listdir(base)
-        if d.startswith("run_id=") and os.path.isdir(os.path.join(base, d))
-        and _unescape_hive(d[len("run_id="):]) == run_id
-    ]
+def _run_dir(base: str, run_id: str, staging: bool = False) -> str:
+    """``run_id``'s partition dir under ``base`` — results, lineage, or with
+    ``staging`` the hidden ``.run_id=`` dir a lineage write publishes from.
+    Named as ``partitionBy`` names it (a run_id like
+    ``2026-08-16T10:30:00`` lands as ``...10%3A30%3A00``), so a path built
+    by f-string from the raw id would miss it."""
+    return os.path.join(base, ("." if staging else "") + "run_id="
+                        + _escape_hive(run_id))
 
 
 def _commits_dir(results_dir: str) -> str:
@@ -252,9 +239,9 @@ def run_incremental(
         # (errs > -x*n always holds), >1 silently disables the breaker
         raise ValueError(
             f"max_error_rate must be in [0, 1]: {max_error_rate}")
-    # Layout check BEFORE any work: discovering a legacy flat lineage dir
-    # only when the post-extraction append fails would waste the whole
-    # increment (hours of cluster time) and force a vacuum + re-run.
+    # Layout check BEFORE any work: refusing a flat lineage dir only at the
+    # post-extraction append would waste the whole increment (hours of
+    # cluster time) and force a vacuum + re-run.
     _require_partitioned_layout(lineage_dir)
     _reserve(results_dir, run_id)
 
@@ -302,97 +289,22 @@ def run_incremental(
     return {"run_id": run_id, "docs": n, "errors": errs}
 
 
-def _flat_lineage_files(lineage_dir: str) -> list[str]:
-    """Top-level parquet data files from the PRE-partitioned lineage layout
-    (run_id as a data column). Spark's partition discovery IGNORES these
-    once any ``run_id=`` dir exists in the same directory, so mixing the
-    layouts would silently drop every legacy row from ``lineage_summary``
-    — writers and readers refuse instead (see ``migrate_lineage_layout``)."""
-    if not os.path.isdir(lineage_dir):
-        return []
-    return sorted(
-        os.path.join(lineage_dir, f) for f in os.listdir(lineage_dir)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-        and os.path.isfile(os.path.join(lineage_dir, f))
-    )
-
-
 def _require_partitioned_layout(lineage_dir: str) -> None:
-    if _flat_lineage_files(lineage_dir):
+    """Refuse a lineage dir holding top-level parquet data files: the flat
+    layout (run_id as a data column) that no supported version writes.
+    Spark's partition discovery IGNORES such files once any ``run_id=`` dir
+    sits beside them, so appending to or reading that dir would silently
+    drop their rows. Each entry point runs this once, before any Spark job
+    or reservation."""
+    if os.path.isdir(lineage_dir) and any(
+            f.endswith(".parquet") and not f.startswith((".", "_"))
+            and os.path.isfile(os.path.join(lineage_dir, f))
+            for f in os.listdir(lineage_dir)):
         raise ValueError(
-            f"lineage dir {lineage_dir!r} holds flat-layout parquet files "
-            "from a pre-partitioned version; run "
-            "pii_spark.resume.migrate_lineage_layout(spark, lineage_dir) "
-            "first — mixing layouts would silently drop the legacy rows")
-
-
-def migrate_lineage_layout(spark: SparkSession, lineage_dir: str) -> int:
-    """One-time upgrade of a legacy flat lineage dir (run_id as a data
-    column) to the hive-partitioned layout. Returns migrated row count.
-
-    Crash-safe via a staging MANIFEST: the partitioned copy is written to a
-    sibling ``<dir>.migrated`` and a manifest (source file list + row
-    count) lands last via atomic rename — only then are flat files
-    deleted. Re-runnable at any kill point:
-
-    * crash before the manifest → staging is an incomplete write with all
-      flat sources still in place; the rerun discards it and rewrites.
-    * crash mid-delete or before the move → the manifest names exactly
-      which flat files the staging copy covers; the rerun finishes their
-      deletion from the list (NOT from a re-listing, which would rebuild
-      staging from the surviving subset and lose the already-deleted
-      files' only remaining copy), moves the partitions in, and reports
-      the manifest's row count."""
-    staging = lineage_dir.rstrip("/") + ".migrated"
-    manifest = os.path.join(staging, "_MIGRATION_MANIFEST.json")
-    total = 0
-
-    def complete_from_manifest() -> int:
-        with open(manifest) as f:
-            m = json.load(f)
-        for name in m["sources"]:
-            p = os.path.join(lineage_dir, name)
-            if os.path.isfile(p):
-                os.remove(p)
-        for d in os.listdir(staging):
-            if d.startswith("run_id="):
-                dst = os.path.join(lineage_dir, d)
-                if os.path.isdir(dst):  # merge partition contents
-                    for part in os.listdir(os.path.join(staging, d)):
-                        shutil.move(os.path.join(staging, d, part), dst)
-                else:
-                    shutil.move(os.path.join(staging, d), dst)
-        # the manifest must outlive the partition moves: while it exists a
-        # rerun re-enters here (deletes and moves are both idempotent). If
-        # it were removed first, a crash between the removal and the moves
-        # would leave staging manifest-less with the flat sources already
-        # deleted — and the "incomplete write" rmtree branch below would
-        # then destroy the only remaining copy of the unmoved rows.
-        os.remove(manifest)
-        shutil.rmtree(staging)
-        return int(m["rows"])
-
-    if os.path.isdir(staging):
-        if os.path.isfile(manifest):
-            total += complete_from_manifest()  # finish a crashed migration
-        else:
-            shutil.rmtree(staging)  # incomplete write; sources intact
-
-    flat = _flat_lineage_files(lineage_dir)
-    if flat:
-        df = spark.read.parquet(*flat).withColumn(
-            "run_id", F.col("run_id").cast("string"))
-        n = df.count()
-        df.write.mode("overwrite").partitionBy("run_id").parquet(staging)
-        tmp = manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"sources": [os.path.basename(p) for p in flat],
-                       "rows": n}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, manifest)  # the migration's commit point
-        total += complete_from_manifest()
-    return total
+            f"lineage dir {lineage_dir!r} holds top-level parquet files: the "
+            "flat lineage layout (run_id as a data column) is unsupported — "
+            "move those files out or use a fresh lineage_dir; mixed with "
+            "run_id= partitions their rows would be silently dropped")
 
 
 def _append_lineage(per_pid: dict, run_id: str, lineage_dir: str) -> None:
@@ -412,7 +324,6 @@ def _append_lineage(per_pid: dict, run_id: str, lineage_dir: str) -> None:
     from pyspark.sql import types as T  # noqa: PLC0415
     from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
 
-    _require_partitioned_layout(lineage_dir)
     schema = to_arrow_schema(T.StructType(
         [f for f in _lineage_schema().fields if f.name != "run_id"]))
     pids = sorted(per_pid)
@@ -423,7 +334,8 @@ def _append_lineage(per_pid: dict, run_id: str, lineage_dir: str) -> None:
         "spans_by_type": [sorted(per_pid[p]["spans_by_type"].items())
                           for p in pids],
     }, schema=schema)
-    staging, target = _lineage_run_dirs(lineage_dir, run_id)
+    staging = _run_dir(lineage_dir, run_id, staging=True)
+    target = _run_dir(lineage_dir, run_id)
     shutil.rmtree(staging, ignore_errors=True)  # a crashed attempt's leftover
     os.makedirs(staging)
     pq.write_table(table, os.path.join(staging, "part-00000.snappy.parquet"),
@@ -431,13 +343,6 @@ def _append_lineage(per_pid: dict, run_id: str, lineage_dir: str) -> None:
     if os.path.lexists(target):
         raise FileExistsError(f"lineage for run {run_id!r} already landed")
     os.rename(staging, target)
-
-
-def _lineage_run_dirs(lineage_dir: str, run_id: str) -> tuple[str, str]:
-    """(hidden staging dir, published ``run_id=`` dir) of a run's lineage."""
-    name = "run_id=" + _escape_hive(run_id)
-    return (os.path.join(lineage_dir, "." + name),
-            os.path.join(lineage_dir, name))
 
 
 def adopt_crashed_runs(
@@ -462,6 +367,7 @@ def adopt_crashed_runs(
     or use ``vacuum_uncommitted``. The refusal is ALL-OR-NOTHING: every
     candidate is validated BEFORE any marker is written, so a raise never
     leaves some runs silently adopted with the adopted-ids list lost."""
+    _require_partitioned_layout(lineage_dir)
     rids = _uncommitted_run_ids(results_dir)
     if not rids:
         return []
@@ -510,19 +416,18 @@ def vacuum_uncommitted(results_dir: str, lineage_dir: str) -> list[str]:
     load-bearing: a run that crashed between the lineage append and the
     marker left orphan lineage rows, and releasing the reservation without
     removing them would let a reused run_id double-count in
-    ``lineage_summary``. Partition dirs are located by UNESCAPING hive names
-    (``_run_partition_dirs``) — a path built by f-string misses escaped ids.
-    Driver-side file ops over O(runs) entries — never a Spark job. Must not
-    race a live increment (the single-operator assumption under which
-    run_incremental is documented)."""
+    ``lineage_summary``. Each run's dirs (results, lineage, and a crashed
+    lineage write's staging) are named by ``_run_dir``, hive-escaped as
+    Spark names them; a dir the crash never made is skipped, any other
+    removal error raises. Driver-side file ops over O(runs) entries — never
+    a Spark job. Must not race a live increment (the single-operator
+    assumption under which run_incremental is documented)."""
     removed = []
     for rid in _uncommitted_run_ids(results_dir):
-        for part in _run_partition_dirs(results_dir, rid):
-            shutil.rmtree(part)
-        for part in _run_partition_dirs(lineage_dir, rid):
-            shutil.rmtree(part)
-        shutil.rmtree(_lineage_run_dirs(lineage_dir, rid)[0],
-                      ignore_errors=True)  # a crashed lineage write's staging
+        for part in (_run_dir(results_dir, rid), _run_dir(lineage_dir, rid),
+                     _run_dir(lineage_dir, rid, staging=True)):
+            if os.path.lexists(part):
+                shutil.rmtree(part)
         os.remove(os.path.join(_commits_dir(results_dir), f"{rid}.reserved"))
         removed.append(rid)
     return removed
@@ -538,9 +443,9 @@ def _uncommitted_run_ids(results_dir: str) -> list[str]:
 
 
 def _lineage_has_run(lineage_dir: str, run_id: str) -> bool:
-    """A run's lineage landed iff its hive partition dir exists (escape-
-    aware): cheaper and crash-equivalent to scanning the parquet."""
-    return bool(_run_partition_dirs(lineage_dir, run_id))
+    """A run's lineage landed iff its hive partition dir exists: cheaper
+    and crash-equivalent to scanning the parquet."""
+    return os.path.isdir(_run_dir(lineage_dir, run_id))
 
 
 def _lineage_summary_schema():
@@ -567,7 +472,7 @@ def lineage_summary(
     _require_partitioned_layout(lineage_dir)
     if not _exists(lineage_dir):
         # legitimate committed states write no lineage at all (a zero-doc
-        # first increment commits via the early-return path) — an empty
+        # increment commits its marker but lands no lineage) — an empty
         # rollup, not PATH_NOT_FOUND
         return spark.createDataFrame([], _lineage_summary_schema())
     lin = spark.read.schema(_lineage_schema()).parquet(lineage_dir)

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 
 
 def main() -> int:
@@ -76,14 +77,14 @@ def main() -> int:
         from pii_spark.ops.redact import redact_results
         from pii_spark.resume import (
             _committed_schema,
-            _run_partition_dirs,
+            _run_dir,
             committed_run_ids,
         )
 
         if run_id not in committed_run_ids(args.output):
             raise SystemExit(f"run_id {run_id!r} is not committed in "
                              f"{args.output!r}")
-        if not _run_partition_dirs(args.output, run_id):
+        if not os.path.isdir(_run_dir(args.output, run_id)):
             return None  # zero-doc commit: marker exists, no parquet landed
         committed = (
             spark.read.schema(_committed_schema()).parquet(args.output)
@@ -128,9 +129,9 @@ def main() -> int:
         max_error_rate=args.max_error_rate,
     )
     if args.redact:
-        # a zero-doc increment commits via the early-return path without
-        # ever landing parquet — reading args.output back would crash
-        # AFTER a successful commit; there is nothing to redact anyway
+        # a zero-doc increment commits its marker without landing any
+        # parquet — reading args.output back would crash AFTER a
+        # successful commit; there is nothing to redact anyway
         out["redacted_dir"] = write_redacted(run_id) if out["docs"] else None
     print(json.dumps(out))
     spark.stop()

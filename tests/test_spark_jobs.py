@@ -430,134 +430,61 @@ def test_error_rate_circuit_breaker_refuses_systemic_failure(
     assert resume.committed_run_ids(rdir) == ["r2"]
 
 
-def test_legacy_flat_lineage_refused_then_migrated(spark, tmp_path):
-    """A lineage dir written by the pre-partitioned layout (run_id as a
-    data column in flat files) must be REFUSED by writers and readers —
-    Spark's partition discovery would silently drop every legacy row once
-    a run_id= dir appears — and migrate_lineage_layout must carry the rows
-    into the partitioned layout losslessly."""
-    import pii_spark.resume as resume
-
-    rdir, ldir = str(tmp_path / "res"), str(tmp_path / "lin")
-    legacy = spark.createDataFrame(
-        [("r0", 0, 5, 1234, {"CONTATO": 3})],
-        "run_id string, partition_id int, docs long, bytes long, "
-        "spans_by_type map<string,bigint>")
-    legacy.select("partition_id", "docs", "bytes", "spans_by_type",
-                  "run_id").write.mode("append").parquet(ldir)
-
-    with pytest.raises(ValueError, match="migrate_lineage_layout"):
-        run_incremental(spark, pages_df(spark, 4, seed=6), rdir, ldir, "r1",
-                        num_partitions=2)
-    with pytest.raises(ValueError, match="migrate_lineage_layout"):
-        lineage_summary(spark, ldir, rdir)
-
-    # the layout check fires BEFORE the run_id reservation (submit time, no
-    # cluster work wasted), so the refused attempt left nothing to vacuum
-    assert resume.vacuum_uncommitted(rdir, ldir) == []
-
-    assert resume.migrate_lineage_layout(spark, ldir) == 1
-    assert resume.migrate_lineage_layout(spark, ldir) == 0  # idempotent
-
-    # the migrated run is readable once marked; new increments append fine
-    out = run_incremental(spark, pages_df(spark, 4, seed=6), rdir, ldir,
-                          "r1", num_partitions=2)
-    assert out["docs"] == 4
-    resume._write_marker(rdir, "r0", 5)  # mark the legacy run committed
-    summ = {r["run_id"]: r
-            for r in lineage_summary(spark, ldir, rdir).collect()}
-    assert summ["r0"]["docs"] == 5
-    assert summ["r0"]["spans_by_type"] == {"CONTATO": 3}
-    assert summ["r1"]["docs"] == 4
-
-
-def test_migration_crash_mid_delete_loses_no_rows(spark, tmp_path):
-    """The migration's manifest is its commit point: if a prior attempt
-    crashed after deleting SOME flat source files, the rerun must finish
-    from the manifest (whose staging copy holds every row) — re-listing
-    the surviving flat files would rebuild staging from the subset and
-    destroy the deleted files' only remaining copy."""
-    import os
-
-    import pii_spark.resume as resume
-
-    ldir = str(tmp_path / "lin")
-    schema = ("run_id string, partition_id int, docs long, bytes long, "
-              "spans_by_type map<string,bigint>")
-    for rid, docs in [("a", 3), ("b", 7)]:
-        spark.createDataFrame([(rid, 0, docs, 100, {"CONTATO": 1})], schema) \
-            .select("partition_id", "docs", "bytes", "spans_by_type",
-                    "run_id").coalesce(1).write.mode("append").parquet(ldir)
-
-    # run the first phase for real (staging + manifest), then simulate the
-    # crash window: one flat source deleted, the other still present
-    flat = resume._flat_lineage_files(ldir)
-    assert len(flat) == 2
-    staging = ldir.rstrip("/") + ".migrated"
-    df = spark.read.parquet(*flat)
-    df.write.mode("overwrite").partitionBy("run_id").parquet(staging)
-    import json as _json
-    with open(os.path.join(staging, "_MIGRATION_MANIFEST.json"), "w") as f:
-        _json.dump({"sources": [os.path.basename(p) for p in flat],
-                    "rows": 2}, f)
-    os.remove(flat[0])
-
-    assert resume.migrate_lineage_layout(spark, ldir) == 2
-    rdir = str(tmp_path / "res")
-    os.makedirs(resume._commits_dir(rdir))
-    for rid in ("a", "b"):
-        resume._write_marker(rdir, rid, 0)
-    summ = {r["run_id"]: r["docs"]
-            for r in lineage_summary(spark, ldir, rdir).collect()}
-    assert summ == {"a": 3, "b": 7}  # both legacy runs intact
-
-
-def test_migration_crash_mid_move_loses_no_rows(spark, tmp_path):
-    """Kill window AFTER the flat sources are deleted and PART of the
-    staged partitions are moved in: the manifest must still be present
-    (it is removed only once every move completed), so the rerun finishes
-    from it. Under the old ordering (manifest removed before the moves) a
-    crash here left staging manifest-less with the sources already gone,
-    and the rerun's incomplete-write branch rmtree'd the only remaining
-    copy of the unmoved rows."""
+def test_legacy_flat_lineage_refused_by_every_entry_point(
+        spark, tmp_path, monkeypatch):
+    """A lineage dir in the flat layout (run_id as a data column in
+    top-level files), which no supported version writes, must be REFUSED
+    by every entry point before any reservation or Spark job: Spark's
+    partition discovery would silently drop every flat row once a run_id=
+    dir appears beside them. Moving the flat files out clears it."""
     import os
     import shutil
 
     import pii_spark.resume as resume
 
-    ldir = str(tmp_path / "lin")
-    schema = ("run_id string, partition_id int, docs long, bytes long, "
-              "spans_by_type map<string,bigint>")
-    for rid, docs in [("a", 3), ("b", 7)]:
-        spark.createDataFrame([(rid, 0, docs, 100, {"CONTATO": 1})], schema) \
-            .select("partition_id", "docs", "bytes", "spans_by_type",
-                    "run_id").coalesce(1).write.mode("append").parquet(ldir)
+    rdir, ldir = str(tmp_path / "res"), str(tmp_path / "lin")
+    # a crashed run whose results landed but whose lineage did not, so
+    # adoption would have to write lineage into the flat dir
+    _crash_after_results(monkeypatch)
+    with pytest.raises(RuntimeError, match="crash"):
+        run_incremental(spark, pages_df(spark, 4, seed=6), rdir, ldir, "r0",
+                        num_partitions=2)
+    monkeypatch.undo()
+    legacy = spark.createDataFrame(
+        [("old", 0, 5, 1234, {"CONTATO": 3})],
+        "run_id string, partition_id int, docs long, bytes long, "
+        "spans_by_type map<string,bigint>")
+    legacy.select("partition_id", "docs", "bytes", "spans_by_type",
+                  "run_id").write.mode("append").parquet(ldir)
+    flat = [f for f in os.listdir(ldir) if f.endswith(".parquet")]
+    assert flat
+    pages = pages_df(spark, 4, seed=7)
 
-    # phase 1 for real: staging + manifest
-    flat = resume._flat_lineage_files(ldir)
-    assert len(flat) == 2
-    staging = ldir.rstrip("/") + ".migrated"
-    spark.read.parquet(*flat).write.mode("overwrite") \
-        .partitionBy("run_id").parquet(staging)
-    import json as _json
-    with open(os.path.join(staging, "_MIGRATION_MANIFEST.json"), "w") as f:
-        _json.dump({"sources": [os.path.basename(p) for p in flat],
-                    "rows": 2}, f)
-    # simulate the crash window: all sources deleted, ONE partition moved
-    for p in flat:
-        os.remove(p)
-    shutil.move(os.path.join(staging, "run_id=a"),
-                os.path.join(ldir, "run_id=a"))
+    sc = spark.sparkContext
+    sc.setJobGroup("flat-lineage-refused", "flat lineage entry points")
+    try:
+        with pytest.raises(ValueError, match="layout .* is unsupported"):
+            run_incremental(spark, pages, rdir, ldir, "r1", num_partitions=2)
+        with pytest.raises(ValueError, match="layout .* is unsupported"):
+            resume.adopt_crashed_runs(spark, rdir, ldir)
+        with pytest.raises(ValueError, match="layout .* is unsupported"):
+            lineage_summary(spark, ldir, rdir)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    assert sc.statusTracker().getJobIdsForGroup("flat-lineage-refused") == []
+    assert resume.committed_run_ids(rdir) == []
+    # r1 was refused before its reservation: only the crashed r0 is pending
+    assert resume._uncommitted_run_ids(rdir) == ["r0"]
 
-    assert resume.migrate_lineage_layout(spark, ldir) == 2
-    assert not os.path.isdir(staging)
-    rdir = str(tmp_path / "res")
-    os.makedirs(resume._commits_dir(rdir))
-    for rid in ("a", "b"):
-        resume._write_marker(rdir, rid, 0)
-    summ = {r["run_id"]: r["docs"]
-            for r in lineage_summary(spark, ldir, rdir).collect()}
-    assert summ == {"a": 3, "b": 7}  # run b survived the crash window
+    aside = str(tmp_path / "flat")
+    os.makedirs(aside)
+    for f in flat:
+        shutil.move(os.path.join(ldir, f), aside)
+    assert resume.adopt_crashed_runs(spark, rdir, ldir) == ["r0"]
+    assert {r["run_id"]: r["docs"]
+            for r in lineage_summary(spark, ldir, rdir).collect()} \
+        == {"r0": 4}
 
 
 def test_vacuum_handles_hive_escaped_run_ids(spark, tmp_path, monkeypatch):
@@ -641,7 +568,7 @@ def test_lineage_crash_before_publish_leaves_no_run_dir(
     monkeypatch.undo()
 
     assert len(written) == 1 and os.path.isfile(written[0])
-    assert resume._run_partition_dirs(ldir, "r2") == []
+    assert not os.path.lexists(resume._run_dir(ldir, "r2"))
     assert not resume._lineage_has_run(ldir, "r2")
     assert _summary(spark, ldir, rdir) == before
 
@@ -724,7 +651,7 @@ def test_spark_written_and_driver_written_lineage_mix(spark, tmp_path):
         run_incremental(spark, pages_df(spark, 10 + i, seed=20 + i), rdir,
                         ldir, rid, num_partitions=3)
         if rid == "old":  # rewrite this run's lineage the Spark way
-            shutil.rmtree(resume._run_partition_dirs(ldir, rid)[0])
+            shutil.rmtree(resume._run_dir(ldir, rid))
             lineage_from_results(_committed_rows(spark, rdir, rid), rid) \
                 .write.mode("append").partitionBy("run_id").parquet(ldir)
 
