@@ -19,6 +19,7 @@ per-row Python at the DataFrame level.
 from __future__ import annotations
 
 import re
+from itertools import compress
 
 from pii_core.spans import Span
 
@@ -111,37 +112,29 @@ def _batch_checksum(values, n: int, scalar_fn, check_fn) -> np.ndarray:
     if not len_ok.any():
         return out
     cand = s[len_ok].tolist()
-    try:
-        # fast path: every length-n candidate is ASCII — one concatenated
-        # byte buffer, digit-ness checked on the matrix itself (no
-        # per-element regex)
-        mat = (np.frombuffer("".join(cand).encode("ascii"), np.uint8)
+    # ONE matrix path: the ASCII candidates concatenate into one byte
+    # buffer, digit-ness checked on the matrix itself (no per-element
+    # regex). Non-ASCII decimal digits pass the scalar validators
+    # (str.isdecimal + int accept them), so only the non-ASCII candidates
+    # take the scalar function, for exact parity. str.isascii is O(1), so
+    # an all-ASCII batch pays no per-candidate scan.
+    buf = "".join(cand)
+    ascii_ = (np.ones(len(cand), dtype=bool) if buf.isascii()
+              else np.fromiter((v.isascii() for v in cand), dtype=bool,
+                               count=len(cand)))
+    good = np.zeros(len(cand), dtype=bool)
+    if not ascii_.all():
+        good[~ascii_] = [scalar_fn(v) for v in compress(cand, ~ascii_)]
+        buf = "".join(compress(cand, ascii_))
+    if buf:
+        mat = (np.frombuffer(buf.encode("ascii"), np.uint8)
                .reshape(-1, n).astype(np.int64) - 48)
-        digit_rows = ((mat >= 0) & (mat <= 9)).all(axis=1)
-    except UnicodeEncodeError:
-        # some candidate holds non-ASCII text. Strings of non-ASCII decimal
-        # digits pass the scalar validators (str.isdecimal + int accept
-        # them), so route every non-pure-ASCII-digit candidate through the
-        # scalar function for exact parity; the rest take the matrix path.
-        is_ascii = np.fromiter((v.isascii() and v.isdecimal() for v in cand),
-                               dtype=bool, count=len(cand))
-        sub = np.zeros(len(cand), dtype=bool)
-        sub[~is_ascii] = [scalar_fn(v) for v, a in zip(cand, is_ascii)
-                          if not a]
-        if is_ascii.any():
-            mat = (np.frombuffer(
-                "".join(v for v, a in zip(cand, is_ascii) if a)
-                .encode("ascii"), np.uint8)
-                .reshape(-1, n).astype(np.int64) - 48)
-            good = ~(mat == mat[:, :1]).all(axis=1)
-            good &= check_fn(mat)
-            sub[is_ascii] = good
-        out[len_ok] = sub
-        return out
-    good = digit_rows & ~(mat == mat[:, :1]).all(axis=1)  # all-equal rejected
-    ok_rows = np.flatnonzero(good)
-    if ok_rows.size:
-        good[ok_rows] = check_fn(mat[ok_rows])
+        rows = (((mat >= 0) & (mat <= 9)).all(axis=1)
+                & ~(mat == mat[:, :1]).all(axis=1))  # all-equal rejected
+        ok_rows = np.flatnonzero(rows)
+        if ok_rows.size:
+            rows[ok_rows] = check_fn(mat[ok_rows])
+        good[ascii_] = rows
     out[len_ok] = good
     return out
 

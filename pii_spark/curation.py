@@ -64,6 +64,7 @@ from pii_spark.ops.mixing import (
     sample_mixture,
 )
 from pii_spark.ops.textstats import (
+    _word_count,
     with_dup_line_stats,
     with_ngram_repetition_stats,
 )
@@ -141,16 +142,10 @@ def curate(docs: DataFrame, cfg: CurationConfig | None = None,
                        text_col="text")
 
     # --- stage 2: doc-local quality gates -------------------------------
-    # NULL text counts as ZERO tokens, not NULL: size(split(NULL)) is NULL,
-    # a NULL n_tok makes every gate predicate NULL (never fires), and a
-    # NULL normalized_fp never matches a join key — so a crawl row with no
-    # text would sail through every stage and emerge as a keepable survivor
-    # (fail-open for a quality gate). As an empty doc it hits the
-    # min_tokens gate like any other empty text.
-    toks = F.filter(F.split("text", r"\s+"), lambda t: t != "")
-    sig = d.withColumn(
-        "n_tok",
-        F.when(F.col("text").isNull(), F.lit(0)).otherwise(F.size(toks)))
+    # NULL text counts as ZERO tokens (a NULL normalized_fp never matches a
+    # join key, so a row with no text must hit the min_tokens gate like
+    # any other empty text, not sail through every stage as a survivor)
+    sig = d.withColumn("n_tok", _word_count("text"))
     if cfg.max_dup_line_pm is not None:
         # inline narrow projection (docs with no non-blank lines read 0);
         # curate never reads the bigram half of repetition_stats

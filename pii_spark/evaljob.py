@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pii_core.labels import PII_TYPES
+from pii_spark.ops.textstats import _ws_norm
 
 
 def _pii_flag(spans_col: str) -> F.Column:
@@ -37,6 +38,15 @@ def _key_arr(col: str) -> F.Column:
                                   s.end.cast("string"), s.type),
         )
     )
+
+
+def prf(tp: int, pred_pos: int, true_pos: int) -> tuple[float, float, float]:
+    """(precision, recall, f1) from the three counters — THE P/R/F1 of the
+    eval and training metrics; each ratio reads 0.0 when its denominator
+    is 0."""
+    p = tp / pred_pos if pred_pos else 0.0
+    r = tp / true_pos if true_pos else 0.0
+    return p, r, 2 * p * r / (p + r) if p + r else 0.0
 
 
 def span_metrics(pred: DataFrame, gold: DataFrame) -> dict:
@@ -63,13 +73,6 @@ def span_metrics(pred: DataFrame, gold: DataFrame) -> dict:
         F.sum((~F.col("pred_pii") & ~F.col("gold_pii")).cast("long")).alias("btn"),
         F.count("*").alias("docs"),
     ).collect()[0]
-
-    def prf(tp: int, pp: int, ap: int) -> tuple[float, float, float]:
-        p = tp / pp if pp else 0.0
-        r = tp / ap if ap else 0.0
-        f = 2 * p * r / (p + r) if p + r else 0.0
-        return p, r, f
-
     # empty-input agg yields NULL counters; report zeros, not 'None' text
     tp, pp, ap = int(row.tp or 0), int(row.pred_pos or 0), int(row.true_pos or 0)
     btp, bfp = int(row.btp or 0), int(row.bfp or 0)
@@ -156,7 +159,7 @@ def error_bucket_samples(
     )
     pred_pii = _pii_flag("pred_spans")
     gold_pii = _pii_flag("gold_spans")
-    norm = F.trim(F.regexp_replace(F.coalesce("txt", F.lit("")), r"\s+", " "))
+    norm = _ws_norm(F.coalesce("txt", F.lit("")))
     excerpt = F.when(
         F.length(norm) <= max_chars, norm
     ).otherwise(F.concat(F.substring(norm, 1, max_chars - 1), F.lit("…")))
@@ -362,9 +365,7 @@ def token_metrics(pred, gold, text_col: str = "extracted_text") -> dict:
     )
     tp = int(row.tp or 0)
     pp, gp = int(row.pred_pos or 0), int(row.gold_pos or 0)
-    p = tp / pp if pp else 0.0
-    r = tp / gp if gp else 0.0
-    f1 = 2 * p * r / (p + r) if p + r else 0.0
+    p, r, f1 = prf(tp, pp, gp)
     return {"tp": tp, "pred_pos": pp, "gold_pos": gp,
             "n_tokens": int(row.n_tok or 0), "precision": p, "recall": r,
             "f1": f1}

@@ -40,25 +40,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pii_spark.ops.textstats import _all_grams, _ws_norm
+
 
 def _gram_array(text_col: str, n: int) -> Column:
-    """Production gram derivation: same frozen semantics as the HOF spec
-    ``grams(tokens(c), n)`` in tests/oracles/spark_ops.py (lowercase,
-    whitespace-tokenized, distinct single-space-joined ``n``-grams) in ONE
-    codegen-friendly regex pass —
-    whitespace is normalized to single spaces once per document, then a
-    zero-width match at every token start (``(?<![^ ])``, i.e. preceded
-    by a space or the string start) captures the next ``n`` tokens via
-    lookahead, so overlapping grams fall out of one ``regexp_extract_all``
-    instead of an interpreted nested-HOF slice-and-join per position.
-    Exact parity with the HOF spec is differential-pinned (adversarial +
-    fuzz corpora, ``tests/test_decontaminate.py``). NULL text carries no
-    grams."""
-    norm = F.trim(F.regexp_replace(F.lower(text_col), r"\s+", " "))
-    pat = r"(?<![^ ])(?=((?:\S+ ){%d}\S+))" % (n - 1)
-    arr = F.regexp_extract_all(norm, F.lit(pat), F.lit(1))
-    return F.array_distinct(
-        F.coalesce(arr, F.array().cast("array<string>")))
+    """The distinct lowercase word ``n``-grams of ``text_col``: the shared
+    regex gram extractor (``textstats._all_grams``) over the shared
+    normalizer, same frozen semantics as the HOF spec ``grams(tokens(c),
+    n)`` in tests/oracles/spark_ops.py — exact parity is
+    differential-pinned (adversarial + fuzz corpora,
+    ``tests/test_decontaminate.py``). NULL text carries no grams."""
+    return F.array_distinct(_all_grams(_ws_norm(F.lower(text_col)), n))
 
 
 def benchmark_gram_keys(

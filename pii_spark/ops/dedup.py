@@ -10,10 +10,9 @@ Scale notes (the part that matters at 100 TB):
 * MinHash/LSH shuffles (band_key, doc_id) pairs only; candidate pairs come
   from a self-join on band_key whose per-key group size is bounded by design
   (band collisions), so no quadratic blowup — THE standard web-dedup shape.
-* n-gram Jaccard here joins on shared shingles with a candidate filter; at
-  real scale it runs only on LSH candidate pairs — ``dedup_lsh_jaccard``
-  below IS that composition (LSH prune → exact-Jaccard verify), the plan
-  every production web-dedup job runs.
+* n-gram Jaccard runs only on LSH candidate pairs (``_jaccard_verify``):
+  ``dedup_lsh_jaccard`` below IS that composition (LSH prune →
+  exact-Jaccard verify), the plan every production web-dedup job runs.
 """
 
 from __future__ import annotations
@@ -21,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pii_spark.ops.textstats import _line_key, _ws_norm
 from pii_spark.util import documents_sql
 
 _N_PERM = 8  # minhash permutations
@@ -190,25 +190,29 @@ def connected_components(
 
 
 def _jaccard_on_candidates(docs_named: DataFrame) -> DataFrame:
-    """(id_a, id_b, jac) — exact Jaccard (×1000, double) computed on LSH
-    candidate pairs ONLY; the shared verify stage behind dedup_lsh_jaccard
-    and dedup_clusters. ``docs_named`` is a (doc_id, text) frame.
-
-    Cardinalities ride along the exploded shingle rows
-    (``_shingles_with_card``): every a/b-side row already carries its
-    doc's |shingles|, so the per-pair |A| and |B| fall out of the
-    intersection groupBy as ``first(n)`` — two whole card joins and
-    their exchanges are gone, and the gram regex runs once per join
-    side, never for a separate count frame."""
+    """(id_a, id_b, jac) over the LSH candidate pairs of ONE (doc_id,
+    text) frame — the self-dedup verify behind dedup_lsh_jaccard,
+    dedup_clusters and ``curation.curate``."""
     shc = _shingles_with_card(docs_named)
-    cand = _lsh_candidates(shc.select("doc_id", "sh"))
-    a_sh = shc.select(F.col("doc_id").alias("id_a"),
-                      F.col("n").alias("na"), "sh")
-    b_sh = shc.select(F.col("doc_id").alias("id_b"),
-                      F.col("n").alias("nb"), "sh")
+    return _jaccard_verify(_lsh_candidates(shc.select("doc_id", "sh")),
+                           shc, shc)
+
+
+def _jaccard_verify(cand: DataFrame, a_shc: DataFrame,
+                    b_shc: DataFrame) -> DataFrame:
+    """(id_a, id_b, jac) — THE exact-Jaccard verify (×1000, double) of the
+    (id_a, id_b) candidate pairs ``cand``, computed on those pairs ONLY;
+    ``a_shc``/``b_shc`` are the ``_shingles_with_card`` frames of the two
+    sides. Cardinalities ride along the exploded shingle rows: every
+    joined row already carries its doc's |shingles|, so the per-pair |A|
+    and |B| fall out of the intersection groupBy as ``first(n)`` — no card
+    joins or their exchanges, and the gram regex runs once per side,
+    never for a separate count frame."""
     inter = (
-        cand.join(a_sh, "id_a")
-        .join(b_sh, ["id_b", "sh"])
+        cand.join(a_shc.select(F.col("doc_id").alias("id_a"),
+                               F.col("n").alias("na"), "sh"), "id_a")
+        .join(b_shc.select(F.col("doc_id").alias("id_b"),
+                           F.col("n").alias("nb"), "sh"), ["id_b", "sh"])
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("i"),
              F.first("na").alias("na"), F.first("nb").alias("nb"))
@@ -308,8 +312,8 @@ def register_queries(register) -> None:
         """Composed near-dup pipeline: MinHash+LSH candidate generation →
         exact n-gram-Jaccard verification ON THE CANDIDATE PAIRS ONLY. This
         is the plan a production web-dedup job runs: the shared-shingle join
-        (quadratic on hot shingles when run corpus-wide, see dedup_jaccard)
-        touches only pairs LSH already banded together, so its cost is
+        (quadratic on hot shingles when run corpus-wide) touches only pairs
+        LSH already banded together, so its cost is
         O(candidates × shingles-per-doc), never O(corpus²).
 
         Shuffle discipline: LSH shuffles (band_key, doc_id); verification
@@ -450,11 +454,8 @@ def line_dedup(docs: DataFrame, max_doc_freq: int,
     across a site's pages; body prose does not.
 
     Returns (id_col, text) with each document's surviving lines rejoined
-    in original order. Line identity is the WHITESPACE-trimmed form
-    (regexp, not F.trim's spaces-only — CRLF corpora leave '\\r' on every
-    line, which must neither block cross-corpus matches nor turn the
-    blank-line '\\r' into corpus-wide "boilerplate"); blank lines never
-    count toward frequency and always survive.
+    in original order. Line identity is ``textstats._line_key``; blank
+    lines never count toward frequency and always survive.
 
     100 TB shape, exact in two stages: (1) candidate hot HASHES via
     posexplode → dropDuplicates((xxhash64, doc)) → groupBy(hash) — this
@@ -480,11 +481,10 @@ def line_dedup(docs: DataFrame, max_doc_freq: int,
     null_rows = docs.where(F.col(id_col).isNull()).select(
         F.col(id_col), F.col(text_col).alias("text"))
     docs = docs.where(F.col(id_col).isNotNull())
-    trimmed = F.regexp_replace("line", r"^\s+|\s+$", "")
     lines = docs.select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("line_no", "line"),
-    ).withColumn("t", trimmed).withColumn("h", F.xxhash64("t"))
+    ).withColumn("t", _line_key("line")).withColumn("h", F.xxhash64("t"))
     hot_h = (
         lines.where(F.col("t") != "")
         .select("h", id_col).dropDuplicates(["h", id_col])
@@ -519,13 +519,13 @@ def line_dedup(docs: DataFrame, max_doc_freq: int,
 
 
 def normalized_fp(text_col: str = "text"):
-    """THE content fingerprint: md5 over whitespace-collapsed lowercase
-    text. Single definition shared by ``dedup_against_corpus``,
-    ``curation.curate`` and the ``doc_fingerprint`` query — cross-crawl
-    dedup's correctness rests on fingerprint stability across code
-    versions, so the normalization must not be able to drift between call
-    sites."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(text_col), r"\s+", " ")))
+    """THE content fingerprint: md5 over the shared whitespace normalizer
+    (``textstats._ws_norm``) of the lowercased text. Single definition
+    shared by ``dedup_against_corpus``, ``curation.curate`` and the
+    ``doc_fingerprint`` query — cross-crawl dedup's correctness rests on
+    fingerprint stability across code versions, so the normalization must
+    not be able to drift between call sites."""
+    return F.md5(_ws_norm(F.lower(text_col)))
 
 
 def dedup_against_corpus(
@@ -616,39 +616,25 @@ def near_dedup_against_corpus(
     new_named = new_docs.select(F.col(id_col).alias("doc_id"),
                                 F.col(text_col).alias("text"))
     new_shc = _shingles_with_card(new_named)
-    new_sh = new_shc.select("doc_id", "sh")
-    cand = (
-        _band_keys(new_sh).alias("n")
+    cand = (  # (id_a, id_b) = (new, committed)
+        _band_keys(new_shc.select("doc_id", "sh")).alias("n")
         .join(band_index.alias("c"),
               (F.col("n.band") == F.col("c.band"))
               & (F.col("n.bk") == F.col("c.bk")))
-        .select(F.col("n.doc_id").alias("new_id"),
-                F.col("c.doc_id").alias("com_id"))
+        .select(F.col("n.doc_id").alias("id_a"),
+                F.col("c.doc_id").alias("id_b"))
         .distinct()
     )
     com_named = (
         committed.select(F.col(id_col).alias("doc_id"),
                          F.col(text_col).alias("text"))
-        .join(cand.select(F.col("com_id").alias("doc_id")).distinct(),
+        .join(cand.select(F.col("id_b").alias("doc_id")).distinct(),
               "doc_id", "left_semi")
     )
-    com_shc = _shingles_with_card(com_named)
-    # cardinalities ride along the exploded rows (VERDICT r5 #6): no
-    # per-doc count frames, no card joins, no extra gram pass
-    inter = (
-        cand.join(new_shc.select(F.col("doc_id").alias("new_id"),
-                                 F.col("n").alias("na"), "sh"), "new_id")
-        .join(com_shc.select(F.col("doc_id").alias("com_id"),
-                             F.col("n").alias("nb"), "sh"),
-              ["com_id", "sh"])
-        .groupBy("new_id", "com_id")
-        .agg(F.count("*").alias("i"),
-             F.first("na").alias("na"), F.first("nb").alias("nb"))
-    )
-    jac = F.col("i") * 1000.0 / (F.col("na") + F.col("nb") - F.col("i"))
     losers = (
-        inter.where(jac >= jaccard_pm)
-        .select(F.col("new_id").alias(id_col))
+        _jaccard_verify(cand, new_shc, _shingles_with_card(com_named))
+        .where(F.col("jac") >= jaccard_pm)
+        .select(F.col("id_a").alias(id_col))
         .distinct()
     )
     return new_docs.join(losers, id_col, "left_anti")

@@ -43,15 +43,10 @@ not recreate it):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _n_tok(text_col: str) -> Column:
-    """Whitespace word count; NULL text counts as zero tokens (the
-    ``curate`` rule — a NULL must not make predicates silently pass)."""
-    toks = F.filter(F.split(text_col, r"\s+"), lambda t: t != "")
-    return F.when(F.col(text_col).isNull(), F.lit(0)).otherwise(F.size(toks))
+from pii_spark.ops.textstats import _word_count
 
 
 def _check_budgets(budgets: dict[str | None, int]) -> None:
@@ -81,9 +76,8 @@ def cap_host_tokens(
     Semantics (frozen, mirrored by the DuckDB oracle in
     tests/test_mixing.py):
 
-    * tokens = whitespace-separated words; NULL text counts as zero
-      tokens (the ``curate`` rule — a NULL must not make predicates
-      silently pass);
+    * tokens = ``textstats._word_count``: whitespace-separated words,
+      NULL text counts as zero tokens;
     * order within a host = ascending ``md5(id:seed)`` — deterministic
       for any partitioning/cluster size, uncorrelated with crawl order;
       ties (same id twice) broken by the id itself so the cumsum is
@@ -108,7 +102,7 @@ def cap_host_tokens(
             f"max_tokens_per_host must be >= 0, got {max_tokens_per_host}")
     skinny = docs.where(F.col(id_col).isNotNull()).select(
         F.col(host_col).alias("__h"), F.col(id_col),
-        _n_tok(text_col).alias("n_tok"))
+        _word_count(text_col).alias("n_tok"))
 
     over = (
         skinny.groupBy("__h")
@@ -179,8 +173,7 @@ def sample_mixture(
     Semantics (frozen, mirrored by the DuckDB oracle in
     tests/test_mixing.py):
 
-    * tokens = whitespace-separated words; NULL text counts as zero
-      tokens (the ``curate`` rule);
+    * tokens = ``textstats._word_count`` (NULL text counts as zero);
     * order within a source = ascending ``md5(id:seed)``, ties broken by
       the id — deterministic for any partitioning/cluster size (the
       ``cap_host_tokens`` idiom, never ``rand()``);
@@ -215,7 +208,7 @@ def sample_mixture(
     skinny = docs.where(F.col(id_col).isNotNull()).select(
         F.col(source_col).cast("string").alias("__s"),
         F.col(id_col),
-        _n_tok(text_col).alias("n_tok"),
+        _word_count(text_col).alias("n_tok"),
         rank_key.alias("__rk"),
         # the bucket is a PREFIX of the rank key, so bucket order refines
         # into exactly the global hash order the naive window would use
@@ -339,7 +332,7 @@ def register_queries(register) -> None:
             F.lit(None).cast("string").alias("drop_reason"),
         ).unionByName(dropped.select("doc_id", "source", "drop_reason"))
         n_tok = d.select(
-            "doc_id", _n_tok("text").cast("long").alias("n_tok"))
+            "doc_id", _word_count("text").cast("long").alias("n_tok"))
         return (
             outcome.join(n_tok, "doc_id")
             .select("doc_id", "source", "n_tok", "drop_reason")
@@ -381,7 +374,7 @@ def mixture_report(
     def _tots(df: DataFrame, tok_name: str, doc_name: str) -> DataFrame:
         return (
             df.select(F.col(source_col).cast("string").alias("__s"),
-                      _n_tok(text_col).alias("n_tok"))
+                      _word_count(text_col).alias("n_tok"))
             .groupBy("__s")
             .agg(F.sum("n_tok").alias(tok_name),
                  F.count("*").alias(doc_name))

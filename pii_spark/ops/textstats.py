@@ -355,9 +355,7 @@ def register_queries(register) -> None:
             .otherwise("tn").alias("bucket"),
             (~F.col("gold")).alias("gold_should_be_public"),
             (~F.col("pred")).alias("pred_should_be_public"),
-            F.substring(
-                F.trim(F.regexp_replace("text", r"\s+", " ")), 1, 80
-            ).alias("excerpt"),
+            F.substring(_ws_norm("text"), 1, 80).alias("excerpt"),
         )
         w = Window.partitionBy("bucket").orderBy("doc_id")
         return (
@@ -369,6 +367,15 @@ def register_queries(register) -> None:
         )
 
 
+def _line_key(line: str | Column) -> Column:
+    """THE line identity of the line-level stats and ``line_dedup``: the
+    line with leading/trailing WHITESPACE removed (a regexp, not
+    ``F.trim``'s spaces-only) — CRLF corpora leave a trailing CR on every
+    line, which must not break line identity (nor turn the blank line
+    '\\r' into a non-blank one)."""
+    return F.regexp_replace(line, r"^\s+|\s+$", "")
+
+
 def _line_run_stats(text_col: str) -> Column:
     """struct(n, dups, tc, dc) of a document's non-blank trimmed lines,
     computed DOC-LOCALLY (same shape as ``_run_stats``): ``n`` lines,
@@ -376,14 +383,11 @@ def _line_run_stats(text_col: str) -> Column:
     predecessor in the sorted array), ``tc`` total line chars, ``dc``
     chars inside lines occurring >= 2 times. Zero explode, zero shuffle —
     the explode → groupBy(id, line) form moved line STRINGS through an
-    exchange keyed entirely by doc-local values. Full whitespace trim
-    (not F.trim's spaces-only): CRLF corpora leave a trailing CR on every
-    line, which must not break line identity. The per-element
-    regexp/compare work here is on the ELEMENT, not a re-evaluated
-    whole-document expression — the safe interpreted-HOF shape."""
-    trimmed = F.transform(
-        F.split(F.col(text_col), "\n"),
-        lambda x: F.regexp_replace(x, r"^\s+|\s+$", ""))
+    exchange keyed entirely by doc-local values. Lines compare by
+    ``_line_key``. The per-element regexp/compare work here is on the
+    ELEMENT, not a re-evaluated whole-document expression — the safe
+    interpreted-HOF shape."""
+    trimmed = F.transform(F.split(F.col(text_col), "\n"), _line_key)
     arr = F.array_sort(F.coalesce(
         F.filter(trimmed, lambda x: x != ""),
         F.array().cast("array<string>")))
@@ -452,13 +456,26 @@ def with_dup_line_stats(docs: DataFrame,
     )
 
 
-def _ws_norm(text_col: str) -> Column:
-    """``text_col`` with every ASCII-whitespace run collapsed to one space
-    and the ends trimmed — the canonical single-space form over which word
+def _ws_norm(text: str | Column) -> Column:
+    """``text`` (a column or its name) with every ASCII-whitespace run
+    collapsed to one space and the ends trimmed — THE whitespace
+    normalizer of the corpus planes (excerpts, fingerprints, gram
+    derivation), and the canonical single-space form over which word
     n-grams become a pure regex extraction. Token set/order and token
     characters are exactly those of ``split(text, r'\\s+')`` minus empties
     (the family's frozen tokenization)."""
-    return F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    return F.trim(F.regexp_replace(text, r"\s+", " "))
+
+
+def _word_count(text_col: str) -> Column:
+    """THE token count of the corpus planes (``curate``'s ``min_tokens``
+    gate, the mix's host caps and source budgets): whitespace-separated
+    words, the same tokens ``_all_grams(_ws_norm(text), 1)`` yields. NULL
+    text counts as ZERO tokens, not NULL — ``size(split(NULL))`` is NULL,
+    and a NULL count makes every predicate on it NULL, so a row with no
+    text would silently pass every gate and use no budget."""
+    toks = F.filter(F.split(text_col, r"\s+"), lambda t: t != "")
+    return F.when(F.col(text_col).isNull(), F.lit(0)).otherwise(F.size(toks))
 
 
 def _all_grams(norm: Column, n: int) -> Column:

@@ -348,9 +348,10 @@ def company_id_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def excerpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Excerpt projection (reference P6, infer_pii.py:767-769): whitespace
     collapse + truncate with ellipsis — pure builtin expressions."""
+    from pii_spark.ops.textstats import _ws_norm  # noqa: PLC0415
+
     d = _t(spark, sf_dir, "documents").where("doc_id < 50")
-    clean = F.trim(F.regexp_replace("text", r"\s+", " "))
-    d = d.select("doc_id", clean.alias("clean"))
+    d = d.select("doc_id", _ws_norm("text").alias("clean"))
     exc = F.when(
         F.length("clean") > 60, F.concat(F.substring("clean", 1, 60), F.lit("..."))
     ).otherwise(F.col("clean"))

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pii_spark.dataset import CHUNKS_SCHEMA
+from pii_spark.evaljob import prf
 
 _HEX_SPACE = 16 ** 4  # split granularity: first 4 md5 hex chars
 
@@ -161,9 +162,7 @@ def token_micro_f1(
         F.sum(n_true).alias("true_pos"),
     ).collect()[0]
     tp, pp, ap = int(row.tp or 0), int(row.pred_pos or 0), int(row.true_pos or 0)
-    precision = tp / pp if pp else 0.0
-    recall = tp / ap if ap else 0.0
-    f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
+    precision, recall, f1 = prf(tp, pp, ap)
     return {"tp": tp, "pred_pos": pp, "true_pos": ap,
             "precision": precision, "recall": recall, "f1": f1}
 

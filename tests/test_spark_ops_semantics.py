@@ -793,6 +793,20 @@ def test_ngram_repetition_stats_matches_hof_spec(spark):
             for r in ngram_repetition_stats_hof(df, **kw).collect()}
     assert got == want
 
+    # the token count behind curate's min_tokens gate and the mix budgets
+    # is the tokenization the repetition stats and decontamination read:
+    # one word per 1-gram, on every row (NULL text: 0 and 0)
+    from pyspark.sql import functions as F
+
+    from pii_spark.ops.textstats import _all_grams, _word_count, _ws_norm
+
+    counts = {r["doc_id"]: (r["wc"], r["g1"]) for r in df.select(
+        "doc_id", _word_count("text").alias("wc"),
+        F.size(_all_grams(_ws_norm("text"), 1)).alias("g1")).collect()}
+    assert counts[len(texts) - 1] == (0, 0)
+    assert {i: wc for i, (wc, _) in counts.items()} == \
+        {i: g1 for i, (_, g1) in counts.items()}
+
 
 def test_dup_line_stats_matches_hof_spec(spark):
     """The doc-local line-run scan must be row-identical to the
