@@ -282,17 +282,10 @@ def viterbi_bio_batch(
     emissions: list[np.ndarray],
     labels: list[str],
     o_id: int,
-    force_o_masks: list[np.ndarray | None] | None = None,
 ) -> list[list[int]]:
     """``viterbi_bio`` over a list of sequences (one document's decode
     units), one path per matrix in input order."""
-    masks = (force_o_masks if force_o_masks is not None
-             else [None] * len(emissions))
-    if len(masks) != len(emissions):
-        raise ValueError(
-            f"{len(masks)} masks for {len(emissions)} emission matrices")
-    return [viterbi_bio(e, labels, o_id, m)
-            for e, m in zip(emissions, masks)]
+    return [viterbi_bio(e, labels, o_id) for e in emissions]
 
 
 @lru_cache(maxsize=8)

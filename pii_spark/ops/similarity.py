@@ -8,8 +8,9 @@ qdot² against qnorm products in double with wide margins (never emitted).
 
 Scale path: brute-force top-k broadcasts the (tiny) query set and scans the
 corpus once — the right plan when queries ≪ corpus. The LSH variant buckets
-by deterministic hyperplane sign bits so each query probes one bucket —
-the 100 TB shape (bucketed storage, partition-pruned probes).
+by deterministic hyperplane sign bits so each query probes its own bucket
+and its Hamming-1 neighbours per table — the 100 TB shape (bucketed
+storage, partition-pruned probes).
 """
 
 from __future__ import annotations
@@ -52,25 +53,53 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _no_neighbors(eq: DataFrame, k: int) -> DataFrame:
+    """The typed empty top-k frame (no query or no centroid to score
+    against): the columns and types of a scored ``_rank_topk`` result."""
+    return _rank_topk(
+        eq.select(F.lit(0).cast("long").alias("query_id"),
+                  "vec_id", F.lit(0).cast("long").alias("qdot"))
+        .where(F.lit(False)), k)
+
+
+def _small_side(eq: DataFrame, cond: str) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, mat) of the tiny side of a (vec_id, e) frame — the queries,
+    probes or centroids matching ``cond``, in vec_id order: ids as int64,
+    the quantized vectors as a (dim, n) int64 matrix, (0, 0) when empty.
+
+    The fetch is an explicit collect: the same driver round-trip
+    F.broadcast performed implicitly, now feeding a closure that every
+    Arrow batch multiplies against (the small side ≪ corpus is each
+    caller's contract). Quantization stays JVM-side, so rounding
+    semantics stay Spark's. ids are int64 so a ``F.lit(ids)`` column is
+    bigint, like vec_id."""
+    rows = eq.where(cond).orderBy("vec_id").collect()
+    ids = np.asarray([r["vec_id"] for r in rows], dtype=np.int64)
+    mat = (np.asarray([r["e"] for r in rows], dtype=np.int64).T
+           if rows else np.zeros((0, 0), dtype=np.int64))
+    return ids, mat
+
+
+def _batch_mat(ev: pd.Series) -> np.ndarray:
+    """One Arrow batch of quantized vectors as a (B, dim) int64 matrix."""
+    return np.vstack(ev.to_numpy()).astype(np.int64, copy=False)
+
+
 def knn_bruteforce_frame(e: DataFrame, n_queries: int = _N_QUERIES,
                          k: int = _K) -> DataFrame:
     """Exact top-k over any (vec_id, embedding) frame: ship the (tiny)
-    query set to every task, one corpus scan, exact integer dot products,
-    rank per query.
+    query set to every task (``_small_side``), one corpus scan, exact
+    integer dot products, rank per query.
 
     The scorer is ONE vectorized Arrow matmul instead of the earlier
     crossJoin + per-element higher-order-function dot: HOF lambdas
     evaluate interpreted per array element, so the 64-term dot paid
     ~queries x corpus x dim interpreter dispatches and the crossJoin
     materialized both quantized vectors onto every scored row (measured
-    3x slower at sf1.0). Here the corpus is quantized ONCE (JVM-side, so
-    rounding semantics stay Spark's), each Arrow batch computes all
-    query dots as a single int64 (B,dim)@(dim,nq) matmul — exact, same
-    integers — and only the skinny (query_id, vec_id, qdot) rows reach
-    the rank window. The query fetch is an explicit n_queries-row
-    collect: the same driver round-trip F.broadcast performed
-    implicitly, now feeding a closure instead of a broadcast hash
-    relation (queries << corpus is this operator's documented contract).
+    3x slower at sf1.0). Here the corpus is quantized ONCE, each Arrow
+    batch computes all query dots as a single int64 (B,dim)@(dim,nq)
+    matmul — exact, same integers — and only the skinny (query_id,
+    vec_id, qdot) rows reach the rank window.
 
     NULL-embedding rows are un-scoreable and excluded on BOTH sides: as a
     candidate the NULL dot would merely rank last (desc puts NULLs last),
@@ -78,23 +107,17 @@ def knn_bruteforce_frame(e: DataFrame, n_queries: int = _N_QUERIES,
     arbitrary ids as "neighbors" — silent garbage. Encode or drop such
     rows upstream."""
     eq = e.where(F.col("embedding").isNotNull()) \
-        .select("vec_id", _quant("embedding").alias("ce"))
-    qrows = eq.where(f"vec_id < {n_queries}").orderBy("vec_id").collect()
-    qids = [int(r["vec_id"]) for r in qrows]
-    if not qids:
-        return _rank_topk(
-            eq.select(F.lit(0).cast("long").alias("query_id"),
-                      "vec_id", F.lit(0).cast("long").alias("qdot"))
-            .where(F.lit(False)), k)
-    qmat = np.asarray([r["ce"] for r in qrows], dtype=np.int64).T  # (dim,nq)
+        .select("vec_id", _quant("embedding").alias("e"))
+    qids, qmat = _small_side(eq, f"vec_id < {n_queries}")
+    if not qids.size:
+        return _no_neighbors(eq, k)
 
     @F.pandas_udf("array<long>")
-    def _dots(ce: pd.Series) -> pd.Series:
-        m = np.vstack(ce.to_numpy()).astype(np.int64, copy=False)
-        return pd.Series(list(_exact_matmul(m, qmat)))
+    def _dots(ev: pd.Series) -> pd.Series:
+        return pd.Series(list(_exact_matmul(_batch_mat(ev), qmat)))
 
     scored = (
-        eq.select("vec_id", F.posexplode(_dots("ce")).alias("qi", "qdot"))
+        eq.select("vec_id", F.posexplode(_dots("e")).alias("qi", "qdot"))
         .select(
             F.element_at(F.lit(qids), F.col("qi") + 1).alias("query_id"),
             "vec_id", "qdot")
@@ -121,59 +144,46 @@ def _exact_matmul(m: np.ndarray, w: np.ndarray) -> np.ndarray:
 
 
 def _pair_dot_scorer(eq: DataFrame, n_queries: int):
-    """(qids, dot_q) for candidate-pair scoring: ``dot_q(e, query_id)`` is
-    the exact int64 dot of a row's quantized vector with THAT query's
-    vector, via one Arrow (B,dim)@(dim,nq) matmul plus a row gather per
-    batch — the HOF per-element form paid ~dim interpreted dispatches per
-    scored pair. The query fetch is the same n_queries-row driver
-    round-trip ``F.broadcast`` performed implicitly (see
-    ``knn_bruteforce_frame``); quantization stays JVM-side."""
-    qrows = eq.where(f"vec_id < {n_queries}").orderBy("vec_id").collect()
-    qids = np.asarray([int(r["vec_id"]) for r in qrows], dtype=np.int64)
-    qmat = (np.asarray([r["e"] for r in qrows], dtype=np.int64).T
-            if len(qrows) else np.zeros((0, 0), dtype=np.int64))
+    """``dot_q(e, query_id)`` for candidate-pair scoring: the exact int64
+    dot of a row's quantized vector with THAT query's vector, via one
+    Arrow (B,dim)@(dim,nq) matmul plus a row gather per batch — the HOF
+    per-element form paid ~dim interpreted dispatches per scored pair."""
+    qids, qmat = _small_side(eq, f"vec_id < {n_queries}")
 
     @F.pandas_udf("long")
     def dot_q(e: pd.Series, qid: pd.Series) -> pd.Series:
-        m = np.vstack(e.to_numpy()).astype(np.int64, copy=False)
-        prod = _exact_matmul(m, qmat)
+        prod = _exact_matmul(_batch_mat(e), qmat)
         cols = np.searchsorted(qids, qid.to_numpy().astype(np.int64))
         return pd.Series(prod[np.arange(len(cols)), cols])
 
-    return qids, dot_q
+    return dot_q
 
 
-def _plane_weights(table: int, planes: int) -> np.ndarray:
-    """(dim, planes) int64 weight matrix — the same global-sequence
+def _plane_weights(table: int) -> np.ndarray:
+    """(dim, _N_PLANES) int64 weight matrix — the same global-sequence
     formula the per-element spec ``bucket_expr`` (tests/oracles/
-    spark_ops.py) evaluates: plane g = table*planes + j, dim i (1-based)
-    -> ((g*64 + i) * 2654435761) % 19 - 9."""
-    g = (np.int64(table) * planes
-         + np.arange(planes, dtype=np.int64))[None, :]
+    spark_ops.py) evaluates: plane g = table*_N_PLANES + j, dim i
+    (1-based) -> ((g*64 + i) * 2654435761) % 19 - 9."""
+    g = (np.int64(table) * _N_PLANES
+         + np.arange(_N_PLANES, dtype=np.int64))[None, :]
     i = np.arange(1, _DIM + 1, dtype=np.int64)[:, None]
     return (g * 64 + i) * np.int64(2654435761) % 19 - 9
 
 
-def knn_lsh_frame(
-    e: DataFrame,
-    n_queries: int = _N_QUERIES,
-    k: int = _K,
-    tables: int = _N_TABLES,
-    planes: int = _N_PLANES,
-    radius: int = 1,
-) -> DataFrame:
+def knn_lsh_frame(e: DataFrame, n_queries: int = _N_QUERIES,
+                  k: int = _K) -> DataFrame:
     """Multi-TABLE multi-probe LSH ANN over any (vec_id, embedding) frame.
 
-    ``tables`` independent hash tables of ``planes`` hyperplane sign bits
-    each; a query's candidates are the UNION over tables of its own bucket
-    plus (radius=1) every bucket one bit-flip away — the classic
-    recall-vs-scan dial (Indyk-Motwani LSH + multi-probe). With the
-    defaults (4×8 bits, radius 1) measured recall@5 vs exact top-k is
-    ≥ 0.90 on clustered embeddings (same-cluster cosine ≈ 0.9 — the
-    realistic text-embedding regime) scanning ~22% of the corpus; on the
-    adversarial near-uniform synthetic corpus there is no structure to
-    exploit and recall tracks the ~14% probe fraction (IVF, which adapts
-    its probe set, is the uniform-regime recommendation at 0.84). Gates:
+    ``_N_TABLES`` (4) independent hash tables of ``_N_PLANES`` (8)
+    hyperplane sign bits each; a query's candidates are the UNION over
+    tables of its own bucket plus every bucket one bit-flip away
+    (Hamming-1 probes: Indyk-Motwani LSH + multi-probe). Measured
+    recall@5 vs exact top-k is ≥ 0.90 on clustered embeddings
+    (same-cluster cosine ≈ 0.9 — the realistic text-embedding regime)
+    scanning ~22% of the corpus; on the adversarial near-uniform
+    synthetic corpus there is no structure to exploit and recall tracks
+    the ~14% probe fraction (IVF, which adapts its probe set, is the
+    uniform-regime recommendation at 0.84). Gates:
     tests/test_spark_ops_semantics.py::test_ann_recall_vs_bruteforce.
 
     Scale shape: the keyed corpus is rows×tables — exactly the MinHash-LSH
@@ -182,12 +192,6 @@ def knn_lsh_frame(
     (util.write_bucketed_table) so probes are partition-pruned scans with
     zero shuffle; candidate dedup across tables happens on (query_id,
     vec_id) pairs only, never vectors."""
-    if not 0 <= radius <= 2:
-        # larger radii are not generated — refusing beats silently probing
-        # a smaller neighborhood than the caller asked for
-        raise ValueError(
-            f"radius must be 0, 1 or 2 (got {radius}); higher radii are "
-            "not implemented")
     # NULL-embedding rows are un-scoreable — see knn_bruteforce_frame
     # (here they would additionally land in one degenerate NULL-bit
     # bucket per table before the NULL dots rank)
@@ -198,15 +202,14 @@ def knn_lsh_frame(
     # dispatches per row); weights and comparisons are exact int64, so
     # the bucket strings are byte-identical to the HOF spec's
     wmats = np.concatenate(
-        [_plane_weights(t, planes) for t in range(tables)], axis=1)
+        [_plane_weights(t) for t in range(_N_TABLES)], axis=1)
 
     @F.pandas_udf("array<string>")
     def _buckets(ev: pd.Series) -> pd.Series:
-        m = np.vstack(ev.to_numpy()).astype(np.int64, copy=False)
-        bits = np.where(_exact_matmul(m, wmats) > 0, "1", "0")
+        bits = np.where(_exact_matmul(_batch_mat(ev), wmats) > 0, "1", "0")
         return pd.Series([
-            ["".join(row[t * planes:(t + 1) * planes])
-             for t in range(tables)]
+            ["".join(row[t * _N_PLANES:(t + 1) * _N_PLANES])
+             for t in range(_N_TABLES)]
             for row in bits
         ])
 
@@ -214,26 +217,19 @@ def knn_lsh_frame(
         "vec_id", "e",
         F.posexplode(_buckets("e")).alias("tbl", "bucket"))
 
-    def flip(col: F.Column, j: int) -> F.Column:
+    def flip(j: int) -> F.Column:  # the bucket with sign bit j flipped
+        b = F.col("bucket")
         return F.concat(
-            F.substring(col, 1, j - 1),
-            F.when(F.substring(col, j, 1) == "1", "0").otherwise("1"),
-            F.substring(col, j + 1, planes),
+            F.substring(b, 1, j - 1),
+            F.when(F.substring(b, j, 1) == "1", "0").otherwise("1"),
+            F.substring(b, j + 1, _N_PLANES),
         )
 
     q = keyed.where(f"vec_id < {n_queries}").select(
         F.col("vec_id").alias("query_id"), "tbl", "bucket")
-    probe_cols = [F.col("bucket")]
-    if radius >= 1:
-        probe_cols += [flip(F.col("bucket"), j)
-                       for j in range(1, planes + 1)]
-    if radius >= 2:
-        probe_cols += [flip(flip(F.col("bucket"), i), j)
-                       for i in range(1, planes + 1)
-                       for j in range(i + 1, planes + 1)]
-    probes = q.select(
-        "query_id", "tbl",
-        F.explode(F.array(*probe_cols)).alias("bucket"))
+    probes = q.select("query_id", "tbl", F.explode(F.array(
+        F.col("bucket"), *[flip(j) for j in range(1, _N_PLANES + 1)]
+    )).alias("bucket"))
     # candidate generation and cross-table dedup on SKINNY rows: the probe
     # join and dropDuplicates shuffle (tbl, bucket, ids) / (query_id,
     # vec_id) pairs only — never the 64-long quantized vectors, which
@@ -246,7 +242,7 @@ def knn_lsh_frame(
         # a pair found by several tables/probes must score ONCE
         .dropDuplicates(["query_id", "vec_id"])
     )
-    _qids, dot_q = _pair_dot_scorer(eq, n_queries)
+    dot_q = _pair_dot_scorer(eq, n_queries)
     scored = (
         cand.join(eq, "vec_id")
         .select("query_id", "vec_id",
@@ -388,18 +384,16 @@ def register_queries(register) -> None:
         aug = e.unionByName(
             e.where("vec_id % 25 = 0")
             .select((F.col("vec_id") + 10000).alias("vec_id"), "e"))
-        prows = aug.where("vec_id >= 10000").orderBy("vec_id").collect()
-        pids = [int(r["vec_id"]) for r in prows]
-        if not pids:
+        pids, pmat = _small_side(aug, "vec_id >= 10000")
+        if not pids.size:
             return aug.select(
                 F.col("vec_id").alias("id_a"),
                 F.col("vec_id").alias("id_b")).where(F.lit(False))
-        pmat = np.asarray([r["e"] for r in prows], dtype=np.int64).T
         anorm = np.einsum("dp,dp->p", pmat, pmat)  # exact ‖a‖² per probe
 
         @F.pandas_udf("array<int>")
         def _hits(ev: pd.Series) -> pd.Series:
-            m = np.vstack(ev.to_numpy()).astype(np.int64, copy=False)
+            m = _batch_mat(ev)
             ab = _exact_matmul(m, pmat)        # (B, P) exact integers
             bb = np.einsum("bd,bd->b", m, m)   # exact ‖b‖² per row
             keep = (ab > 0) & (
@@ -479,27 +473,20 @@ def _register_ivf(register) -> None:
         # the (B,8) dot matrix picks the FIRST maximum, i.e. the lowest
         # cid among ties — exactly the old row_number(qd desc, cid asc)
         # tie-break; dots are exact int64 either way
-        crows = v.where(f"vec_id < {n_cent}").orderBy("vec_id").collect()
-        cids = np.asarray([int(r["vec_id"]) for r in crows],
-                          dtype=np.int64)
-        if cids.size == 0:
-            return _rank_topk(
-                v.select(F.lit(0).cast("long").alias("query_id"),
-                         "vec_id", F.lit(0).cast("long").alias("qdot"))
-                .where(F.lit(False)), _K)
-        cmat = np.asarray([r["e"] for r in crows], dtype=np.int64).T
+        cids, cmat = _small_side(v, f"vec_id < {n_cent}")
+        if not cids.size:
+            return _no_neighbors(v, _K)
 
         @F.pandas_udf("long")
         def _cell(ev: pd.Series) -> pd.Series:
-            m = np.vstack(ev.to_numpy()).astype(np.int64, copy=False)
-            return pd.Series(cids[np.argmax(_exact_matmul(m, cmat),
-                                            axis=1)])
+            return pd.Series(cids[np.argmax(
+                _exact_matmul(_batch_mat(ev), cmat), axis=1)])
 
         assign = v.select("vec_id", "e", _cell("e").alias("cid"))
         q = assign.where(f"vec_id < {_N_QUERIES}").select(
             F.col("vec_id").alias("query_id"),
             F.col("cid").alias("qcell"))
-        _qids, dot_q = _pair_dot_scorer(v, _N_QUERIES)
+        dot_q = _pair_dot_scorer(v, _N_QUERIES)
         scored = (
             assign.join(F.broadcast(q),
                         (assign.cid == q.qcell)

@@ -82,6 +82,7 @@ def apply_review(
         "before reviewing").isNull()
     ).select(
         "url", "extracted_text", *err_cols,
+        F.col("spans").isNull().alias("unscanned"),
         F.explode_outer("spans").alias("s")
     )
     joined = keyed.join(
@@ -103,12 +104,14 @@ def apply_review(
     # should_be_public), not vanish from the output.
     kept = joined.withColumn("s", F.when(keep, F.col("s")))
 
+    # a NULL spans array ("never scanned") stays NULL: explode_outer +
+    # collect_list would turn it into [] — "scanned clean", publishable
     aggs = [
         F.first("extracted_text").alias("extracted_text"),
-        F.array_sort(
+        F.when(~F.bool_or("unscanned"), F.array_sort(
             F.collect_list("s"),  # collect_list drops nulls
             _span_cmp,
-        ).alias("spans"),
+        )).alias("spans"),
     ]
     if has_error:
         aggs.append(F.first("error").alias("error"))
@@ -126,13 +129,14 @@ def _recomputed_public(has_error: bool) -> F.Column:
     QUARANTINED row (error set) stays fail-closed False: its spans=[] means
     "never scanned", not "scanned clean", and a naive ¬∃-PII recompute
     would flip an unscanned page to publishable the moment a review pass
-    rewrites the frame."""
+    rewrites the frame. A NULL spans array means "never scanned" too
+    (``ops/redact.redact_expr`` refuses it) and is never publishable."""
     # NULL-type spans count as PII here: `isin` yields NULL for them, and
     # a bare exists() would treat a spans array holding only such a span
     # as "no PII" — publishable. They cannot come from this engine's
     # extraction, but this column decides PUBLISHING on whatever frame the
     # caller loaded — fail closed on malformed external data.
-    clean = ~F.exists(
+    clean = F.col("spans").isNotNull() & ~F.exists(
         "spans", lambda s: s.type.isNull() | s.type.isin(list(PII_TYPES)))
     if not has_error:
         return clean

@@ -103,7 +103,7 @@ def test_viterbi_batch_identical_paths_ties_included():
     from pii_core.decoding import viterbi_bio_batch
 
     rng = np.random.RandomState(3)
-    ems, masks = [], []
+    ems = []
     for i in range(120):
         t = int(rng.randint(0, 30))
         em = (rng.randn(t, len(LABELS5)) * 2).astype(np.float32)
@@ -111,11 +111,9 @@ def test_viterbi_batch_identical_paths_ties_included():
             em = np.round(em)  # heavy ties: defeats the argmax shortcut
         if i % 5 == 0 and t:
             em[rng.randint(0, t)] = 0.0  # a full-row tie
-        mask = (rng.rand(t) < 0.3) if (i % 7 == 0 and t) else None
         ems.append(em)
-        masks.append(mask)
-    want = [viterbi_bio(e, LABELS5, 0, m) for e, m in zip(ems, masks)]
-    assert viterbi_bio_batch(ems, LABELS5, 0, masks) == want
+    want = [viterbi_bio(e, LABELS5, 0) for e in ems]
+    assert viterbi_bio_batch(ems, LABELS5, 0) == want
 
 
 def test_viterbi_batch_malformed_and_deep_negative():
@@ -147,8 +145,6 @@ def test_viterbi_batch_edges():
     assert viterbi_bio_batch(ems, LABELS5, 0) == want
     with pytest.raises(ValueError):
         viterbi_bio_batch([np.zeros((3, 4), np.float32)], LABELS5, 0)
-    with pytest.raises(ValueError):  # mask count mismatch
-        viterbi_bio_batch([np.zeros((3, 5), np.float32)], LABELS5, 0, [])
 
 
 def test_softmax_stable_and_normalized():

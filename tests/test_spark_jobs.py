@@ -1115,13 +1115,18 @@ def test_review_passes_keep_quarantined_rows_fail_closed(spark):
 
     # malformed external data: a spans array holding only a NULL-type span
     # must stay NOT-public (isin yields NULL; a bare exists would read the
-    # array as PII-free)
+    # array as PII-free); so must a NULL spans array under non-null text,
+    # which means "never scanned" (explode_outer + collect_list would
+    # regroup it as [] — "scanned clean")
     malformed = spark.createDataFrame(
-        [("m", "texto", [mk(None, 0, 5, "texto")], False, None)], schema)
+        [("m", "texto", [mk(None, 0, 5, "texto")], False, None),
+         ("n", "texto", None, True, None)], schema)
     for fn in (lambda d: apply_review(d, review, mode="semi"),
                lambda d: apply_missing(d, review)):
-        row = fn(malformed).collect()[0]
-        assert row["should_be_public"] is False
+        rows = fn(malformed).collect()
+        assert sorted(r["url"] for r in rows) == ["m", "n"]
+        for row in rows:
+            assert row["should_be_public"] is False, row["url"]
 
 
 def test_resume_null_url_rows_excluded_not_duplicated(spark, tmp_path):

@@ -736,6 +736,63 @@ def test_knn_ivf_excludes_null_embeddings(spark, tmp_path):
     assert got == QUERIES["knn_ivf"](spark, str(without)).collect()
 
 
+_TOPK_DTYPES = [("query_id", "bigint"), ("neighbor_id", "bigint"),
+                ("qdot", "bigint"), ("rk", "bigint")]
+_PAIR_DTYPES = [("id_a", "bigint"), ("id_b", "bigint")]
+
+
+def test_ann_id_columns_are_bigint(spark, sfd):
+    """Every similarity id column is bigint, like vec_id and the DuckDB
+    oracle's BIGINT, whatever the data: an id literal built from a python
+    int list is array<int>, which made knn_bruteforce's query_id and
+    embedding_near_dup's id_a int when there were queries or probes and
+    bigint when there were none."""
+    from pii_spark.ops.similarity import knn_bruteforce_frame
+
+    for name in ("knn_bruteforce", "knn_lsh", "knn_ivf"):
+        assert QUERIES[name](spark, sfd).dtypes == _TOPK_DTYPES, name
+    assert QUERIES["embedding_near_dup"](spark, sfd).dtypes == _PAIR_DTYPES
+    e = spark.read.parquet(f"{sfd}/embeddings.parquet")
+    assert knn_bruteforce_frame(e, n_queries=0).dtypes == _TOPK_DTYPES
+
+
+def test_ann_empty_small_sides(spark, tmp_path):
+    """A corpus with no query, centroid or probe rows scores nothing:
+    knn_bruteforce_frame and knn_lsh_frame (no vec_id < n_queries),
+    knn_ivf (no vec_id < 8) and embedding_near_dup (no vec_id % 25 = 0)
+    each return 0 rows with the columns and types of a scored frame."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pii_spark.ops.similarity import knn_bruteforce_frame, knn_lsh_frame
+
+    rng = np.random.default_rng(5)
+    ids = [i for i in range(101, 150) if i % 25]
+    pq.write_table(pa.table({
+        "vec_id": pa.array(ids, pa.int64()),
+        "embedding": pa.array(
+            [rng.standard_normal(64).astype(np.float32).tolist()
+             for _ in ids], pa.list_(pa.float32())),
+        "label": pa.array([i % 4 for i in ids], pa.int32())}),
+        tmp_path / "embeddings.parquet")
+    e = spark.read.parquet(str(tmp_path / "embeddings.parquet"))
+
+    for frame in (knn_bruteforce_frame, knn_lsh_frame):
+        scored = frame(e, n_queries=120)  # queries 101..119 do score
+        assert scored.count() > 0
+        assert scored.dtypes == _TOPK_DTYPES
+        empty = frame(e)
+        assert empty.dtypes == scored.dtypes
+        assert empty.count() == 0
+    ivf = QUERIES["knn_ivf"](spark, str(tmp_path))
+    assert ivf.dtypes == _TOPK_DTYPES
+    assert ivf.count() == 0
+    dup = QUERIES["embedding_near_dup"](spark, str(tmp_path))
+    assert dup.dtypes == _PAIR_DTYPES
+    assert dup.count() == 0
+
+
 # --- codegen-regex gram/shingle derivations vs their HOF executable specs
 
 
@@ -880,8 +937,7 @@ def test_lsh_bucket_udf_matches_expr_spec(spark):
             for t in range(_N_TABLES)
         ]).orderBy("vec_id").collect()
     # recompute via the weight matrices the UDF uses
-    wmats = [
-        _plane_weights(t, _N_PLANES) for t in range(_N_TABLES)]
+    wmats = [_plane_weights(t) for t in range(_N_TABLES)]
     for r in spec:
         e = np.asarray(
             eq.where(F.col("vec_id") == r["vec_id"]).first()["e"],
